@@ -23,11 +23,11 @@ Layout
                    ``classifier`` (train/apply), ``multimodal`` (binary
                    media plumbing, stubbed decode).
 - ``plans/``     : pipeline assembly + lifecycle runner (fingerprint, cache
-                   probe, single-pass chunked commits, incremental runs,
-                   resume anti-join, metrics).
+                   probe, single-pass chunked staged commits, resume,
+                   incremental runs via ``prior=``, metrics).
 - ``streaming/`` : Structured Streaming ingest (watermark windows, stream
                    dedup, foreachBatch filter) + stateful sessionization.
-- ``sources/``   : table loaders and the staged-commit parquet sink.
+- ``sources/``   : parquet table loaders and the JSONL line-record reader.
 - ``queries``    : the named query registry with DuckDB oracle twins
                    (exposed to the verification driver via
                    ``__spark_entry__``).

@@ -1160,6 +1160,11 @@ def decontaminate(
     definition; python twin ``jvm_tokens``), same position/token space as
     the rest of the span family.
 
+    ``key`` must be non-null and unique per row; it is not checked. Drop
+    mode removes hit docs with a ``left_anti`` join on ``key``, which never
+    matches NULL, so a contaminated row with a NULL key survives; flag mode
+    merges the ``n_hits`` of rows that share a key.
+
     Collision contract: ACTION-grade like ``strip_duplicate_spans`` — a
     false n-gram match silently discards a clean training doc, so both
     sides join on the 120-bit double md5 slice (~|grams_docs| x

@@ -36,16 +36,6 @@ from ..lm import get_lm
 # ---------------------------------------------------------------------------
 
 
-@F.pandas_udf(StringType())
-def _extract_udf(html: pd.Series) -> pd.Series:
-    return html.map(rules.extract_text)
-
-
-def extract_stage(df: DataFrame, html_col: str = "html", out: str = "extracted_text") -> DataFrame:
-    """html binary -> extracted_text (byte-identical contract, input_hint)."""
-    return df.withColumn(out, _extract_udf(F.col(html_col)))
-
-
 _LANGID_SCHEMA = StructType(
     [
         StructField("lang_pred", StringType()),
@@ -73,40 +63,6 @@ def _ppl_udf(text: pd.Series) -> pd.Series:
 
 def perplexity_stage(df: DataFrame, text_col: str = "text_t") -> DataFrame:
     return df.withColumn("perplexity", _ppl_udf(F.col(text_col)))
-
-
-_SCRUB_SCHEMA = StructType(
-    [StructField("scrubbed_text", StringType())]
-    + [
-        StructField(f"scrub_{name}", IntegerType())
-        for name in ("email", "phone", "ip", "ssn", "toxicity")
-    ]
-)
-
-
-@F.pandas_udf(_SCRUB_SCHEMA)
-def _scrub_udf(text: pd.Series) -> pd.DataFrame:
-    rows = []
-    for t in text:
-        scrubbed, counts = rules.scrub_text(t if t is not None else "")
-        rows.append(
-            {
-                "scrubbed_text": scrubbed,
-                "scrub_email": counts["email"],
-                "scrub_phone": counts["phone"],
-                "scrub_ip": counts["ip"],
-                "scrub_ssn": counts["ssn"],
-                "scrub_toxicity": counts["toxicity"],
-            }
-        )
-    return pd.DataFrame(rows)
-
-
-def scrub_stage(df: DataFrame, text_col: str = "text_t") -> DataFrame:
-    s = _scrub_udf(F.col(text_col))
-    for f in _SCRUB_SCHEMA.fieldNames():
-        df = df.withColumn(f, s[f])
-    return df
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,11 @@ Re-expresses the reference's driver-side lifecycle on Spark:
   analog of Iceberg partition predicates on url-hash bucket. Row-level
   parity with the completed-ids anti-join (base_online_request_processor.py:
   332-336,354) comes free: chunk membership is a pure function of url.
+- **Incremental runs**: ``run_quality_filter(..., prior=result)`` scores
+  only the input pages absent from a prior run's output (the same
+  anti-join) and unions the prior rows into the same chunked commit, so an
+  incremental run crashes, resumes, quarantines and records metrics exactly
+  like a fresh one.
 - **Failed-row quarantine**: rows with a per-row extract error commit into a
   ``failed_rows`` table (url, warc_ts, error) partitioned by (run, chunk) —
   the failed-requests sink analog (base_request_processor.py:459-488).
@@ -67,8 +72,9 @@ class RunConfig:
     # Stage the input partitioned by chunk before processing (one extra
     # full-input write). Resume then READS ONLY the missing chunks' input
     # files — true scan pruning, the parquet analog of Iceberg partition
-    # predicates on (url-hash bucket). Worth it when resumes/increments are
-    # expected; pure overhead for fire-and-forget runs.
+    # predicates on (url-hash bucket). With ``prior=`` only the pages new
+    # since the prior run are staged. Worth it when resumes are expected;
+    # pure overhead for fire-and-forget runs.
     chunk_input: bool = False
     extra: dict = field(default_factory=dict)
 
@@ -110,16 +116,6 @@ def _chunk_dir(run_dir: str, chunk: int) -> str:
 
 def _is_committed(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _staged_write(df: DataFrame, final_dir: str) -> None:
-    """Write to a staging dir, then atomic rename. A crash mid-write leaves
-    only staging garbage, never a half-visible commit."""
-    staging = final_dir + f".staging-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    if os.path.exists(final_dir):
-        shutil.rmtree(final_dir)
-    os.rename(staging, final_dir)
 
 
 def _ensure_chunked_input(
@@ -239,8 +235,15 @@ class RunResult:
     chunks_skipped: int
 
 
-def run_quality_filter(spark: SparkSession, config: RunConfig) -> RunResult:
-    """Execute (or resume, or cache-hit) a full quality-filter run."""
+def run_quality_filter(
+    spark: SparkSession, config: RunConfig, prior: RunResult | None = None
+) -> RunResult:
+    """Execute (or resume, or cache-hit) a full quality-filter run.
+
+    ``prior``: a committed run over an earlier snapshot of the input (the
+    daily-crawl-dump case). Only pages absent from its output are scored;
+    its rows are carried into this run's chunks, re-bucketed by this
+    config's (salt, num_chunks), so the output equals a fresh full run's."""
     run_id = run_fingerprint(config)
     run_dir = os.path.join(config.output_root, "runs", run_id)
     os.makedirs(run_dir, exist_ok=True)
@@ -252,6 +255,8 @@ def run_quality_filter(spark: SparkSession, config: RunConfig) -> RunResult:
     _catalog_event(config, run_id, "STARTED")
 
     pages = spark.read.parquet(config.input_path)
+    if prior is not None:
+        pages = resume_remainder(spark, pages, prior)
     # chunk membership = pure function of url -> stable across reruns/retries
     bucket = F.pmod(F.xxhash64(F.col("url"), F.lit(config.salt)), F.lit(config.num_chunks))
 
@@ -328,6 +333,8 @@ def run_quality_filter(spark: SparkSession, config: RunConfig) -> RunResult:
         staging = None
         try:
             t0 = time.monotonic()
+            fresh = len(missing) == config.num_chunks
+            in_missing = bucket.isin([int(c) for c in missing])
             if config.chunk_input:
                 # scan pruning: read ONLY the missing chunks' input files
                 in_root = _ensure_chunked_input(spark, config, run_dir, pages, bucket)
@@ -342,13 +349,17 @@ def run_quality_filter(spark: SparkSession, config: RunConfig) -> RunResult:
                     if dirs
                     else spark.createDataFrame([], pages.schema)
                 )
-            elif len(missing) == config.num_chunks:
+            elif fresh:
                 src = pages  # fresh run: exactly one full scan, no predicate
             else:
-                src = pages.filter(bucket.isin([int(c) for c in missing]))
+                src = pages.filter(in_missing)
             out = _pipeline_mod.quality_filter(
                 src, repartition_to=config.repartition_to, salt=config.salt
-            ).withColumn("chunk", bucket)
+            )
+            if prior is not None:  # carry the prior rows into the same commit
+                done = load_output(spark, prior)
+                out = out.unionByName(done if fresh else done.filter(in_missing))
+            out = out.withColumn("chunk", bucket)
             staging = os.path.join(run_dir, f"all.staging-{uuid.uuid4().hex[:8]}")
             out.write.mode("overwrite").partitionBy("chunk").parquet(staging)
             wall_ms = int((time.monotonic() - t0) * 1000)
@@ -388,16 +399,16 @@ def run_quality_filter(spark: SparkSession, config: RunConfig) -> RunResult:
     if missing:
         raise RuntimeError(f"run {run_id} incomplete, missing chunks {missing}")
 
+    manifest = {
+        "run_id": run_id,
+        "config": json.loads(config.to_json()),
+        "num_chunks": config.num_chunks,
+        "committed_at": datetime.now(timezone.utc).isoformat(),
+    }
+    if prior is not None:
+        manifest["incremental_from"] = prior.run_id
     with open(manifest_path + ".tmp", "w") as f:
-        json.dump(
-            {
-                "run_id": run_id,
-                "config": json.loads(config.to_json()),
-                "num_chunks": config.num_chunks,
-                "committed_at": datetime.now(timezone.utc).isoformat(),
-            },
-            f,
-        )
+        json.dump(manifest, f)
     os.rename(manifest_path + ".tmp", manifest_path)
 
     _catalog_event(config, run_id, "COMPLETED")
@@ -406,130 +417,6 @@ def run_quality_filter(spark: SparkSession, config: RunConfig) -> RunResult:
 
 def load_output(spark: SparkSession, result: RunResult) -> DataFrame:
     return spark.read.parquet(os.path.join(result.run_dir, "chunk=*"))
-
-
-def run_incremental(
-    spark: SparkSession, config: RunConfig, prior: RunResult
-) -> RunResult:
-    """Process only pages NOT present in a prior run's committed output and
-    commit them as an increment of the new run (the daily-crawl-dump case:
-    the input grew; re-scoring already-committed urls is pure waste).
-
-    Plan: anti-join new input against the prior output's url set (broadcast
-    when small, shuffle otherwise — Catalyst decides), run the pipeline on
-    the remainder only, then copy forward the prior chunks. Output layout,
-    fingerprint and resume semantics equal a fresh full run's — downstream
-    consumers cannot tell the difference.
-    """
-    run_id = run_fingerprint(config)
-    run_dir = os.path.join(config.output_root, "runs", run_id)
-    os.makedirs(run_dir, exist_ok=True)
-    manifest_path = os.path.join(run_dir, "manifest.json")
-    if os.path.exists(manifest_path):
-        return RunResult(run_id, run_dir, True, 0, config.num_chunks)
-
-    # same lifecycle-audit records as a fresh run — downstream consumers and
-    # the catalog genuinely cannot tell the difference
-    _catalog_event(config, run_id, "STARTED")
-    try:
-        return _run_incremental_body(spark, config, prior, run_id, run_dir, manifest_path)
-    except Exception:
-        _catalog_event(config, run_id, "FAILED")
-        raise
-
-
-def _prior_output_by_chunk(
-    spark: SparkSession, config: RunConfig, prior: RunResult
-) -> tuple[DataFrame, bool]:
-    """Prior committed output with a ``chunk`` column for the per-chunk merge.
-
-    The committed layout is already ``chunk=c`` directories, so when the
-    prior run's chunk layout (salt, num_chunks) matches the new config the
-    directory names ARE the membership: reading them as a Hive partition
-    column makes each per-chunk ``filter(chunk == c)`` prune to ONE directory
-    at file level. Recomputing membership as ``pmod(xxhash64(url), k)`` (the
-    pre-round-4 form) defeats pruning — every per-chunk merge job re-scanned
-    the FULL prior output, i.e. num_chunks full scans at 100 TB. A prior run
-    with a different layout (different salt or chunk count) still falls back
-    to the recompute form, which re-buckets rows correctly.
-
-    Returns (df, pruned) — ``pruned`` tells tests/callers which path ran.
-    """
-    layout = None
-    try:
-        with open(os.path.join(prior.run_dir, "manifest.json")) as f:
-            c = json.load(f).get("config", {})
-        layout = (c.get("salt"), c.get("num_chunks"))
-    except (OSError, json.JSONDecodeError):
-        pass  # legacy/partial prior dir: fall back to recomputed membership
-    if layout == (config.salt, config.num_chunks):
-        df = spark.read.option("basePath", prior.run_dir).parquet(
-            os.path.join(prior.run_dir, "chunk=*")
-        )
-        return df, True
-    df = spark.read.parquet(os.path.join(prior.run_dir, "chunk=*")).withColumn(
-        "chunk",
-        F.pmod(F.xxhash64(F.col("url"), F.lit(config.salt)), F.lit(config.num_chunks)),
-    )
-    return df, False
-
-
-def _run_incremental_body(
-    spark: SparkSession,
-    config: RunConfig,
-    prior: RunResult,
-    run_id: str,
-    run_dir: str,
-    manifest_path: str,
-) -> RunResult:
-    pages = spark.read.parquet(config.input_path)
-    done_urls = load_output(spark, prior).select("url")
-    remainder = pages.join(done_urls, "url", "left_anti")
-    bucket = F.pmod(F.xxhash64(F.col("url"), F.lit(config.salt)), F.lit(config.num_chunks))
-
-    t0 = time.monotonic()
-    new_out = _pipeline_mod.quality_filter(
-        remainder, repartition_to=config.repartition_to, salt=config.salt
-    ).withColumn("chunk", bucket)
-    staging = os.path.join(run_dir, f"inc.staging-{uuid.uuid4().hex[:8]}")
-    new_out.write.mode("overwrite").partitionBy("chunk").parquet(staging)
-    wall_ms = int((time.monotonic() - t0) * 1000)
-
-    prior_by_chunk, _ = _prior_output_by_chunk(spark, config, prior)
-    for chunk in range(config.num_chunks):
-        cdir = _chunk_dir(run_dir, chunk)
-        src = os.path.join(staging, f"chunk={chunk}")
-        merged_staging = cdir + f".staging-{uuid.uuid4().hex[:8]}"
-        parts = [prior_by_chunk.filter(F.col("chunk") == chunk).drop("chunk")]
-        if os.path.isdir(src):
-            parts.append(spark.read.parquet(src))
-        merged = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-        merged.write.mode("overwrite").parquet(merged_staging)
-        if os.path.exists(cdir):
-            shutil.rmtree(cdir)
-        os.rename(merged_staging, cdir)
-        committed = spark.read.parquet(cdir)
-        _append_table(
-            config.output_root,
-            "metrics",
-            _chunk_metrics(committed, run_id, chunk, wall_ms // config.num_chunks),
-        )
-    shutil.rmtree(staging, ignore_errors=True)
-
-    with open(manifest_path + ".tmp", "w") as f:
-        json.dump(
-            {
-                "run_id": run_id,
-                "config": json.loads(config.to_json()),
-                "num_chunks": config.num_chunks,
-                "incremental_from": prior.run_id,
-                "committed_at": datetime.now(timezone.utc).isoformat(),
-            },
-            f,
-        )
-    os.rename(manifest_path + ".tmp", manifest_path)
-    _catalog_event(config, run_id, "COMPLETED")
-    return RunResult(run_id, run_dir, False, config.num_chunks, 0)
 
 
 def cancel_run(config: RunConfig) -> str:
@@ -559,6 +446,6 @@ def metrics_summary(spark: SparkSession, output_root: str, run_id: str | None = 
 
 def resume_remainder(spark: SparkSession, pages: DataFrame, result: RunResult) -> DataFrame:
     """Row-level anti-join view: input rows not yet in committed output
-    (J2/F1, SURVEY.md §2.5) — for ad-hoc remainder inspection."""
+    (J2/F1, SURVEY.md §2.5) — the input of an incremental run."""
     done = load_output(spark, result).select("url")
     return pages.join(done, "url", "left_anti")

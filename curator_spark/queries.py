@@ -1906,6 +1906,11 @@ def _curate_corpus_exact_sql(
     quality score."""
     quota = budget // k
     wm1 = span_w - 1
+    # The url-dedup window below orders by url0 alone, while the Spark side
+    # (canonical_url_dedup) breaks ties with an xxhash64 over the whole row.
+    # The two agree only because the urls in each canonical group are
+    # distinct strings (_COLLIDE_URL_CASE_SQL emits distinct variants); a
+    # generator that repeats a url within one group would split the twins.
     return f"""
     WITH RECURSIVE u0 AS (
       SELECT doc_id, source, text, {_COLLIDE_URL_CASE_SQL} AS url0

@@ -1,1 +1,1 @@
-"""Sources and sinks (parquet scans, staged-commit writer)."""
+"""Sources: parquet table loaders and the JSONL line-record reader."""

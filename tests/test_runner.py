@@ -6,6 +6,7 @@ cached_working_dir resume fixtures) onto the staged-commit runner."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -208,7 +209,7 @@ def test_cancel_run_records_catalog(spark, pages_path, tmp_path):
 
 
 def test_incremental_catalog_lifecycle(spark, tmp_path):
-    """run_incremental records STARTED/COMPLETED like a fresh run."""
+    """An incremental run records STARTED/COMPLETED like a fresh run."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -224,44 +225,10 @@ def test_incremental_catalog_lifecycle(spark, tmp_path):
     out_root = str(tmp_path / "out")
     res1 = R.run_quality_filter(spark, R.RunConfig(str(src1), out_root, num_chunks=2))
     cfg2 = R.RunConfig(str(src2), out_root, num_chunks=2)
-    res2 = R.run_incremental(spark, cfg2, prior=res1)
+    res2 = R.run_quality_filter(spark, cfg2, prior=res1)
     cat = R.read_table(spark, out_root, "runs_catalog").toPandas()
     inc = cat[cat["run_id"] == res2.run_id].sort_values("event_time")
     assert list(inc["status"]) == ["STARTED", "COMPLETED"]
-
-
-def test_incremental_prior_scan_is_partition_pruned(spark, pages_path, tmp_path):
-    """The per-chunk merge must read the prior output's `chunk=c` directory
-    names as a partition column (file-level pruning), not recompute url-hash
-    membership over the full prior output — the recompute form costs
-    num_chunks full prior scans at scale. Layout mismatch falls back."""
-    from pyspark.sql import functions as F
-
-    cfg = R.RunConfig(input_path=pages_path, output_root=str(tmp_path / "outp"), num_chunks=3)
-    res = R.run_quality_filter(spark, cfg)
-
-    prior_df, pruned = R._prior_output_by_chunk(spark, cfg, res)
-    assert pruned
-    one = prior_df.filter(F.col("chunk") == 0)
-    plan = one._sc._jvm.PythonSQLUtils.explainString(
-        one._jdf.queryExecution(), "formatted"
-    )
-    # partition filter reaches the scan, and no hash recompute exists
-    assert "PartitionFilters: [" in plan and "xxhash64" not in plan
-    detail = plan[plan.index("PartitionFilters: [") :].splitlines()[0]
-    assert "chunk" in detail
-    # pruned read still yields exactly the committed chunk's rows
-    direct = spark.read.parquet(os.path.join(res.run_dir, "chunk=0"))
-    assert one.count() == direct.count() > 0
-
-    # a prior run with a different layout must fall back to recompute
-    cfg_other = R.RunConfig(
-        input_path=pages_path, output_root=str(tmp_path / "outp"), num_chunks=5
-    )
-    fallback_df, pruned2 = R._prior_output_by_chunk(spark, cfg_other, res)
-    assert not pruned2
-    # fallback re-buckets: 5-way membership over the 3-chunk prior output
-    assert fallback_df.select("chunk").distinct().count() == 5
 
 
 def test_fingerprint_sensitivity(pages_path, tmp_path):
@@ -284,15 +251,17 @@ def test_metrics_and_catalog(spark, pages_path, tmp_path, golden):
     assert set(cat["status"]) == {"STARTED", "COMPLETED"}
 
 
-def test_incremental_run(spark, tmp_path, golden):
+@pytest.mark.parametrize("prior_chunks", [3, 5])
+def test_incremental_run(spark, tmp_path, golden, monkeypatch, prior_chunks):
     """Grow the input, run incrementally: only new urls are scored; output
-    equals a full fresh run over the grown input."""
+    equals a full fresh run over the grown input. A prior run with a
+    different chunk count is re-bucketed into the new layout."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from curator_spark.datagen import PAGES_SCHEMA, build_pages_pdf
-    from curator_spark.plans.runner import load_output, metrics_summary, run_incremental
+    from curator_spark.plans.runner import load_output, metrics_summary
 
     pdf = build_pages_pdf("/root/testdata/sf0.001")
     half = pdf.iloc[:250]
@@ -310,13 +279,22 @@ def test_incremental_run(spark, tmp_path, golden):
     )
 
     out_root = str(tmp_path / "out")
-    cfg1 = R.RunConfig(input_path=str(src1), output_root=out_root, num_chunks=3)
+    cfg1 = R.RunConfig(input_path=str(src1), output_root=out_root, num_chunks=prior_chunks)
     res1 = R.run_quality_filter(spark, cfg1)
     assert load_output(spark, res1).count() == 250
 
+    scored = []
+    real_qf = R._pipeline_mod.quality_filter
+
+    def spy_qf(src, **kw):
+        scored.append(src.count())
+        return real_qf(src, **kw)
+
+    monkeypatch.setattr(R._pipeline_mod, "quality_filter", spy_qf)
     cfg2 = R.RunConfig(input_path=str(src2), output_root=out_root, num_chunks=3)
-    res2 = run_incremental(spark, cfg2, prior=res1)
+    res2 = R.run_quality_filter(spark, cfg2, prior=res1)
     assert not res2.cache_hit and res2.run_id != res1.run_id
+    assert scored == [len(golden) - 250]  # only the new urls were scored
 
     out = load_output(spark, res2).toPandas()
     assert len(out) == len(golden) and out["url"].is_unique
@@ -325,8 +303,69 @@ def test_incremental_run(spark, tmp_path, golden):
     assert merged["scrubbed_text"].equals(merged["scrubbed_text_g"])
 
     # rerun of the incremental = cache hit
-    assert run_incremental(spark, cfg2, prior=res1).cache_hit
+    assert R.run_quality_filter(spark, cfg2, prior=res1).cache_hit
 
     summary = metrics_summary(spark, out_root, res2.run_id).collect()[0]
     assert summary.docs_seen == len(golden)
     assert summary.docs_kept == int(golden["keep"].sum())
+    # committed chunks follow the new layout, whatever the prior's was
+    assert sorted(d for d in os.listdir(res2.run_dir) if d.startswith("chunk=")) == [
+        "chunk=0", "chunk=1", "chunk=2"
+    ]
+    with open(os.path.join(res2.run_dir, "manifest.json")) as f:
+        assert json.load(f)["incremental_from"] == res1.run_id
+
+
+def test_incremental_crash_resume_quarantine(spark, tmp_path, monkeypatch):
+    """An incremental run that dies mid-promotion resumes like a fresh run:
+    committed chunks are skipped, each url is output and counted once, the
+    new null-html page is quarantined, and no staging dir is left behind."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curator_spark.datagen import PAGES_SCHEMA, build_pages_pdf
+
+    pdf = build_pages_pdf("/root/testdata/sf0.001")
+    null_url = "https://bad.example/nullhtml"
+    grown = pd.concat(
+        [pdf, pd.DataFrame([{"url": null_url, "warc_ts": pdf["warc_ts"].iloc[0],
+                             "html": None, "text": "", "lang": "en"}])],
+        ignore_index=True,
+    )
+    src1, src2 = tmp_path / "i1", tmp_path / "i2"
+    src1.mkdir(), src2.mkdir()
+    pq.write_table(pa.Table.from_pandas(pdf.iloc[:250], schema=PAGES_SCHEMA,
+                                        preserve_index=False), str(src1 / "a.parquet"))
+    pq.write_table(pa.Table.from_pandas(grown, schema=PAGES_SCHEMA,
+                                        preserve_index=False), str(src2 / "a.parquet"))
+    out_root = str(tmp_path / "out")
+    res1 = R.run_quality_filter(spark, R.RunConfig(str(src1), out_root, num_chunks=3))
+
+    real_rename = os.rename
+    promotions = {"n": 0}
+
+    def fail_second_promotion(src, dst):
+        if "/chunk=" in dst.replace("\\", "/"):
+            promotions["n"] += 1
+            if promotions["n"] == 2:
+                raise OSError("injected promotion failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(R.os, "rename", fail_second_promotion)
+    cfg2 = R.RunConfig(str(src2), out_root, num_chunks=3, max_attempts=1)
+    with pytest.raises(OSError):
+        R.run_quality_filter(spark, cfg2, prior=res1)
+    monkeypatch.setattr(R.os, "rename", real_rename)
+
+    res2 = R.run_quality_filter(spark, cfg2, prior=res1)
+    assert res2.chunks_skipped == 1 and res2.chunks_run == 2
+    out = R.load_output(spark, res2).toPandas()
+    assert len(out) == len(pdf) + 1 and out["url"].is_unique
+    summary = R.metrics_summary(spark, out_root, res2.run_id).collect()[0]
+    assert summary.docs_seen == len(pdf) + 1
+    failed = spark.read.parquet(
+        os.path.join(out_root, "failed_rows", f"run_id={res2.run_id}")
+    ).toPandas()
+    assert list(failed["url"]) == [null_url]
+    assert not [d for d in os.listdir(res2.run_dir) if ".staging-" in d]
