@@ -707,15 +707,18 @@ def connected_components(
       when a round changes nothing. Labels only decrease and are bounded
       below by the component min, so termination is guaranteed in DIAMETER
       rounds (the cap is a safety net; a graph that exhausts it — diameter
-      > max_iterations — is exactly the shape ``"two_phase"`` exists for).
-      Right for near-dup graphs: clusters are tiny and shallow.
+      > max_iterations — falls back to ``"two_phase"``, the algorithm that
+      shape exists for). Right for near-dup graphs: clusters are tiny and
+      shallow.
     - ``"two_phase"``: alternating large-star/small-star contraction
       (Kiveris et al., "Connected Components in MapReduce and Beyond") —
       each round rewires edges toward neighborhood minima, converging in
       O(log n) rounds regardless of diameter. Right at graph scale or for
       chain-shaped components (a 10^6-long chain costs 10^6 propagation
       rounds but ~20 two-phase rounds). Tests pin both algorithms equal on
-      randomized graphs.
+      randomized graphs. Raises ``RuntimeError`` if it has not reached its
+      fixpoint after ``max_iterations`` rounds, instead of returning
+      intermediate labels.
 
     Deterministic: pure function of the pair set (no RNG/ids), min-based
     resolution independent of shuffle order.
@@ -851,6 +854,13 @@ def _cc_two_phase(edges_sym: DataFrame, max_rounds: int) -> DataFrame:
             break
         prev = cur
         e = sym(e)
+    else:
+        # short of the fixpoint the edge set is not yet a star forest and
+        # the labels read off it below would be silently wrong
+        raise RuntimeError(
+            f"connected_components: two-phase contraction did not converge in "
+            f"{max_rounds} rounds; raise max_iterations"
+        )
     # fixpoint: e (directed larger->smaller after small_star) is a star
     # forest; every non-root node appears once as src with dst = its root
     parents = e.select(

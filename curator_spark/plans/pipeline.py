@@ -18,10 +18,10 @@ from pyspark.sql import functions as F
 from ..functions.partitioning import salted_repartition
 from ..operators.heuristics import heuristics_stage
 from ..operators.udf_stages import (
+    add_text_t,
     extract_stage_narrow,
     fused_score_stage,
     text_score_stage,
-    truncate_col,
 )
 from ..operators.verdict import verdict_stage
 
@@ -58,49 +58,32 @@ def quality_filter(
     repartition_to: int | None = None,
     salt: str | None = None,
     params_col: str | None = None,
-    repartition_stage: str = "post_extract",
 ) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) -> verdict table.
 
-    ``repartition_to``: explicit salted url-hash repartition (north rule,
-    host-skew defusal). Leave None for the fully fused, shuffle-free plan
-    when the input scan layout is already uniform.
+    Two plan shapes, one per ``repartition_to``:
 
-    ``repartition_stage`` picks WHERE the shuffle happens — the two skew
-    mechanisms need different remedies:
-
-    - ``"post_extract"`` (default): extract in place, shuffle NARROW text
-      columns, score after. Raw html (10-50x wider than extracted text at
-      web scale) never crosses the wire. Right when per-row work downstream
-      of extraction must be balanced but the scan layout is uniform.
-    - ``"raw"``: shuffle the raw rows (html included) straight off the
-      scan, then run the fused stage on balanced partitions. Right when the
-      INPUT LAYOUT is skewed (crawl dumps cluster a hot host's pages into
-      few fat files / row groups): a fat row group is unsplittable, so any
-      work left before the shuffle — extraction above all — serializes on
-      one task. Pays the wide shuffle to parallelize extraction itself.
+    - ``None``: the fully fused, shuffle-free plan — one Arrow boundary for
+      extract+langid+perplexity+scrub. Right when the input scan layout is
+      already uniform.
+    - ``k``: salted url-hash repartition into ``k`` partitions (north rule,
+      host-skew defusal). Extract in place, shuffle only the NARROW
+      post-extract columns (raw html, 10-50x wider at web scale, never
+      crosses the wire), then score on balanced partitions.
 
     ``params_col``: optional per-row generation-params JSON column; its
     ``truncate`` key overrides the stage's truncation row by row (P2
-    per-row-override semantics, prompt_formatter.py:108-117).
+    per-row-override semantics, prompt_formatter.py:108-117). Honoured by
+    both shapes.
     """
-    if params_col is not None:
-        df = fused_score_stage(pages, params_col=params_col)
-        df = heuristics_stage(df, text_col="text_t", stop_hits_col="stop_hits", token_stats_cols=("tok_words", "tok_distinct"))
-        df = verdict_stage(df)
-        return df.select(*OUTPUT_COLUMNS)
-    salt_args = [salt] if salt else []
-    if repartition_to and repartition_stage == "raw":
-        df = salted_repartition(pages, "url", repartition_to, *salt_args)
-        df = fused_score_stage(df)
-    elif repartition_to:
-        df = extract_stage_narrow(pages)  # Arrow boundary 1: html -> text
+    if repartition_to:
+        df = extract_stage_narrow(pages, params_col)  # Arrow boundary 1: html -> text
         df = df.drop("html", "text")  # narrow rows only through the wire
-        df = salted_repartition(df, "url", repartition_to, *salt_args)
-        df = df.withColumn("text_t", truncate_col())  # post-shuffle: ONE text copy crossed
+        df = salted_repartition(df, "url", repartition_to, *([salt] if salt else []))
+        df = add_text_t(df)  # post-shuffle: ONE text copy crossed
         df = text_score_stage(df)  # Arrow boundary 2: langid+ppl+scrub
     else:
-        df = fused_score_stage(pages)  # ONE Arrow boundary for everything
+        df = fused_score_stage(pages, params_col)  # ONE Arrow boundary for everything
     df = heuristics_stage(df, text_col="text_t", stop_hits_col="stop_hits", token_stats_cols=("tok_words", "tok_distinct"))  # native codegen
     df = verdict_stage(df)  # native codegen
     return df.select(*OUTPUT_COLUMNS)

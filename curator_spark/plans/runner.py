@@ -58,6 +58,9 @@ from pyspark.sql import functions as F
 from .. import lm as _lm_mod
 from .. import rules as _rules_mod
 from ..functions.partitioning import DEFAULT_SALT
+from ..operators import heuristics as _heuristics_mod
+from ..operators import udf_stages as _udf_stages_mod
+from ..operators import verdict as _verdict_mod
 from . import pipeline as _pipeline_mod
 
 
@@ -95,12 +98,15 @@ class RunConfig:
 def run_fingerprint(config: RunConfig) -> str:
     """Deterministic run id: config + semantics-module sources.
 
-    Editing rules.py / lm.py / pipeline.py invalidates the cache exactly like
-    the reference's dill function-hash invalidates on closure edits
-    (tests/unittests/test_caching.py:99-184 semantics)."""
+    Editing any module that decides output rows (rules, lm, pipeline and
+    the udf_stages / heuristics / verdict operators it composes)
+    invalidates the cache exactly like the reference's dill function-hash
+    invalidates on closure edits (tests/unittests/test_caching.py:99-184
+    semantics)."""
     h = hashlib.sha256()
     h.update(config.to_json().encode())
-    for mod in (_rules_mod, _lm_mod, _pipeline_mod):
+    mods = (_rules_mod, _lm_mod, _pipeline_mod, _udf_stages_mod, _heuristics_mod, _verdict_mod)
+    for mod in mods:
         h.update(inspect.getsource(mod).encode())
     return h.hexdigest()[:16]
 

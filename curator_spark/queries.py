@@ -1744,10 +1744,10 @@ def q_doc_signatures(spark, sf_dir):
     cross-engine md5 twin is the oracle-checked `fingerprint` /
     `simhash_md5` pair). Left join: docs with zero words have no simhash
     row but keep their model scores."""
-    from .operators.udf_stages import langid_stage, perplexity_stage
+    from .operators.udf_stages import text_score_stage
 
     d = _t(spark, sf_dir, "documents")
-    scored = perplexity_stage(langid_stage(d, text_col="text"), text_col="text").select(
+    scored = text_score_stage(d, text_col="text").select(
         "doc_id", "lang_pred", "lang_conf", "perplexity"
     )
     return scored.join(dedup.simhash(d), "doc_id", "left")

@@ -316,6 +316,18 @@ def test_two_phase_cc_matches_propagation_on_random_graphs(spark):
     assert two == {n: 0 for n in range(101)}
 
 
+def test_cc_raises_when_rounds_run_out(spark):
+    """A 100-node chain needs 8 two-phase rounds: a smaller cap must raise,
+    not return labels short of the fixpoint — called directly and via the
+    propagate path's two-phase fallback."""
+    chain = [(i, i + 1) for i in range(100)]
+    df = spark.createDataFrame(chain, "id_a long, id_b long")
+    with pytest.raises(RuntimeError, match="raise max_iterations"):
+        dedup.connected_components(df, algorithm="two_phase", max_iterations=2)
+    with pytest.raises(RuntimeError, match="raise max_iterations"):
+        dedup.connected_components(df, max_iterations=3)
+
+
 def test_near_dup_survivors_end_to_end(spark):
     """exact dups collapse, near-dup clusters keep exactly the min id,
     distinct docs survive."""

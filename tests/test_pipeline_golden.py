@@ -79,13 +79,22 @@ def test_content_classes_exercised(golden):
         assert scrubs[rule].sum() > 0, f"scrub rule {rule} never fired"
 
 
-def test_params_col_drives_truncation(pages_df):
+@pytest.mark.parametrize("repartition_to", [None, 8])
+def test_params_col_drives_truncation(pages_df, repartition_to):
     """Per-row generation-params JSON overrides the truncation operator
-    inside the fused stage (P2 semantics): text_t length obeys each row's
-    own config, and rows without params keep the global default."""
+    (P2 semantics) on both plan shapes: text_t length obeys each row's own
+    config, rows without params keep the global default, and the salted
+    shape still shuffles once, narrow, and yields the fused shape's rows."""
+    import re
+
     from pyspark.sql import functions as F
 
     from curator_spark import rules
+    from curator_spark.operators.udf_stages import (
+        add_text_t,
+        extract_stage_narrow,
+        fused_score_stage,
+    )
 
     with_params = pages_df.withColumn(
         "gen_params",
@@ -93,25 +102,37 @@ def test_params_col_drives_truncation(pages_df):
             F.lit(None).cast("string")
         ),
     )
-    from curator_spark.operators.udf_stages import fused_score_stage
-
-    stage = fused_score_stage(with_params, params_col="gen_params").select(
-        "url", "gen_params", "extracted_text", "text_t"
-    ).toPandas()
+    if repartition_to is None:
+        stage = fused_score_stage(with_params, params_col="gen_params")
+    else:
+        stage = add_text_t(extract_stage_narrow(with_params, params_col="gen_params"))
+    stage = stage.select("url", "gen_params", "extracted_text", "text_t").toPandas()
     for r in stage.itertuples(index=False):
         limit = rules.truncate_limit(r.gen_params)
         assert r.text_t == r.extracted_text[:limit], r.url
     overridden = stage[stage["gen_params"].notna()]
     assert (overridden["text_t"].str.len() <= 25).all() and len(overridden) > 0
     # end-to-end: the override propagates through the full verdict plan
+    verdicts = quality_filter(
+        with_params, repartition_to=repartition_to, params_col="gen_params"
+    )
     out = (
-        quality_filter(with_params, params_col="gen_params")
-        .join(with_params.select("url", "gen_params"), "url")
+        verdicts.join(with_params.select("url", "gen_params"), "url")
         .select("url", "gen_params", "n_chars", "extracted_text")
         .toPandas()
     )
+    assert len(out) == len(stage)
     for r in out.itertuples(index=False):
         assert r.n_chars == len(r.extracted_text[: rules.truncate_limit(r.gen_params)])
+    if repartition_to is not None:
+        plan = verdicts._sc._jvm.PythonSQLUtils.explainString(
+            verdicts._jdf.queryExecution(), "formatted"
+        )
+        exchanges = re.findall(r"\(\d+\) Exchange\b.*?(?=\n\(\d+\) |\Z)", plan, re.DOTALL)
+        assert len(exchanges) == 1, plan
+        assert "html" not in exchanges[0], exchanges[0]
+        fused = quality_filter(with_params, params_col="gen_params")
+        assert verdicts.orderBy("url").collect() == fused.orderBy("url").collect()
 
 
 def test_export_corpus_executes_pipeline_once(spark, pages_df, tmp_path):

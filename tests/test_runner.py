@@ -238,6 +238,23 @@ def test_fingerprint_sensitivity(pages_path, tmp_path):
     assert a != b and a == c
 
 
+@pytest.mark.parametrize("module", ["udf_stages", "heuristics", "verdict"])
+def test_fingerprint_tracks_operator_sources(pages_path, tmp_path, monkeypatch, module):
+    """An edit to an operator module that decides output rows must miss the
+    cache, like an edit to rules/lm/pipeline."""
+    import importlib
+    import inspect
+
+    target = importlib.import_module(f"curator_spark.operators.{module}")
+    cfg = _config(pages_path, tmp_path)
+    before = R.run_fingerprint(cfg)
+    real = inspect.getsource
+    monkeypatch.setattr(
+        inspect, "getsource", lambda m: real(m) + ("# edited\n" if m is target else "")
+    )
+    assert R.run_fingerprint(cfg) != before
+
+
 def test_metrics_and_catalog(spark, pages_path, tmp_path, golden):
     cfg = _config(pages_path, tmp_path / "out3")
     R.run_quality_filter(spark, cfg)
