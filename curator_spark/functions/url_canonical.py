@@ -1,37 +1,40 @@
-"""Canonical-URL normalization — the URL-identity step a web pipeline runs
+r"""Canonical-URL normalization — the URL-identity step a web pipeline runs
 BEFORE url-keyed dedup/grouping (C4/CCNet dedup by canonical URL; the
 reference has no URL ops — like `public_suffix` this is a web-corpus
 fidelity op in its own right).
 
-Four pinned-equal forms (the ``functions.public_suffix`` layout + the
-shipped staged variant):
+Three pinned-equal forms (the ``functions.public_suffix`` layout):
 
-- ``canonical_url(col)``   — pure-codegen Spark Column (regexp chain)
+- ``with_canonical_url(df)`` — SHIPPED staged Spark form (codegen regexp
+  chain; see the scale note)
 - ``canonical_url_py(s)``  — python twin (the oracle-side unit of reuse)
 - ``canonical_url_sql(c)`` — DuckDB expression generator for oracles
-- ``with_canonical_url(df)`` — SHIPPED staged df form (9x; see below)
 
 Normalization contract (a pure function of the input string; every rule is
 deliberately expressible identically in Java regex, RE2 and python re —
-end-of-text anchors are ``\\z`` / ``$`` / ``\\Z`` per engine, never the
+end-of-text anchors are ``\z`` / ``$`` / ``\Z`` per engine, never the
 newline-sensitive Java ``$``):
 
 1. NULL -> NULL. Fragment stripped FIRST, then leading/trailing ASCII
    SPACES (0x20 only) trimmed — trim-after-strip, so a fragment preceded
    by spaces cannot leave a trailing space behind (idempotence, r5
    fuzz).
-2. Fragment = first ``#`` and everything after (``#[\\s\\S]*`` — the
-   class union is engine-independent even where ``\\s`` differs). The
+2. Fragment = first ``#`` and everything after (``#[\s\S]*`` — the
+   class union is engine-independent even where ``\s`` differs). The
    rebuilt output is space-trimmed once more (a cleaned query can expose
    a trailing path space).
 3. No ``scheme://`` prefix -> PASSTHROUGH of the trimmed, fragment-less
    string (mailto:, relative paths, garbage: not this function's job).
-4. Scheme lowercased. Authority: userinfo stripped through the LAST
-   ``@`` (``^[\s\S]*@`` greedy — the WHATWG rule; a first-@ strip is
-   not idempotent when garbage authorities carry more ``@``s), host
-   lowercased, then ONE trailing-run strip per scheme: for http/https
-   the run of MIXED default-port and dot tokens (``((:80)|\\.)+`` /
-   ``((:443)|\\.)+``), for other schemes trailing dots only — a single
+4. Scheme and host lowercased in ASCII only (``A-Z`` -> ``a-z`` by a
+   translate table). Non-ASCII host letters pass through unchanged — no
+   IDNA, no Unicode case folding: Java and python ``lower`` map ``İ`` to
+   two chars (Java's also follows the JVM default locale) where DuckDB
+   folds it to ``i``, so only the ASCII map is equal in every engine. Authority: userinfo
+   stripped through the LAST ``@`` (``^[\s\S]*@`` greedy — the WHATWG
+   rule; a first-@ strip is not idempotent when garbage authorities carry
+   more ``@``s), then ONE trailing-run strip per scheme: for http/https
+   the run of MIXED default-port and dot tokens (``((:80)|\.)+`` /
+   ``((:443)|\.)+``), for other schemes trailing dots only — a single
    mixed strip, because alternating two passes ('x:80.' exposes ':80',
    'a.com.:80' exposes '.') is not a fixpoint (r5 review/fuzz). A dot
    behind a NON-default port (``com.:8080``) stays by contract.
@@ -49,23 +52,21 @@ newline-sensitive Java ``$``):
 Idempotent: canonical output canonicalizes to itself (pinned in
 test_url_canonical incl. the multi-dot and path-``&`` classes).
 
-Scale note: pure codegen, no UDF. ``canonical_url`` is the SPEC form: its
-CASE branches reference the host/query regex chains conditionally, and
-codegen does NOT CSE across CASE branches (the r4 eTLD+1 lesson) — each
-chain re-evaluates per branch reference, measured 9x slower than the
-staged form at 4.8M urls (16.8-18.5 s vs 1.9-2.9 s, BENCH.md round-5).
-Hot paths (``dedup.canonical_url_dedup``, registry queries) use
-``with_canonical_url`` below: the same chain with every expensive
-intermediate staged as a projected alias (CollapseProject preserves
-non-cheap multiply-referenced aliases), pinned value-identical to this
-spec in test_url_canonical.
+Scale note: pure codegen, no UDF. Every expensive intermediate
+(fragment-stripped string, authority, host, query) is staged as its own
+projected alias exactly once (CollapseProject preserves non-cheap
+multiply-referenced aliases), so the CASE branches reference cheap columns.
+Codegen does NOT CSE across CASE branches (the r4 eTLD+1 lesson): the
+single-Column form of the same chain re-evaluated each regex chain per
+branch reference and measured 9x slower at 4.8M urls (16.8-18.5 s vs
+1.9-2.9 s, BENCH.md round-5).
 """
 
 from __future__ import annotations
 
 import re
+import string
 
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
@@ -73,55 +74,24 @@ _AUTH_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?]*)"
 _HEAD_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://[^/?]*"
 _TRACK_RE = r"([?&])(utm_[A-Za-z0-9_]*|gclid|fbclid)=[^&]*"
 _COLLAPSE_RE = r"([?&])&+"
+# ASCII-only lowercasing (contract point 4): the same A-Z -> a-z map in
+# Spark ``translate``, python ``str.translate`` and DuckDB ``translate``
+_UP, _LO = string.ascii_uppercase, string.ascii_lowercase
+_P_LOWER = str.maketrans(_UP, _LO)
 
 
-def canonical_url(url: Column) -> Column:
-    """Spark Column form (codegen regexp chain; see module contract)."""
-    s = F.trim(F.regexp_replace(url, r"#[\s\S]*", ""))
-    scheme = F.regexp_extract(s, _SCHEME_RE, 1)
-    lsch = F.lower(scheme)
-    auth = F.regexp_extract(s, _AUTH_RE, 1)
-    rest = F.regexp_replace(s, _HEAD_RE, "")
-
-    host = F.lower(F.regexp_replace(auth, r"^[\s\S]*@", ""))
-    # ONE trailing-run strip per scheme: the run may MIX default-port and
-    # dot tokens ('x:80.' / 'a.com.:80') — stripping them in two passes is
-    # not a fixpoint because each strip can expose the other (r5 review)
-    host = (
-        F.when(lsch == "http", F.regexp_replace(host, r"((:80)|\.)+\z", ""))
-        .when(lsch == "https", F.regexp_replace(host, r"((:443)|\.)+\z", ""))
-        .otherwise(F.regexp_replace(host, r"\.+\z", ""))
-    )
-
-    # split path from query FIRST: '&' is a legal path char (r5 review —
-    # cleaning the combined string merged distinct '&'-bearing paths)
-    ppart = F.regexp_extract(rest, r"^([^?]*)", 1)
-    qry = F.regexp_replace(rest, r"^[^?]*", "")
-    q1 = F.regexp_replace(qry, _TRACK_RE, "$1")
-    q2 = F.regexp_replace(q1, _COLLAPSE_RE, "$1")
-    q3 = F.regexp_replace(q2, r"[?& ]*[?&] *\z", "")
-    r = F.concat(ppart, q3)
-    path = (
-        F.when(r == "", F.lit("/"))
-        .when(r.startswith("?"), F.concat(F.lit("/"), r))
-        .otherwise(r)
-    )
-    out = F.when(scheme == "", s).otherwise(
-        F.trim(F.concat(lsch, F.lit("://"), host, path))
-    )
-    return F.when(url.isNull(), F.lit(None).cast("string")).otherwise(out)
+def _lower_ascii(c):
+    return F.translate(c, _UP, _LO)
 
 
 def with_canonical_url(df, url_col: str, out_col: str):
     """SHIPPED form: ``df`` plus ``out_col`` = canonical url of
-    ``url_col``, value-identical to ``canonical_url`` (pinned) but ~9x
-    faster — every expensive intermediate (fragment-stripped string,
-    authority, host, query) is staged as its own projected alias exactly
-    once, so the CASE branches reference cheap columns instead of
-    re-evaluating regex chains (codegen never CSEs across CASE branches;
-    BENCH.md round-5 A/B). Temp columns use the ``_cu_`` prefix and are
-    dropped."""
-    tmp = ["_cu_s", "_cu_sch", "_cu_auth", "_cu_rest", "_cu_h0", "_cu_h1",
+    ``url_col`` (module contract), pinned value-equal to the python and
+    DuckDB twins in test_url_canonical. Every expensive intermediate is
+    staged as its own projected alias exactly once (see the scale note).
+    Temp columns use the ``_cu_`` prefix and are dropped; an input that
+    already has one raises ``ValueError``."""
+    tmp = ["_cu_s", "_cu_sch", "_cu_auth", "_cu_rest", "_cu_h0",
            "_cu_host", "_cu_pp", "_cu_q", "_cu_r", "_cu_path"]
     clash = set(tmp) & set(df.columns)
     if clash:
@@ -129,17 +99,16 @@ def with_canonical_url(df, url_col: str, out_col: str):
     u = F.col(url_col)
     d = (
         df.withColumn("_cu_s", F.trim(F.regexp_replace(u, r"#[\s\S]*", "")))
-        .withColumn("_cu_sch", F.lower(F.regexp_extract("_cu_s", _SCHEME_RE, 1)))
+        .withColumn("_cu_sch", _lower_ascii(F.regexp_extract("_cu_s", _SCHEME_RE, 1)))
         .withColumn("_cu_auth", F.regexp_extract("_cu_s", _AUTH_RE, 1))
         .withColumn("_cu_rest", F.regexp_replace("_cu_s", _HEAD_RE, ""))
-        .withColumn("_cu_h0", F.lower(F.regexp_replace("_cu_auth", r"^[\s\S]*@", "")))
+        .withColumn("_cu_h0", _lower_ascii(F.regexp_replace("_cu_auth", r"^[\s\S]*@", "")))
         .withColumn(
-            "_cu_h1",
+            "_cu_host",
             F.when(F.col("_cu_sch") == "http", F.regexp_replace("_cu_h0", r"((:80)|\.)+\z", ""))
             .when(F.col("_cu_sch") == "https", F.regexp_replace("_cu_h0", r"((:443)|\.)+\z", ""))
             .otherwise(F.regexp_replace("_cu_h0", r"\.+\z", "")),
         )
-        .withColumn("_cu_host", F.col("_cu_h1"))
         .withColumn("_cu_pp", F.regexp_extract("_cu_rest", r"^([^?]*)", 1))
         .withColumn(
             "_cu_q",
@@ -199,11 +168,11 @@ def canonical_url_py(url: str | None) -> str | None:
     m = _P_SCHEME.match(s)
     if m is None:
         return s
-    lsch = m.group(1).lower()
+    lsch = m.group(1).translate(_P_LOWER)
     auth = _P_AUTH.match(s).group(1)
     rest = _P_HEAD.sub("", s, count=1)
 
-    host = _P_USER.sub("", auth, count=1).lower()
+    host = _P_USER.sub("", auth, count=1).translate(_P_LOWER)
     if lsch == "http":
         host = _P_P80.sub("", host)
     elif lsch == "https":
@@ -229,11 +198,11 @@ def canonical_url_sql(col: str) -> str:
     backrefs ``\\1``, explicit ``'g'`` for global replace)."""
     s = f"trim(regexp_replace({col}, '#[\\s\\S]*', '', 'g'), ' ')"
     scheme = f"regexp_extract({s}, '{_SCHEME_RE}', 1)"
-    lsch = f"lower({scheme})"
+    lsch = f"translate({scheme}, '{_UP}', '{_LO}')"
     auth = f"regexp_extract({s}, '{_AUTH_RE}', 1)"
     rest = f"regexp_replace({s}, '{_HEAD_RE}', '')"
 
-    host0 = f"lower(regexp_replace({auth}, '^[\\s\\S]*@', ''))"
+    host0 = f"translate(regexp_replace({auth}, '^[\\s\\S]*@', ''), '{_UP}', '{_LO}')"
     host = (
         f"CASE WHEN {lsch} = 'http' THEN regexp_replace({host0}, '((:80)|\\.)+$', '') "
         f"WHEN {lsch} = 'https' THEN regexp_replace({host0}, '((:443)|\\.)+$', '') "

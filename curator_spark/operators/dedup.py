@@ -30,39 +30,19 @@ from pyspark.sql import functions as F
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(text: Column, w: int = 3) -> Column:
-    """array of w-word shingles; [] when fewer than w words.
-
-    SPEC ONLY in hot paths: the ``F.transform`` lambda is an interpreted
-    higher-order function — measured ~750 µs/row on 300-char docs (10x the
-    whole rest of the minhash plan). Production plans go through
-    ``shingle_rows`` (codegen explode(sequence) + slice + concat_ws, pinned
-    multiset-identical by ``test_shingle_rows_equals_spec``); this array
-    form remains the readable semantic definition."""
-    from .textanalysis import words
-
-    toks = words(text)
-    n = F.size(toks)
-    return F.when(n < w, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n - (w - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, w)),
-        )
-    )
-
-
 def shingle_rows(df: DataFrame, text_col: str = "text", key: str = "doc_id", w: int = 3) -> DataFrame:
-    """Exploded (id, s) shingle rows — the production form of
-    ``explode(word_shingles(...))``, multiset-identical (pinned by test).
+    """Exploded (id, s) shingle rows: every run of ``w`` consecutive
+    ``textanalysis.words`` tokens joined by one space; docs with < w
+    tokens (and null text) contribute no rows. Pinned multiset-equal to a
+    python model over ``textanalysis.jvm_tokens`` by test.
 
     Whole-stage-codegen throughout: explode(sequence) generates the start
     indices, then ``slice(toks, i, w)`` / ``concat_ws`` run as ordinary
     codegen expressions — no interpreted lambda per element. The token
     array rides along the generator rows within the stage (never through a
     shuffle), which costs an in-stage array copy per shingle but measured
-    10x faster than the interpreted ``F.transform`` spec and adds no
-    exchange; docs with < w words contribute no rows, exactly like the
-    spec's empty array.
+    10x faster than an interpreted ``F.transform`` array form and adds no
+    exchange.
 
     Implemented as the positioned form minus the index, so the ONE
     tokenization expression the oracles mirror cannot drift between the
@@ -118,7 +98,7 @@ def _hashed_positioned_shingles(
 
 def _spans_from_hits(hits: DataFrame, key: str, w: int) -> DataFrame:
     """Gaps-and-islands merge of duplicated-shingle hit positions into
-    maximal spans — shared by ``duplicate_spans`` and its spec twin.
+    maximal spans — shared by ``duplicate_spans`` and ``strip_duplicate_spans``.
 
     Two hits merge when the earlier one's half-open end ``pos + w`` reaches
     the later one's start — overlapping OR back-to-back coverage, never
@@ -169,8 +149,8 @@ def duplicate_spans(
       oracle groups by the IDENTICAL value and parity holds even under a
       collision) — the shuffle moves (h:8B, id, pos) rows, never ~50-100B
       shingle strings, and all comparisons are long, not string: measured
-      ~4.5x over the string-keyed groupBy+join form, which is retained as
-      ``duplicate_spans_spec`` (pinned equal);
+      ~4.5x over a string-keyed groupBy+join form (the string-keyed DuckDB
+      query in test_operators checks the hashed keying loses nothing);
     - "appears in >= 2 distinct docs" is min(id)!=max(id) computed as
       window aggregates over ``partitionBy(h)`` in ONE pass — no second
       shingle scan, no join back, and (unlike a collect_list agg, measured
@@ -198,26 +178,6 @@ def duplicate_spans(
         .filter(F.col("_lo") != F.col("_hi"))
         .select("id", "pos")
     )
-    return _spans_from_hits(hits, key, w)
-
-
-def duplicate_spans_spec(
-    df: DataFrame, text_col: str = "text", key: str = "doc_id", w: int = 8
-) -> DataFrame:
-    """SPEC twin of ``duplicate_spans``: groups by the raw shingle STRING
-    (collision-free by construction) via hash-agg + join back. Readable
-    semantic definition and the collision-free cross-check; measured ~4.5x
-    slower than the hashed-window production form at 120k docs (string
-    shuffle + 5M-entry string hash map + second shingle scan). Pinned
-    equal to the production form on fixtures by pytest."""
-    sh = positioned_shingle_rows(df, text_col, key, w)
-    dup = (
-        sh.groupBy("s")
-        .agg(F.min("id").alias("_lo"), F.max("id").alias("_hi"))
-        .filter(F.col("_lo") != F.col("_hi"))
-        .select("s")
-    )
-    hits = sh.join(dup, "s").select("id", "pos")
     return _spans_from_hits(hits, key, w)
 
 

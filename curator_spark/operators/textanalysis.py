@@ -104,11 +104,11 @@ def lang_scores(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> D
     Shape: explode the lowered token array and take per-language conditional
     sums over a codegen InSet — no interpreted higher-order function on the
     scan, map-side partial agg, ONE shuffle of n_docs tiny count rows. The
-    round-4 A/B (tools/lexicon_ab.py) measured this ~2x faster than the
-    per-row `F.size(F.filter(isin))` HOF at every doc length 300-4000 chars
-    (the 4 lexicon scans amortize one cheap shuffle); the per-row form is
-    kept as ``lang_scores_rowwise`` and pinned bit-identical, including the
-    null-text edge (null hits, not 0).
+    round-4 A/B measured this ~2x faster than a per-row
+    `F.size(F.filter(isin))` HOF at every doc length 300-4000 chars (the 4
+    lexicon scans amortize one cheap shuffle; BENCH.md round 4). Pinned
+    equal to the DuckDB ``lang_scores`` oracle, including the null-text
+    edge (null hits, not 0; lang_pred 'und').
     """
     langs = sorted(rules.LANG_LEXICONS)
     # words(lower(text)), NOT transform(words(text), lower): lowercasing
@@ -117,8 +117,8 @@ def lang_scores(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> D
     # interpreted HOF (~16% off the sf0.1 wall, pinned identical)
     lw = words(F.lower(F.col(text_col)))
     # explode_outer keeps zero-word docs (one null-token row); the carried
-    # null-text flag distinguishes null text (hits NULL — the spec's
-    # size(null-array) semantics) from blank text (hits 0)
+    # null-text flag distinguishes null text (hits NULL — the oracle's
+    # len(NULL) semantics) from blank text (hits 0)
     toks = df.select(
         F.col(key),
         F.col(text_col).isNull().alias("_tnull"),
@@ -143,23 +143,6 @@ def lang_scores(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> D
         ]
     )
     return _lang_argmax(out, langs)
-
-
-def lang_scores_rowwise(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
-    """SPEC TWIN of ``lang_scores``: per-row interpreted-HOF hit counting.
-    Zero-shuffle but ~2x slower (tools/lexicon_ab.py); kept as the readable
-    semantic definition and pinned equal (incl. null-text) in tests. Use
-    ``lang_scores`` in hot paths."""
-    text = F.col(text_col)
-    lw = words(F.lower(text))
-    score_cols: list[Column] = []
-    langs = sorted(rules.LANG_LEXICONS)
-    for lang in langs:
-        lex = sorted(rules.LANG_LEXICONS[lang])
-        score_cols.append(
-            F.size(F.filter(lw, lambda w: w.isin(*lex))).cast("long").alias(f"hits_{lang}")
-        )
-    return _lang_argmax(df.select(F.col(key), *score_cols), langs)
 
 
 def quality_score(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
@@ -197,61 +180,6 @@ def quality_score(df: DataFrame, text_col: str = "text", key: str = "doc_id") ->
     return df.select(F.col(key), *flags, score.cast("int").alias("score"))
 
 
-def token_budget_pack(
-    df: DataFrame,
-    budget: int,
-    text_col: str = "text",
-    key: str = "doc_id",
-    score_col: str | None = None,
-) -> DataFrame:
-    """Fill a training-token budget with the best documents: rank by quality
-    score (desc), tie-break by content hash (deterministic, reshuffle-
-    stable), keep rows while the running BPE-token sum stays within budget —
-    the data-mixing counterpart of quality filtering ("give me the best
-    N-billion tokens").
-
-    Exact integer running sum -> oracle-exact. The window here is GLOBAL
-    (single ordered pass) — it exists as the semantic spec / oracle twin of
-    ``token_budget_pack_bucketed`` below, which is the scale form (per-bucket
-    budget under a partitionBy, no single-partition sort). Tests pin
-    bucketed(k=1) == global.
-
-    ``score_col``: rank by an EXISTING score column instead of recomputing
-    ``quality_score`` over ``text_col`` — what a composed recipe wants when
-    an upstream stage already scored the docs (curate_corpus_exact packs
-    span-stripped text by the original quality score).
-    """
-    ranked, order = _budget_ranked(df, text_col, key, score_col)
-    from pyspark.sql import Window
-
-    w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
-    running = F.sum("n_bpe_tokens").over(w)
-    return (
-        ranked.withColumn("running_tokens", running.cast("long"))
-        .filter(F.col("running_tokens") <= budget)
-        .select(key, "score", "n_bpe_tokens", "running_tokens")
-    )
-
-
-def _budget_ranked(df: DataFrame, text_col: str, key: str, score_col: str | None = None):
-    """Shared core of both budget-pack forms: (score ⋈ token counts) plus
-    the canonical pack ordering (score desc, content-hash, key) — ONE
-    definition so the global spec, the bucketed scale form, and their
-    oracles cannot drift. ``score_col`` reuses a caller-provided score
-    (aliased to the canonical 'score' name) instead of recomputing."""
-    if score_col is not None:
-        scored = df.select(key, F.col(score_col).alias("score"))
-    else:
-        scored = quality_score(df, text_col, key).select(key, "score")
-    toks = token_stats(df, text_col, key).select(key, "n_bpe_tokens")
-    order = [
-        F.col("score").desc(),
-        F.md5(F.col(key).cast("string")),
-        F.col(key),
-    ]
-    return scored.join(toks, key), order
-
-
 def token_budget_pack_bucketed(
     df: DataFrame,
     budget: int,
@@ -260,33 +188,49 @@ def token_budget_pack_bucketed(
     key: str = "doc_id",
     score_col: str | None = None,
 ) -> DataFrame:
-    """Scale form of ``token_budget_pack``: the budget is allocated per
-    content-hash bucket (``budget // k`` tokens to each of ``k`` buckets)
-    and the running-sum window runs under ``partitionBy(bucket)`` — k
-    independent sorted partitions instead of ONE global sort, so the plan
-    scales out (pick k ≈ executor count; each bucket's rows fit one task).
+    """Fill a training-token budget with the best documents: rank by quality
+    score (desc), tie-break by content hash (deterministic, reshuffle-
+    stable), keep rows while the running BPE-token sum stays within budget —
+    the data-mixing counterpart of quality filtering ("give me the best
+    N-billion tokens"). Exact integer running sums -> oracle-exact.
+
+    The budget is allocated per content-hash bucket (``budget // k`` tokens
+    to each of ``k`` buckets) and the running-sum window runs under
+    ``partitionBy(bucket)`` — k independent sorted partitions instead of
+    ONE global sort, so the plan scales out (pick k ≈ executor count; each
+    bucket's rows fit one task).
 
     The bucket is a pure content hash of the key (first 16 md5 bits mod k)
     — reshuffle/retry-stable, uniform, and computable identically in the
     DuckDB oracle. Because membership is hash-uniform, the per-bucket packs
     approximate the global pack's quality mix with budget-fraction variance
     O(1/sqrt(k)) — the standard distributed-quota design. k=1 is exactly
-    the global operator (pinned by a test).
+    the global pack (pinned against the DuckDB oracle at k=1).
 
-    Output adds the ``bucket`` column; ``running_tokens`` is the
-    within-bucket running sum.
+    ``score_col``: rank by an EXISTING score column instead of recomputing
+    ``quality_score`` over ``text_col`` — what a composed recipe wants when
+    an upstream stage already scored the docs (curate_corpus_exact packs
+    span-stripped text by the original quality score).
+
+    Output: (key, bucket, score, n_bpe_tokens, running_tokens), where
+    ``running_tokens`` is the within-bucket running sum.
     """
     from pyspark.sql import Window
 
-    ranked, order = _budget_ranked(df, text_col, key, score_col)
+    if score_col is not None:
+        scored = df.select(key, F.col(score_col).alias("score"))
+    else:
+        scored = quality_score(df, text_col, key).select(key, "score")
+    toks = token_stats(df, text_col, key).select(key, "n_bpe_tokens")
     bucket = (
         F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 4), 16, 10).cast("long")
         % F.lit(k)
     )
-    ranked = ranked.withColumn("bucket", bucket)
+    ranked = scored.join(toks, key).withColumn("bucket", bucket)
+    # pack order = the oracle's ORDER BY: score desc, content hash, key
     w = (
         Window.partitionBy("bucket")
-        .orderBy(*order)
+        .orderBy(F.col("score").desc(), F.md5(F.col(key).cast("string")), F.col(key))
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     running = F.sum("n_bpe_tokens").over(w)
@@ -320,18 +264,19 @@ def fingerprint(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> D
 
 
 def _repetition_row(text, dup_n: int):
-    """Per-doc repetition signals — the python twin the Arrow-batched
-    shipped form maps over each batch. Mirrors ``repetition_signals_sql``
-    bit-exactly: the ``jvm_tokens`` tokenizer (the JVM/oracle form WITH
-    phantom empty tokens at leading/trailing tabs/newlines — NOT
-    ``rules.tokens``), same integers into the same long/long divisions,
-    same interval-union coverage as the SQL gaps-and-islands merge.
+    """Per-doc repetition signals — the row function the Arrow-batched
+    shipped form maps over each batch. Mirrors the DuckDB
+    ``repetition_signals`` oracle bit-exactly: the ``jvm_tokens`` tokenizer
+    (the JVM/oracle form WITH phantom empty tokens at leading/trailing
+    tabs/newlines — NOT ``rules.tokens``), same integers into the same
+    long/long divisions, same interval-union coverage as the SQL
+    gaps-and-islands merge.
     top2/top3 are ALWAYS 2-/3-gram stats; only the coverage signal follows
     ``dup_n`` (they were coupled once — caught by review, pinned since)."""
     from collections import Counter
 
     if text is None:
-        return None, 0.0, 0.0, 0.0  # SQL twin: n_words NULL, fracs 0.0
+        return None, 0.0, 0.0, 0.0  # oracle: n_words NULL, fracs 0.0
     toks = jvm_tokens(text)
     n = len(toks)
     if n < 2:
@@ -352,7 +297,7 @@ def _repetition_row(text, dup_n: int):
                 if p + dup_n > end:
                     covered += p + dup_n - max(p, end)
                     end = p + dup_n
-        # covered/n: same integer operands as the SQL twin's SUM(b-a+1)/n
+        # covered/n: same integer operands as the oracle's SUM(b-a+1)/n
     return n, top2, top3, covered / n
 
 
@@ -365,7 +310,7 @@ def repetition_signals(
     a beyond-reference pipeline operator: the flagship heuristics cover
     repeated LINES, this covers repeated n-grams):
 
-      n_words   — whitespace token count (NULL text -> NULL, like the twin)
+      n_words   — whitespace token count (NULL text -> NULL, like the oracle)
       top2_frac — occurrences of the most frequent 2-gram / total 2-grams
       top3_frac — same at 3-grams
       dup_frac  — fraction of token positions covered by ``dup_n``-grams
@@ -373,13 +318,13 @@ def repetition_signals(
 
     Every signal is a WITHIN-doc function, so the shipped plan is ONE
     Arrow-batched ``mapInPandas`` over the scan — ZERO exchanges (plan-
-    pinned). The SQL-expressible explode/agg/window form is retained as
-    ``repetition_signals_sql`` (it mirrors the DuckDB oracle literally and
-    is pinned bit-identical); it was measured 7x slower at 120k docs and
-    36x slower at 1.2M (19 s -> 2.6 s, 193 s -> 5.3 s): three corpus-wide
-    gram explosions through (doc, gram) shuffles lose badly to ~15 µs of
-    per-doc python when the semantics never cross a document boundary —
-    the same economics as the flagship's fused-UDF stage."""
+    pinned; bit-identical to the DuckDB oracle). The explode/agg/window
+    form the oracle uses was measured in Spark 7x slower at 120k docs and
+    36x slower at 1.2M (19 s -> 2.6 s, 193 s -> 5.3 s; BENCH.md late-r4):
+    three corpus-wide gram explosions through (doc, gram) shuffles lose
+    badly to ~15 µs of per-doc python when the semantics never cross a
+    document boundary — the same economics as the flagship's fused-UDF
+    stage."""
     import pandas as pd
 
     key_type = df.schema[key].dataType.simpleString()  # key-generic (long doc_id, string url, ...)
@@ -396,90 +341,6 @@ def repetition_signals(
             yield out
 
     return df.select(key, text_col).mapInPandas(gen, schema=out_schema)
-
-
-def repetition_signals_sql(
-    df: DataFrame, text_col: str = "text", key: str = "doc_id", dup_n: int = 3
-) -> DataFrame:
-    """SPEC twin of ``repetition_signals``: the declarative explode/agg/
-    window form that the DuckDB oracle mirrors CTE-for-CTE. Pinned
-    bit-identical to the shipped Arrow form; measured 7x/36x slower at
-    120k/1.2M docs (see the shipped docstring) because within-doc stats
-    pay three corpus-wide gram shuffles here.
-
-      n_words   — whitespace token count (0-token docs emit a row too)
-      top2_frac — occurrences of the most frequent 2-gram / total 2-grams
-      top3_frac — same at 3-grams
-      dup_frac  — fraction of token positions covered by ``dup_n``-grams
-                  that occur >= 2 times WITHIN the doc (coverage via
-                  gaps-and-islands merge, so overlapping repeats are not
-                  double-counted). Gopher uses n in 5..10 on real web text;
-                  the default 3 keeps the signal non-vacuous on short docs.
-
-    All fractions are long/long divisions of identical integer operands in
-    Spark and the DuckDB oracle, so the doubles are bit-equal cross-engine.
-
-    Plan shape: three shingle branches over one cached-scan-friendly input —
-    each is explode -> hash agg with map-side partial agg keyed (doc, gram),
-    then a tiny per-doc agg; the coverage branch adds one doc-partitioned
-    window (hash-partitioned, no global sort) and every join back to the
-    per-doc base is on doc_id. Nothing corpus-wide ever single-partitions."""
-    from .dedup import positioned_shingle_rows, shingle_rows
-
-    base = df.select(
-        F.col(key).alias("id"), F.size(words(F.col(text_col))).cast("long").alias("n_words")
-    )
-
-    def top_frac(w: int, out: str) -> DataFrame:
-        counts = (
-            shingle_rows(df, text_col, key, w=w)
-            .groupBy("id", "s")
-            .agg(F.count("*").alias("_c"))
-        )
-        return counts.groupBy("id").agg(
-            (F.max("_c") / F.sum("_c")).alias(out)
-        )
-
-    f2 = top_frac(2, "top2_frac")
-    f3 = top_frac(3, "top3_frac")
-
-    sh = positioned_shingle_rows(df, text_col, key, w=dup_n)
-    dup = (
-        sh.groupBy("id", "s")
-        .agg(F.count("*").alias("_c"))
-        .filter(F.col("_c") >= 2)
-        .select("id", "s")
-    )
-    hits = sh.join(dup, ["id", "s"]).select("id", "pos")
-
-    # the one shared islands-merge contract (review: an inline copy here
-    # could drift from duplicate_spans' merge independently)
-    from .dedup import _spans_from_hits
-
-    spans = _spans_from_hits(hits, "id", dup_n)
-    cov = spans.groupBy("id").agg(
-        F.sum(F.col("span_end") - F.col("span_start") + 1).cast("long").alias("_covered")
-    )
-
-    out = (
-        base.join(f2, "id", "left")
-        .join(f3, "id", "left")
-        .join(cov, "id", "left")
-        .select(
-            F.col("id").alias(key),
-            "n_words",
-            F.coalesce("top2_frac", F.lit(0.0)).alias("top2_frac"),
-            F.coalesce("top3_frac", F.lit(0.0)).alias("top3_frac"),
-            F.when(
-                F.col("n_words") > 0,
-                F.coalesce(F.col("_covered").cast("double"), F.lit(0.0))
-                / F.col("n_words").cast("double"),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("dup_frac"),
-        )
-    )
-    return out
 
 
 # The ONE host-extraction regex (url_domain + the DuckDB oracle mirror both

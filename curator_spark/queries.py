@@ -104,7 +104,7 @@ def _lang_scores_sql() -> str:
     h AS (SELECT doc_id, {hits} FROM t),
     g AS (SELECT *, {greatest} AS top FROM h)
     SELECT doc_id, {', '.join('hits_' + lg for lg in langs)},
-           CASE WHEN top = 0 THEN 'und' {whens} END AS lang_pred
+           CASE WHEN coalesce(top, 0) = 0 THEN 'und' {whens} END AS lang_pred
     FROM g
     """
 
@@ -1007,35 +1007,24 @@ _SCORE_CTES = f"""
 """
 
 
-def _token_budget_sql(budget: int, k: int | None = None) -> str:
-    """ONE oracle generator for both budget-pack forms: k=None -> global
-    window over the whole ranked corpus; k -> per-md5-bucket quota of
-    budget//k under a partitioned window (mirrors
-    textanalysis.token_budget_pack / token_budget_pack_bucketed)."""
-    src = "fb" if k else "f"
-    pre = (
-        f""",
-    fb AS (SELECT f.*, CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % {k} AS bucket FROM f)"""
-        if k
-        else ""
-    )
-    part = "PARTITION BY fb.bucket " if k else ""
-    bucket_r = f"{src}.bucket, " if k else ""
-    bucket_out = "CAST(bucket AS BIGINT) AS bucket, " if k else ""
-    quota = budget // k if k else budget
+def _token_budget_sql(budget: int, k: int) -> str:
+    """Oracle of textanalysis.token_budget_pack_bucketed: a per-md5-bucket
+    quota of budget//k under a bucket-partitioned running-sum window
+    (k=1 is the global pack)."""
     return f"""
-    WITH {_SCORE_CTES}{pre},
+    WITH {_SCORE_CTES},
+    fb AS (SELECT f.*, CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % {k} AS bucket FROM f),
     tok AS (SELECT doc_id, len(regexp_extract_all(text, '{_BPE}')) AS n_bpe FROM documents),
     r AS (
-      SELECT {src}.doc_id, {bucket_r}{src}.score, tok.n_bpe,
-             SUM(tok.n_bpe) OVER ({part}ORDER BY {src}.score DESC,
-                                  md5(CAST({src}.doc_id AS VARCHAR)), {src}.doc_id
+      SELECT fb.doc_id, fb.bucket, fb.score, tok.n_bpe,
+             SUM(tok.n_bpe) OVER (PARTITION BY fb.bucket ORDER BY fb.score DESC,
+                                  md5(CAST(fb.doc_id AS VARCHAR)), fb.doc_id
                                   ROWS UNBOUNDED PRECEDING) AS running
-      FROM {src} JOIN tok ON {src}.doc_id = tok.doc_id)
-    SELECT doc_id, {bucket_out}CAST(score AS INTEGER) AS score,
+      FROM fb JOIN tok ON fb.doc_id = tok.doc_id)
+    SELECT doc_id, CAST(bucket AS BIGINT) AS bucket, CAST(score AS INTEGER) AS score,
            CAST(n_bpe AS BIGINT) AS n_bpe_tokens,
            CAST(running AS BIGINT) AS running_tokens
-    FROM r WHERE running <= {quota}
+    FROM r WHERE running <= {budget // k}
     """
 
 
@@ -1044,11 +1033,8 @@ def q_token_budget_pack_bucketed(spark, sf_dir):
     """Data mixing under a token budget, scale form: budget//k tokens
     allocated per content-hash bucket, running integer-exact BPE-token sums
     under partitionBy(bucket) — k sorted partitions instead of one global
-    sort. Registry fold (r5, slot funds `decontaminate`): the GLOBAL window
-    form (`textanalysis.token_budget_pack`, the semantic spec, previously
-    its own oracle entry) is pinned == bucketed(k=1) in pytest
-    (test_token_budget_pack_bucketed_k1_equals_global) and its oracle SQL
-    is this same generator at k=None, so one entry evidences both."""
+    sort. The global pack is k=1, pinned against this same oracle
+    generator at k=1 in pytest (test_token_budget_pack_bucketed_k1_matches_oracle)."""
     return textanalysis.token_budget_pack_bucketed(
         _t(spark, sf_dir, "documents"), budget=20000, k=4
     )
@@ -1214,7 +1200,7 @@ def q_hash_split(spark, sf_dir):
 
 
 # Synthesized DIRTY url — deterministic per (doc_id, source), lighting every
-# canonical_url branch: default/non-default ports, userinfo, uppercase
+# url-canonicalization branch: default/non-default ports, userinfo, uppercase
 # scheme+host, fragments, tracking params (incl. last-param and only-param
 # positions), trailing host dot with and without a port, IPv6 literal,
 # scheme-less passthrough, NULL. Spark twin: _dirty_url_col below.
@@ -1272,7 +1258,7 @@ def q_scalar_funcs(spark, sf_dir):
     """§2.8 scalar-function surface (P7 post-processing analog): slice,
     regex extract, replace, trim, case, arithmetic incl. the len/4 token
     estimate (openai_online_request_processor.py:211). r5 adds
-    ``canon_url`` — `functions.url_canonical.canonical_url` over a
+    ``canon_url`` — `functions.url_canonical.with_canonical_url` over a
     synthesized dirty url lighting every normalization branch (the
     C4/CCNet canonical-URL-identity step; python twin + DuckDB generator
     pinned three-engine-equal in test_url_canonical)."""
@@ -1393,7 +1379,7 @@ def q_decontaminate(spark, sf_dir):
     re-crawls of a benchmark doc — 6 such at sf0.01). Both engines join on
     the IDENTICAL 120-bit double-md5-slice gram key (the strip_
     duplicate_spans action-grade contract), so parity is exact even under
-    collisions; registry slot funded by the token_budget_pack k=1 fold.
+    collisions.
     Production mode="drop" is pinned in pytest as the filter identity of
     this flag output."""
     docs = _t(spark, sf_dir, "documents")
@@ -1453,8 +1439,8 @@ def q_repetition_signals(spark, sf_dir):
     3-grams (islands-merged, dup_n=3 keeps the signal non-vacuous on the
     ~50-word fixture docs). Shipped form = ONE Arrow-batched mapInPandas
     (within-doc stats, zero exchanges; 36x over the explode/agg form at
-    1.2M docs); this oracle SQL mirrors the declarative spec twin
-    ``repetition_signals_sql``, pinned bit-identical in pytest."""
+    1.2M docs); this oracle SQL is the declarative explode/agg/window
+    form, and pytest also runs it on hand and phantom-token fixtures."""
     return textanalysis.repetition_signals(
         _t(spark, sf_dir, "documents"), dup_n=3
     )

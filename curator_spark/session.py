@@ -21,6 +21,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
+def default_driver_memory() -> str:
+    """Driver heap default: min(16g, 40% of physical memory) in whole GiB,
+    so a small host (e.g. 15.7 GiB -> 6g) leaves room for the python
+    workers instead of having the JVM OOM-killed. Hosts that do not report
+    their memory through ``os.sysconf`` get 16g."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "16g"
+    return f"{max(1, min(16, int(phys * 0.4) >> 30))}g"
+
+
 def get_spark(
     app_name: str = "curator_spark",
     master: str | None = None,
@@ -57,7 +69,10 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("CURATOR_SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("CURATOR_SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

@@ -1,9 +1,12 @@
 """Operator-level tests: dedup family, similarity search, text analysis.
 
-Oracle-checked operators are additionally verified against DuckDB SQL by
-tools/parity_check.py (and the driver); these tests cover the engine-internal
-operators (simhash, LSH ANN) with python twins / planted fixtures, mirroring
-the reference's golden-fixture strategy (SURVEY.md §5).
+Each operator has one production form and one reference. Oracle-checked
+operators run their registered DuckDB oracle (``_duck_oracle``) on edge
+fixtures here, on top of tools/parity_check.py (and the driver) at the
+fixture scale factors; engine-internal operators (simhash, LSH ANN, the
+shingle tokenizer) are checked against python models / planted fixtures /
+hand values, mirroring the reference's golden-fixture strategy (SURVEY.md
+§5).
 """
 
 from __future__ import annotations
@@ -15,6 +18,33 @@ import pytest
 from pyspark.sql import functions as F
 
 from curator_spark.operators import dedup, similarity
+from curator_spark.operators.textanalysis import jvm_tokens
+
+
+def _duck_oracle(name, rows):
+    """Rows of the registered DuckDB oracle ``queries.ORACLE[name]`` over a
+    ``documents(doc_id, text)`` table built from ``rows`` (tuples or a
+    pandas frame), as a set of tuples."""
+    import duckdb
+    import pandas as pd
+
+    from curator_spark import queries
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    return set(con.execute(queries.ORACLE[name]).fetchall())
+
+
+def _shingle_model(rows, w):
+    """Python model of ``dedup.shingle_rows``: w-token runs of
+    ``jvm_tokens`` (pinned equal to ``words()``) joined by one space."""
+    return sorted(
+        (i, " ".join(toks[p : p + w]))
+        for i, t in rows
+        if t is not None
+        for toks in [jvm_tokens(t)]
+        for p in range(len(toks) - w + 1)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -38,8 +68,8 @@ def test_exact_dedup_keeps_min_key(docs_df):
     assert dup_group.doc_id == 0  # min key wins over 3
 
 
-def test_shingle_rows_equals_spec(spark):
-    """Codegen shingle path == explode(word_shingles(...)) spec, as a multiset.
+def test_shingle_rows_matches_jvm_tokens_model(spark):
+    """Codegen shingle path == the jvm_tokens python model, as a multiset.
 
     shingle_rows is the production subtree under minhash_lsh_candidates and
     ngram_jaccard_pairs; any drift here silently shifts every dedup oracle.
@@ -52,18 +82,14 @@ def test_shingle_rows_equals_spec(spark):
         (4, "one two"),
         (5, "one two three"),  # exactly w=3 words -> 1 shingle
         (6, "a  b\tc\nd   e"),  # mixed separators, runs of whitespace
-        (7, None),  # null text drops out of both forms
+        (7, None),  # null text contributes no shingles
         (8, "  leading and trailing   spaces stripped before split  "),
         (9, "répété répété répété unicode œuvre"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for w in (2, 3, 5):
-        spec = df.select(
-            F.col("doc_id").alias("id"),
-            F.explode(dedup.word_shingles(F.col("text"), w)).alias("s"),
-        )
         fast = dedup.shingle_rows(df, w=w)
-        assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, spec.collect())), w
+        assert sorted(map(tuple, fast.collect())) == _shingle_model(rows, w), w
 
 
 def test_minhash_finds_planted_near_dup(docs_df):
@@ -193,16 +219,14 @@ def _simhash_unpacked_reference(df, hash_col_fn, key="doc_id"):
 
 def test_packed_simhash_and_shingles_on_adversarial_corpus(spark):
     """Whole-corpus pins for the packed/codegen rewrites on adversarial
-    unicode: shingle_rows == spec multiset, and simhash_md5's packed vote
-    counters == the unpacked per-bit formulation, row for row."""
-    df = spark.createDataFrame(_adversarial_corpus(), "doc_id long, text string")
+    unicode: shingle_rows == the jvm_tokens model multiset, and
+    simhash_md5's packed vote counters == the unpacked per-bit
+    formulation, row for row."""
+    rows = _adversarial_corpus()
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     for w in (2, 3):
-        spec = df.select(
-            F.col("doc_id").alias("id"),
-            F.explode(dedup.word_shingles(F.col("text"), w)).alias("s"),
-        )
         fast = dedup.shingle_rows(df, w=w)
-        assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, spec.collect())), w
+        assert sorted(map(tuple, fast.collect())) == _shingle_model(rows, w), w
 
     def md5_halves(d):
         t = F.trim(F.col("text"))
@@ -479,23 +503,26 @@ def test_lsh_ann_scores_are_true_cosines(emb_df):
 
 
 # ---------------------------------------------------------------------------
-# Token-budget packing: bucketed scale form vs the global spec.
+# Token-budget packing: the bucketed pack against its DuckDB oracle.
 # ---------------------------------------------------------------------------
 
 
-def test_token_budget_pack_bucketed_k1_equals_global(spark):
+def test_token_budget_pack_bucketed_k1_matches_oracle(spark):
+    """k=1 is the global pack (one bucket, one running sum over the whole
+    ranked corpus); the registry pins k=4, so this pins k=1 against the
+    same oracle generator — identical membership AND running sums."""
+    import duckdb
+
+    from curator_spark import queries
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    glob = {
-        (r.doc_id, r.score, r.n_bpe_tokens, r.running_tokens)
-        for r in textanalysis.token_budget_pack(docs, budget=20000).collect()
-    }
-    b1 = {
-        (r.doc_id, r.score, r.n_bpe_tokens, r.running_tokens)
-        for r in textanalysis.token_budget_pack_bucketed(docs, budget=20000, k=1).collect()
-    }
-    assert b1 == glob  # k=1 bucket: identical membership AND running sums
+    b1 = {tuple(r) for r in textanalysis.token_budget_pack_bucketed(docs, budget=20000, k=1).collect()}
+    con = duckdb.connect()
+    con.register("documents", docs.select("doc_id", "text").toPandas())
+    want = set(con.execute(queries._token_budget_sql(20000, k=1)).fetchall())
+    assert b1 == want
+    assert len(b1) >= 10 and {r[1] for r in b1} == {0}
 
 
 def test_token_budget_pack_bucketed_respects_per_bucket_quota(spark):
@@ -659,12 +686,12 @@ def test_ivf_centroids_nonfinite_filtered_before_limit(spark):
     assert cents_l.shape == (8, 4) and np.isfinite(cents_l).all()
 
 
-def test_lang_scores_explode_equals_rowwise_spec(spark):
+def test_lang_scores_matches_oracle_on_edges(spark):
     """The shipped explode+InSet lang_scores (one tiny-row shuffle, no
-    interpreted HOF — ~2x faster at 300-4000-char docs per
-    tools/lexicon_ab.py) must stay bit-identical to the per-row spec twin,
-    including the edges: null text (hits NULL, not 0), blank text (hits 0),
-    leading-tab empty tokens, argmax ties, and multi-language mixes."""
+    interpreted HOF) must equal the registered DuckDB oracle on the edges —
+    null text (hits NULL, not 0; lang_pred 'und'), blank text (hits 0),
+    leading-tab empty tokens, argmax ties, and multi-language mixes — and
+    on the sf0.001 corpus."""
     from curator_spark.operators import textanalysis
 
     rows = [
@@ -680,20 +707,14 @@ def test_lang_scores_explode_equals_rowwise_spec(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     cols = ["doc_id", "hits_de", "hits_en", "hits_es", "hits_fr", "lang_pred"]
-    got = sorted(map(tuple, textanalysis.lang_scores(df).select(cols).collect()))
-    spec = sorted(
-        map(tuple, textanalysis.lang_scores_rowwise(df).select(cols).collect())
-    )
-    assert got == spec
+    got = {tuple(r) for r in textanalysis.lang_scores(df).select(cols).collect()}
+    assert got == _duck_oracle("lang_scores", rows)
     null_row = next(t for t in got if t[0] == 0)
     assert null_row[1:] == (None, None, None, None, "und")
     # and on the real fixture corpus
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    got_f = sorted(map(tuple, textanalysis.lang_scores(docs).select(cols).collect()))
-    spec_f = sorted(
-        map(tuple, textanalysis.lang_scores_rowwise(docs).select(cols).collect())
-    )
-    assert got_f == spec_f
+    got_f = {tuple(r) for r in textanalysis.lang_scores(docs).select(cols).collect()}
+    assert got_f == _duck_oracle("lang_scores", docs.select("doc_id", "text").toPandas())
 
 
 def test_simhash_near_pairs_rejects_uncoverable_radius(spark):
@@ -835,8 +856,7 @@ def test_duplicate_spans_matches_duckdb_twin_at_w5(spark):
     this pins a DIFFERENT width on sf0.001 so the operator, not one
     parameterization, is what's verified — and the DuckDB twin below keys
     on the raw shingle STRING, so passing also proves the production
-    60-bit-hash keying loses nothing on this corpus. The string-keyed
-    Spark spec twin is pinned identical at the same time."""
+    60-bit-hash keying loses nothing on this corpus."""
     import duckdb
 
     sf = "/root/testdata/sf0.001"
@@ -845,11 +865,6 @@ def test_duplicate_spans_matches_duckdb_twin_at_w5(spark):
         (r.doc_id, r.span_start, r.span_end, r.n_dup_shingles)
         for r in dedup.duplicate_spans(docs, w=5).collect()
     }
-    spec = {
-        (r.doc_id, r.span_start, r.span_end, r.n_dup_shingles)
-        for r in dedup.duplicate_spans_spec(docs, w=5).collect()
-    }
-    assert got == spec
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
@@ -887,8 +902,8 @@ def test_duplicate_spans_matches_duckdb_twin_at_w5(spark):
 
 
 def test_repetition_signals_hand_fixture(spark):
-    """Hand-computable docs pin every output column of BOTH repetition
-    forms (shipped Arrow stage and the oracle-mirrored SQL twin)."""
+    """Hand-computable docs pin every output column of the shipped Arrow
+    stage AND of the registered DuckDB oracle (dup_n=3)."""
     from curator_spark.operators import textanalysis
 
     rows = [
@@ -900,31 +915,30 @@ def test_repetition_signals_hand_fixture(spark):
         (5, "p q r s p q r"),                # partial overlap: (p q r) at 1,5 -> 3+3 covered of 7
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for form in (textanalysis.repetition_signals, textanalysis.repetition_signals_sql):
-        got = {r.doc_id: r for r in form(df, dup_n=3).collect()}
-        assert set(got) == {0, 1, 2, 3, 4, 5}, form.__name__
-        r0 = got[0]
-        assert (r0.n_words, r0.top2_frac, r0.top3_frac, r0.dup_frac) == (5, 2 / 4, 1 / 3, 0.0)
-        r1 = got[1]
+    shipped = {tuple(r) for r in textanalysis.repetition_signals(df, dup_n=3).collect()}
+    for name, out in (("shipped", shipped), ("oracle", _duck_oracle("repetition_signals", rows))):
+        got = {r[0]: r[1:] for r in out}  # (n_words, top2, top3, dup)
+        assert set(got) == {0, 1, 2, 3, 4, 5}, name
+        assert got[0] == (5, 2 / 4, 1 / 3, 0.0), name
         # 2-grams: (x y)x3 of 8; 3-grams: (x y z)x3 of 7; dup-3gram hits at
         # every start 1..7 -> one island covering tokens 1..9 -> 9/9
-        assert (r1.n_words, r1.top2_frac, r1.top3_frac, r1.dup_frac) == (9, 3 / 8, 3 / 7, 1.0)
-        assert (got[2].n_words, got[2].top2_frac, got[2].top3_frac, got[2].dup_frac) == (1, 0.0, 0.0, 0.0)
-        assert (got[3].n_words, got[3].top2_frac, got[3].top3_frac, got[3].dup_frac) == (0, 0.0, 0.0, 0.0)
-        assert (got[4].n_words, got[4].top2_frac, got[4].top3_frac, got[4].dup_frac) == (None, 0.0, 0.0, 0.0)
-        assert (got[5].n_words, got[5].dup_frac) == (7, 6 / 7)
+        assert got[1] == (9, 3 / 8, 3 / 7, 1.0), name
+        assert got[2] == (1, 0.0, 0.0, 0.0), name
+        assert got[3] == (0, 0.0, 0.0, 0.0), name
+        assert got[4] == (None, 0.0, 0.0, 0.0), name
+        assert (got[5][0], got[5][3]) == (7, 6 / 7), name
 
 
-def test_repetition_signals_udf_equals_sql_twin(spark):
+def test_repetition_signals_matches_oracle_on_corpus(spark):
     """The shipped Arrow-batched form must stay bit-identical to the
-    declarative SQL twin (the form the DuckDB oracle mirrors) on the real
-    corpus — every column, including the long/long division doubles."""
+    registered DuckDB oracle on the real corpus — every column, including
+    the long/long division doubles."""
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     a = {tuple(r) for r in textanalysis.repetition_signals(docs, dup_n=3).collect()}
-    b = {tuple(r) for r in textanalysis.repetition_signals_sql(docs, dup_n=3).collect()}
-    assert a == b and len(a) == 500
+    assert a == _duck_oracle("repetition_signals", docs.select("doc_id", "text").toPandas())
+    assert len(a) == 500
     assert any(r[4] > 0 for r in a)  # dup coverage non-vacuous on the fixture
 
 
@@ -1167,37 +1181,37 @@ def test_strip_duplicate_spans_jvm_token_space(spark):
     # n_kept_words counts RENDERED words — the phantom never inflates it
 
 
-def test_repetition_signals_phantom_tokens_match_twin(spark):
+def test_repetition_signals_phantom_tokens_match_oracle(spark):
     """Review repro: '\\ta b a b c' has 6 JVM tokens (phantom first); the
-    shipped Arrow form must agree with the SQL twin / oracle on it."""
+    shipped Arrow form must agree with the DuckDB oracle on it."""
     from curator_spark.operators import textanalysis as ta
 
     rows = [(0, "\ta b a b c"), (1, "a b\n"), (2, "\n\nx y x y\t")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     a = {tuple(r) for r in ta.repetition_signals(df, dup_n=3).collect()}
-    b = {tuple(r) for r in ta.repetition_signals_sql(df, dup_n=3).collect()}
-    assert a == b
+    assert a == _duck_oracle("repetition_signals", rows)
     r0 = {r[0]: r for r in a}[0]
     assert r0[1] == 6 and r0[2] == 2 / 5 and r0[3] == 1 / 4
 
 
 def test_repetition_signals_top3_independent_of_dup_n(spark):
     """Review repro: top3_frac is a 3-gram stat for EVERY dup_n — it was
-    once computed over dup_n-grams (0.25 instead of 0.2 at dup_n=5)."""
+    once computed over dup_n-grams (0.25 instead of 0.2 at dup_n=5).
+    dup_n=3 is checked against the DuckDB oracle, dup_n=5 by hand."""
     from curator_spark.operators import textanalysis as ta
 
-    df = spark.createDataFrame([(0, "a b c d e f a b c d e f")], "doc_id long, text string")
-    for dup_n in (3, 5):
-        got = {tuple(r) for r in ta.repetition_signals(df, dup_n=dup_n).collect()}
-        want = {tuple(r) for r in ta.repetition_signals_sql(df, dup_n=dup_n).collect()}
-        assert got == want, dup_n
+    rows = [(0, "a b c d e f a b c d e f")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got3 = {tuple(r) for r in ta.repetition_signals(df, dup_n=3).collect()}
+    assert got3 == _duck_oracle("repetition_signals", rows)
     r5 = ta.repetition_signals(df, dup_n=5).collect()[0]
-    assert r5.top3_frac == 2 / 10  # ('a b c') and peers repeat twice in 10 3-grams
+    # 2-grams: 11, each once except (a b)..(e f) twice -> 2/11; ('a b c')
+    # and peers repeat twice in 10 3-grams; both 5-gram copies cover all 12
+    assert tuple(r5) == (0, 12, 2 / 11, 2 / 10, 1.0)
     # and docs shorter than dup_n still get their real top3
     short = spark.createDataFrame([(0, "p q p q")], "doc_id long, text string")
     s5 = ta.repetition_signals(short, dup_n=5).collect()[0]
-    t5 = ta.repetition_signals_sql(short, dup_n=5).collect()[0]
-    assert (s5.top3_frac, s5.dup_frac) == (t5.top3_frac, t5.dup_frac) == (1 / 2, 0.0)
+    assert (s5.top3_frac, s5.dup_frac) == (1 / 2, 0.0)
 
 
 def test_duplicate_spans_mega_shingle_skew(spark):

@@ -120,7 +120,7 @@ def test_pipeline_has_no_interpreted_hof_in_hot_path(pages_df):
 def test_token_budget_pack_bucketed_window_is_hash_partitioned(spark):
     """The bucketed pack's running-sum window must sort WITHIN hash
     partitions of the bucket key — never a SinglePartition global sort
-    (the 100x-scale failure mode of the global form)."""
+    (the 100x-scale failure mode of an unbucketed window)."""
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -128,16 +128,11 @@ def test_token_budget_pack_bucketed_window_is_hash_partitioned(spark):
     assert "SinglePartition" not in plan
     assert "hashpartitioning(bucket" in plan
 
-    glob = _plan(textanalysis.token_budget_pack(docs, budget=20000))
-    assert "SinglePartition" in glob  # the spec form really is global
-
 
 def test_lang_scores_plan_one_partial_agg_no_lambda(spark):
     """The shipped lang_scores is explode + conditional-sum over a codegen
     InSet: exactly ONE exchange (n_docs tiny count rows, after a map-side
-    partial agg) and NO interpreted lambda anywhere; the per-row spec twin
-    keeps zero exchanges but carries the lambdas — pinned so the contrast
-    (and the reason each form exists) stays visible."""
+    partial agg) and NO interpreted lambda anywhere."""
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -145,9 +140,6 @@ def test_lang_scores_plan_one_partial_agg_no_lambda(spark):
     assert _n_nodes(plan, "Exchange") == 1, plan
     assert "lambdafunction" not in plan, plan
     assert _n_nodes(plan, "HashAggregate") == 2  # partial + final
-    spec = _plan(textanalysis.lang_scores_rowwise(docs))
-    assert _n_nodes(spec, "Exchange") == 0
-    assert "lambdafunction" in spec
 
 
 def test_embedding_near_dup_has_no_pair_cross_join(spark):
@@ -234,8 +226,7 @@ def test_duplicate_spans_plan_shape(spark):
     boilerplate mega-shingle spills instead of exploding one agg buffer),
     NO join back, and the island window's hashpartitioning(id) is reused
     by the final span agg: exactly 2 exchanges, zero Join nodes. No
-    interpreted lambda, never SinglePartition. The string-keyed spec twin
-    keeps its agg+join shape (pinned equal row-wise in test_operators)."""
+    interpreted lambda, never SinglePartition."""
     from curator_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -246,30 +237,17 @@ def test_duplicate_spans_plan_shape(spark):
     assert "Join" not in plan, plan  # single-pass: no join back
     assert "hashpartitioning(h" in plan and "hashpartitioning(id" in plan
 
-    spec = _plan(dedup.duplicate_spans_spec(docs, w=8))
-    assert "partial_min" in spec  # the twin's map-side agg stays partial
-    assert "lambdafunction" not in spec.lower()
-
 
 def test_repetition_signals_plan_shape(spark):
     """Repetition signals (r4): within-doc stats must never shuffle — the
     shipped form is ONE Arrow-batched python stage over the scan, ZERO
-    exchanges. The SQL spec twin keeps the declarative shape the oracle
-    mirrors: map-side partial aggs, hash-partitioned dup-coverage window,
-    no SinglePartition / interpreted lambdas / nested-loop joins."""
+    exchanges."""
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(textanalysis.repetition_signals(docs, dup_n=3))
     assert _n_nodes(plan, "Exchange") == 0, plan
     assert "MapInPandas" in plan
-
-    spec = _plan(textanalysis.repetition_signals_sql(docs, dup_n=3))
-    assert "SinglePartition" not in spec
-    assert "lambdafunction" not in spec.lower()
-    assert "CartesianProduct" not in spec and "BroadcastNestedLoopJoin" not in spec
-    assert "hashpartitioning(id" in spec
-    assert "partial_count" in spec
 
 
 def test_domain_cap_keeps_group_limit_pushdown(spark):

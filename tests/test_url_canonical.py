@@ -1,5 +1,6 @@
-"""canonical_url: hand-case contract + three-engine parity (Column /
-python twin / DuckDB generator), same pinning style as test_public_suffix.
+"""Canonical url: hand-case contract + three-engine parity (shipped staged
+Spark form / python twin / DuckDB generator), same pinning style as
+test_public_suffix.
 The registry-level parity (the `canon_url` column folded into
 `scalar_funcs`) is additionally driver-checked via the oracle."""
 
@@ -10,9 +11,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from curator_spark.functions.url_canonical import (
-    canonical_url,
     canonical_url_py,
     canonical_url_sql,
+    with_canonical_url,
 )
 
 HAND = [
@@ -60,6 +61,12 @@ HAND = [
     ("http://a.com.:80", "http://a.com/"),
     ("https://x:443:443.", "https://x/"),
     ("ftp://x.:21", "ftp://x.:21/"),  # non-default port keeps its dot
+    # non-ASCII host letters pass through unchanged: only A-Z is lowered
+    # (Java/python lower('İ') is two chars, DuckDB's is 'i'; no IDNA)
+    ("HTTP://İSTANBUL.COM/x", "http://İstanbul.com/x"),
+    ("https://STRAßE.DE:443/P", "https://straße.de/P"),
+    ("http://ＡBC.ΩMEGA.COM", "http://Ａbc.Ωmega.com/"),
+    ("ftp://ǅ.EXAMPLE.", "ftp://ǅ.example/"),
 ]
 
 
@@ -69,7 +76,13 @@ def test_hand_cases_python_twin():
 
 
 def test_three_engine_parity(spark):
+    """Python twin == DuckDB generator == shipped staged Spark form on the
+    hand cases plus extra branch-lighting urls; the staged form drops its
+    temp columns and refuses an input that already has one."""
     urls = [u for u, _ in HAND] + [
+        "http://x.com/a&gclid=1?q=2",
+        "https://U@H.com.:443/p?utm_a=1&&b=2&",
+        "http://a.com...",
         "scheme+x-y://HOST/p",
         "http://x.com/p?&a=1",
         "http://x.com/p??a=1",
@@ -98,14 +111,13 @@ def test_three_engine_parity(spark):
     ]
 
     df = spark.createDataFrame(list(enumerate(urls)), "i long, u string")
-    sp = [
-        r.c
-        for r in df.select("i", canonical_url(F.col("u")).alias("c"))
-        .orderBy("i")
-        .collect()
-    ]
+    staged = with_canonical_url(df, "u", "c")
+    assert set(staged.columns) == {"i", "u", "c"}
+    sp = [r.c for r in staged.select("i", "c").orderBy("i").collect()]
     for u, a, b, c in zip(urls, py, dk, sp):
         assert a == b == c, (u, a, b, c)
+    with pytest.raises(ValueError):
+        with_canonical_url(df.withColumn("_cu_s", F.lit(1)), "u", "c")
 
 
 def test_canonical_url_is_idempotent_and_codegen_only(spark):
@@ -122,52 +134,28 @@ def test_canonical_url_is_idempotent_and_codegen_only(spark):
     df = spark.range(4).select(
         F.concat(F.lit("HTTP://A"), F.col("id").cast("string"), F.lit(".COM:80/p?utm_source=x")).alias("u")
     )
-    plan = df.select(canonical_url(F.col("u")).alias("c"))._jdf.queryExecution().toString()
+    plan = with_canonical_url(df, "u", "c")._jdf.queryExecution().toString()
     assert "lambdafunction" not in plan.lower()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_with_canonical_url_staged_equals_spec(spark):
-    """The SHIPPED staged form must be value-identical to the canonical_url
-    spec Column over an adversarial url mix (every branch lit), and its
-    plan must contain exactly ONE evaluation-site of each expensive regex
-    — checked structurally by asserting the temp columns are gone and no
-    interpreted lambda appears."""
-    from curator_spark.functions.url_canonical import with_canonical_url
-
-    urls = [u for u, _ in HAND] + [
-        "http://x.com/a&gclid=1?q=2",
-        "https://U@H.com.:443/p?utm_a=1&&b=2&",
-        "http://a.com...",
-    ]
-    df = spark.createDataFrame(list(enumerate(urls)), "i long, u string")
-    spec = df.select("i", canonical_url(F.col("u")).alias("c"))
-    shipped = with_canonical_url(df, "u", "c").select("i", "c")
-    a = {(r.i, r.c) for r in spec.collect()}
-    b = {(r.i, r.c) for r in shipped.collect()}
-    assert a == b
-    assert set(with_canonical_url(df, "u", "c").columns) == {"i", "u", "c"}
-    with pytest.raises(ValueError):
-        with_canonical_url(df.withColumn("_cu_s", F.lit(1)), "u", "c")
-
-
 def test_fuzz_three_engine_parity_and_idempotence(spark):
     """4000 seeded random url-ish garbage strings (every metachar the
-    contract touches: #, @, :, ?, &, [, ], dots, spaces, tabs, newlines)
-    — python twin == DuckDB == Spark spec == Spark staged, and the python
+    contract touches: #, @, :, ?, &, [, ], dots, spaces, tabs, newlines,
+    plus non-ASCII letters whose Unicode lowercase differs per engine)
+    — python twin == DuckDB == shipped Spark staged form, and the python
     twin is a fixpoint on its own output. This fuzz found three real
     contract bugs when first run (fragment-exposed trailing spaces,
-    multi-@ authorities, stacked default ports)."""
+    multi-@ authorities, stacked default ports), and the non-ASCII letters
+    a fourth (engine-dependent host lowercasing)."""
     import random
-
-    from curator_spark.functions.url_canonical import with_canonical_url
 
     rng = random.Random(0xF00D)
     # '8'/'4' make ':80'/':443' reachable, and the token list injects
     # tracking params + port/dot runs — the first fuzz alphabet could not
     # generate a default port at all, which is exactly how the mixed
     # port/dot-run non-fixpoint shipped behind a green fuzz (r5 review)
-    alpha = list("abXZ0984.:/?&=#@%+-_[]! \t\n~$")
+    alpha = list("abXZ0984.:/?&=#@%+-_[]! \t\n~$İßＡǅΩ")
     tokens = [":80", ":443", ":80.", ".:80", "utm_a=1", "gclid=2", "?utm_b=", "&&"]
     prefixes = ["http://", "HTTPS://", "ftp://", "", "//", "http:/", "x://", "  http://"]
 
@@ -200,6 +188,5 @@ def test_fuzz_three_engine_parity_and_idempotence(spark):
     assert py == dk
 
     df = spark.createDataFrame(list(enumerate(urls)), "i long, u string")
-    sp = [r.c for r in df.select("i", canonical_url(F.col("u")).alias("c")).orderBy("i").collect()]
     st = [r.c for r in with_canonical_url(df, "u", "c").select("i", "c").orderBy("i").collect()]
-    assert py == sp == st
+    assert py == st
