@@ -20,6 +20,12 @@ from .. import rules
 # Java regex classes (NOTE: \v means "vertical whitespace" in Java — use \x0B
 # to match Python's [ \t\n\r\f\v] exactly; SURVEY.md §7 regex-dialect hazard).
 _WS_CLASS = r" \t\n\r\f\x0B"
+# Every code point Python's str.strip() removes (all 29 str.isspace chars);
+# Spark's trim removes only U+0020.
+_PY_WS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
+    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
+)
 # ASCII punct/symbol only (twin of rules._SYMBOL_RE): CJK/Arabic letters are
 # NOT symbols.
 _SYMBOL_CLASS = r"[!-/:-@\[-`{-~]"
@@ -76,14 +82,18 @@ def heuristics_stage(
     non-space whitespace (e.g. "\\tfoo") gains an empty leading token in
     the fallback. The fallback's own SQL oracle (DuckDB trim, also
     space-only) shares its behavior, so each verification pair stays
-    internally exact.
+    internally exact. With ride-along columns the char sum and the
+    blank-line test strip like ``str.strip()`` instead (``btrim`` over
+    ``_PY_WS``), so every statistic equals ``rules.heuristic_stats``.
     """
     text = F.col(text_col)
     trimmed = F.trim(text)
+    strip = F.trim
     tmp_cols: list[str] = []
     if token_stats_cols is not None:
         n_words = F.col(token_stats_cols[0])
         n_distinct = F.col(token_stats_cols[1])
+        strip = lambda c: F.btrim(c, F.lit(_PY_WS))  # noqa: E731
     else:
         # lowercase once, split once: the token array used for count+distinct
         lwords = F.when(
@@ -94,7 +104,7 @@ def heuristics_stage(
         n_words = F.size(F.col("_lwords"))
         n_distinct = F.size(F.array_distinct(F.col("_lwords")))
     # sum(len(token)) == len(trimmed) - (# whitespace chars inside trimmed)
-    char_sum = F.length(F.regexp_replace(trimmed, rf"[{_WS_CLASS}]", ""))
+    char_sum = F.length(F.regexp_replace(strip(text), rf"[{_WS_CLASS}]", ""))
     if stop_hits_col is not None:
         stop_hits = F.col(stop_hits_col)
     else:
@@ -103,7 +113,7 @@ def heuristics_stage(
     # deliberately INLINE twice: runtime subexpression elimination already
     # dedupes the repeated filter within the Project; a materializing
     # withColumn measured ~20% slower (extra array copy per row)
-    lines = F.filter(F.split(text, r"\n"), lambda ln: F.length(F.trim(ln)) > 0)
+    lines = F.filter(F.split(text, r"\n"), lambda ln: F.length(strip(ln)) > 0)
     n_lines = F.size(lines)
 
     return (

@@ -75,6 +75,10 @@ def quality_filter(
     ``truncate`` key overrides the stage's truncation row by row (P2
     per-row-override semantics, prompt_formatter.py:108-117). Honoured by
     both shapes.
+
+    The lifecycle runner picks the fused shape over ``chunk_input`` staged
+    chunks (its layout pass already did the salted spread) and the split
+    shape over raw input when ``repartition_to`` is set.
     """
     if repartition_to:
         df = extract_stage_narrow(pages, params_col)  # Arrow boundary 1: html -> text

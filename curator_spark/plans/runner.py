@@ -13,15 +13,19 @@ Re-expresses the reference's driver-side lifecycle on Spark:
   base_request_processor.py:252-270); each chunk's output is written to a
   staging dir then atomically renamed with a manifest — the parquet stand-in
   for an Iceberg snapshot commit (SURVEY.md §7 "Resume atomicity without
-  Iceberg").
+  Iceberg"). Before the rename a clean chunk costs ONE Spark action (its
+  metrics aggregate); only a chunk with failed rows runs a quarantine job.
 - **Resume**: on rerun, committed chunks are skipped entirely; a partially
   written chunk is invisible (staging never renamed) and recomputed. ALL
   missing chunks run as ONE job (never a scan per chunk), and with
   ``chunk_input=True`` the input is staged partitioned-by-chunk so a resume
   reads only the missing chunks' files — true scan pruning, the parquet
-  analog of Iceberg partition predicates on url-hash bucket. Row-level
-  parity with the completed-ids anti-join (base_online_request_processor.py:
-  332-336,354) comes free: chunk membership is a pure function of url.
+  analog of Iceberg partition predicates on url-hash bucket. That layout
+  pass also does the ``repartition_to`` salted spread, so fresh runs and
+  resumes over staged chunks score with the fused shuffle-free plan; raw
+  input keeps the split plan. Row-level parity with the completed-ids
+  anti-join (base_online_request_processor.py:332-336,354) comes free:
+  chunk membership is a pure function of url.
 - **Incremental runs**: ``run_quality_filter(..., prior=result)`` scores
   only the input pages absent from a prior run's output (the same
   anti-join) and unions the prior rows into the same chunked commit, so an
@@ -52,12 +56,14 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import lm as _lm_mod
 from .. import rules as _rules_mod
-from ..functions.partitioning import DEFAULT_SALT
+from ..functions.partitioning import DEFAULT_SALT, salted_repartition
 from ..operators import heuristics as _heuristics_mod
 from ..operators import udf_stages as _udf_stages_mod
 from ..operators import verdict as _verdict_mod
@@ -75,9 +81,12 @@ class RunConfig:
     # Stage the input partitioned by chunk before processing (one extra
     # full-input write). Resume then READS ONLY the missing chunks' input
     # files — true scan pruning, the parquet analog of Iceberg partition
-    # predicates on (url-hash bucket). With ``prior=`` only the pages new
-    # since the prior run are staged. Worth it when resumes are expected;
-    # pure overhead for fire-and-forget runs.
+    # predicates on (url-hash bucket). With ``repartition_to`` the salted
+    # spread happens in this layout pass (each chunk dir gets
+    # ``repartition_to`` near-equal files), so every run and resume scores
+    # the staged chunks with the fused shuffle-free plan. With ``prior=``
+    # only the pages new since the prior run are staged. Worth it when
+    # resumes are expected; pure overhead for fire-and-forget runs.
     chunk_input: bool = False
     extra: dict = field(default_factory=dict)
 
@@ -95,16 +104,20 @@ class RunConfig:
         )
 
 
-def run_fingerprint(config: RunConfig) -> str:
-    """Deterministic run id: config + semantics-module sources.
+def run_fingerprint(config: RunConfig, prior: RunResult | None = None) -> str:
+    """Deterministic run id: config + prior run id + semantics-module sources.
 
     Editing any module that decides output rows (rules, lm, pipeline and
     the udf_stages / heuristics / verdict operators it composes)
     invalidates the cache exactly like the reference's dill function-hash
     invalidates on closure edits (tests/unittests/test_caching.py:99-184
-    semantics)."""
+    semantics). An incremental run stages and scores only the pages its
+    prior lacks, so it must never share a run dir with a fresh run of the
+    same config."""
     h = hashlib.sha256()
     h.update(config.to_json().encode())
+    if prior is not None:
+        h.update(b"prior:" + prior.run_id.encode())
     mods = (_rules_mod, _lm_mod, _pipeline_mod, _udf_stages_mod, _heuristics_mod, _verdict_mod)
     for mod in mods:
         h.update(inspect.getsource(mod).encode())
@@ -124,8 +137,27 @@ def _is_committed(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _chunk_bucket(config: RunConfig) -> Column:
+    """Chunk membership: a pure function of url, so it is stable across
+    reruns and retries."""
+    return F.pmod(F.xxhash64(F.col("url"), F.lit(config.salt)), F.lit(config.num_chunks))
+
+
+def _input_layout(config: RunConfig, pages: DataFrame) -> DataFrame:
+    """The rows of the ``input_chunked`` layout pass. With
+    ``repartition_to`` the salted url-hash spread happens HERE, in the one
+    pass that rewrites every input row anyway: each chunk dir then holds
+    ``repartition_to`` near-equal files however host-clustered the input
+    files are, so the filter over staged chunks runs the fused shuffle-free
+    plan on every fresh run and every resume."""
+    staged = pages.withColumn("chunk", _chunk_bucket(config))
+    if config.repartition_to:
+        staged = salted_repartition(staged, "url", config.repartition_to, config.salt)
+    return staged
+
+
 def _ensure_chunked_input(
-    spark: SparkSession, config: "RunConfig", run_dir: str, pages: DataFrame, bucket
+    spark: SparkSession, config: RunConfig, run_dir: str, pages: DataFrame
 ) -> str:
     """Stage the input partitioned by chunk (write-once, atomically
     committed). Chunk membership is a computed column, so the raw input
@@ -137,7 +169,7 @@ def _ensure_chunked_input(
     if not _is_committed(root):
         staging = root + f".staging-{uuid.uuid4().hex[:8]}"
         try:
-            pages.withColumn("chunk", bucket).write.mode("overwrite").partitionBy(
+            _input_layout(config, pages).write.mode("overwrite").partitionBy(
                 "chunk"
             ).parquet(staging)
             for c in range(config.num_chunks):  # empty chunks still need a dir
@@ -178,6 +210,12 @@ def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SCRUB_RULES = ("email", "phone", "ip", "ssn", "toxicity")
+
+# failed_rows columns, fixed so a driver-written empty file and a Spark
+# write read back as one table
+_QUARANTINE_SCHEMA = pa.schema(
+    [("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")), ("error", pa.string())]
+)
 
 
 def _catalog_event(config: "RunConfig", run_id: str, status: str) -> None:
@@ -250,7 +288,7 @@ def run_quality_filter(
     daily-crawl-dump case). Only pages absent from its output are scored;
     its rows are carried into this run's chunks, re-bucketed by this
     config's (salt, num_chunks), so the output equals a fresh full run's."""
-    run_id = run_fingerprint(config)
+    run_id = run_fingerprint(config, prior)
     run_dir = os.path.join(config.output_root, "runs", run_id)
     os.makedirs(run_dir, exist_ok=True)
     manifest_path = os.path.join(run_dir, "manifest.json")
@@ -263,23 +301,11 @@ def run_quality_filter(
     pages = spark.read.parquet(config.input_path)
     if prior is not None:
         pages = resume_remainder(spark, pages, prior)
-    # chunk membership = pure function of url -> stable across reruns/retries
-    bucket = F.pmod(F.xxhash64(F.col("url"), F.lit(config.salt)), F.lit(config.num_chunks))
+    bucket = _chunk_bucket(config)
 
     missing = [c for c in range(config.num_chunks) if not _is_committed(_chunk_dir(run_dir, c))]
     chunks_skipped = config.num_chunks - len(missing)
     chunks_run = 0
-
-    def _commit_metrics(chunk: int, data_dir: str, wall_ms: int) -> None:
-        # deterministic filename -> idempotent under retries (exactly one
-        # metrics row per (run, chunk) no matter how many attempts ran)
-        data = spark.read.parquet(data_dir)
-        _append_table(
-            config.output_root,
-            "metrics",
-            _chunk_metrics(data, run_id, chunk, wall_ms),
-            filename=f"part-{run_id}-c{chunk}.parquet",
-        )
 
     def _fail_catalog() -> None:
         # metrics/quarantine commit BEFORE the chunk rename (so a committed
@@ -304,22 +330,38 @@ def run_quality_filter(
             os.rmdir(run_q)
         _catalog_event(config, run_id, "FAILED")
 
-    def _commit_failed_rows(chunk: int, data_dir: str) -> None:
-        """K3 quarantine: rows whose extract failed land in a persisted
-        ``failed_rows`` table a user can inspect and re-drive (analog of the
-        failed-requests sink, base_request_processor.py:459-488). Hive-style
-        (run_id, chunk) subdir + overwrite mode -> idempotent under retries."""
-        data = spark.read.parquet(data_dir)
-        (
-            data.filter(F.col("error").isNotNull())
-            .select("url", "warc_ts", "error")
-            .write.mode("overwrite")
-            .parquet(
-                os.path.join(
-                    config.output_root, "failed_rows", f"run_id={run_id}", f"chunk={chunk}"
-                )
-            )
+    def _commit_chunk_tables(chunk: int, data_dir: str, wall_ms: int, schema) -> None:
+        """Metrics, then the K3 quarantine, of one staged chunk: rows whose
+        extract failed land in a persisted ``failed_rows`` table a user can
+        inspect and re-drive (analog of the failed-requests sink,
+        base_request_processor.py:459-488). The read takes the schema the
+        runner already holds (no inference job) and the metrics already
+        count the failed rows, so a clean chunk costs ONE Spark action: its
+        empty quarantine file is written by the driver. Deterministic
+        metrics filename + Hive-style (run_id, chunk) quarantine dir
+        replaced whole -> idempotent under retries (exactly one metrics row
+        per (run, chunk, partition) no matter how many attempts ran)."""
+        data = spark.read.schema(schema).parquet(data_dir)
+        metrics = _chunk_metrics(data, run_id, chunk, wall_ms)
+        _append_table(
+            config.output_root, "metrics", metrics, filename=f"part-{run_id}-c{chunk}.parquet"
         )
+        qdir = os.path.join(
+            config.output_root, "failed_rows", f"run_id={run_id}", f"chunk={chunk}"
+        )
+        if metrics["docs_failed"].sum() > 0:
+            (
+                data.filter(F.col("error").isNotNull())
+                .select(*_QUARANTINE_SCHEMA.names)
+                .write.mode("overwrite")
+                .parquet(qdir)
+            )
+        else:
+            shutil.rmtree(qdir, ignore_errors=True)
+            os.makedirs(qdir)
+            pq.write_table(
+                _QUARANTINE_SCHEMA.empty_table(), os.path.join(qdir, "part-00000.parquet")
+            )
 
     # ONE job per attempt covering EVERY missing chunk (fresh run = all of
     # them): output partitioned by chunk, then per-chunk atomic promotion.
@@ -343,7 +385,7 @@ def run_quality_filter(
             in_missing = bucket.isin([int(c) for c in missing])
             if config.chunk_input:
                 # scan pruning: read ONLY the missing chunks' input files
-                in_root = _ensure_chunked_input(spark, config, run_dir, pages, bucket)
+                in_root = _ensure_chunked_input(spark, config, run_dir, pages)
                 dirs = [
                     d
                     for c in missing
@@ -351,7 +393,10 @@ def run_quality_filter(
                     if any(f.endswith(".parquet") for f in os.listdir(d))
                 ]
                 src = (
-                    spark.read.option("basePath", in_root).parquet(*dirs).drop("chunk")
+                    spark.read.schema(pages.schema)
+                    .option("basePath", in_root)
+                    .parquet(*dirs)
+                    .drop("chunk")
                     if dirs
                     else spark.createDataFrame([], pages.schema)
                 )
@@ -359,15 +404,21 @@ def run_quality_filter(
                 src = pages  # fresh run: exactly one full scan, no predicate
             else:
                 src = pages.filter(in_missing)
+            # staged chunks were spread by the layout pass: fused plan, no
+            # shuffle, one Arrow boundary; raw input keeps the split plan
             out = _pipeline_mod.quality_filter(
-                src, repartition_to=config.repartition_to, salt=config.salt
+                src,
+                repartition_to=None if config.chunk_input else config.repartition_to,
+                salt=config.salt,
             )
             if prior is not None:  # carry the prior rows into the same commit
                 done = load_output(spark, prior)
                 out = out.unionByName(done if fresh else done.filter(in_missing))
-            out = out.withColumn("chunk", bucket)
+            schema = out.schema
             staging = os.path.join(run_dir, f"all.staging-{uuid.uuid4().hex[:8]}")
-            out.write.mode("overwrite").partitionBy("chunk").parquet(staging)
+            out.withColumn("chunk", bucket).write.mode("overwrite").partitionBy(
+                "chunk"
+            ).parquet(staging)
             wall_ms = int((time.monotonic() - t0) * 1000)
             for chunk in missing:
                 src_dir = os.path.join(staging, f"chunk={chunk}")
@@ -375,15 +426,12 @@ def run_quality_filter(
                 if not os.path.isdir(src_dir):  # empty chunk: commit empty dir
                     os.makedirs(src_dir, exist_ok=True)
                     # write an empty parquet so readers see the schema
-                    spark.createDataFrame([], out.drop("chunk").schema).write.mode(
-                        "overwrite"
-                    ).parquet(src_dir)
+                    spark.createDataFrame([], schema).write.mode("overwrite").parquet(src_dir)
                 # metrics + quarantine from staging FIRST (both idempotent),
                 # THEN the atomic rename — the rename is the single commit
                 # point, so a chunk can never be committed without its
                 # metrics, and a retry overwrites rather than duplicates
-                _commit_metrics(chunk, src_dir, wall_ms // len(missing))
-                _commit_failed_rows(chunk, src_dir)
+                _commit_chunk_tables(chunk, src_dir, wall_ms // len(missing), schema)
                 open(os.path.join(src_dir, "_SUCCESS"), "a").close()
                 if os.path.exists(cdir):
                     shutil.rmtree(cdir)

@@ -341,3 +341,41 @@ def test_curate_corpus_url_dedup_stage(spark, pages_df):
         r.text for r in curate_corpus(dirty, url_dedup=True).collect()
     )
     assert out == clean_texts
+
+
+def test_py_ws_is_every_python_whitespace():
+    from curator_spark.operators.heuristics import _PY_WS
+
+    assert set(_PY_WS) == {chr(c) for c in range(0x110000) if chr(c).isspace()}
+    assert len(_PY_WS) == len(set(_PY_WS)) == 29
+
+
+# Unicode whitespace the JVM's space-only trim kept: the pipeline heuristics
+# must still equal the python spec (str.strip) on them
+UNICODE_WS_TEXTS = [
+    "alpha beta gamma\n\t\nalpha beta gamma",
+    "one two\n\xa0\none two\nthree",
+    "　　ceci est une phrase de test",
+    "\xa0hello world\xa0",
+]
+
+
+def test_pipeline_heuristics_match_rules_on_unicode_whitespace(spark):
+    """With the scoring UDF's ride-along token counts, heuristics_stage
+    equals ``rules.heuristic_stats`` on every statistic."""
+    from curator_spark import rules
+    from curator_spark.operators.heuristics import heuristics_stage
+
+    texts = UNICODE_WS_TEXTS + [" \x1c plain text \n\x85\nplain text "]
+    rows = [
+        (i, t, *rules.langid_token_stats_batch([t])[0][2:]) for i, t in enumerate(texts)
+    ]
+    df = spark.createDataFrame(rows, "i int, text_t string, stop_hits int, tok_words int, tok_distinct int")
+    got = (
+        heuristics_stage(df, stop_hits_col="stop_hits", token_stats_cols=("tok_words", "tok_distinct"))
+        .orderBy("i")
+        .toPandas()
+    )
+    for t, (_, r) in zip(texts, got.iterrows()):
+        want = rules.heuristic_stats(t)
+        assert {k: r[k] for k in want} == want, repr(t)

@@ -10,6 +10,7 @@ import json
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from curator_spark.datagen import pages_path_for
 from curator_spark.plans import runner as R
@@ -386,3 +387,195 @@ def test_incremental_crash_resume_quarantine(spark, tmp_path, monkeypatch):
     ).toPandas()
     assert list(failed["url"]) == [null_url]
     assert not [d for d in os.listdir(res2.run_dir) if ".staging-" in d]
+
+
+def test_incremental_and_fresh_runs_never_share_a_run_dir(spark, pages_pdf, tmp_path, monkeypatch):
+    """An incremental run that crashed after staging only its new pages
+    must not be picked up by a fresh run of the same config: the fresh run
+    gets its own run id and commits every input row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curator_spark.datagen import PAGES_SCHEMA
+
+    src1, src2 = tmp_path / "i1", tmp_path / "i2"
+    src1.mkdir(), src2.mkdir()
+    pq.write_table(pa.Table.from_pandas(pages_pdf.iloc[:250], schema=PAGES_SCHEMA,
+                                        preserve_index=False), str(src1 / "a.parquet"))
+    pq.write_table(pa.Table.from_pandas(pages_pdf, schema=PAGES_SCHEMA,
+                                        preserve_index=False), str(src2 / "a.parquet"))
+    out_root = str(tmp_path / "out")
+    cfg = R.RunConfig(str(src2), out_root, num_chunks=2, chunk_input=True, max_attempts=1)
+    prior = R.run_quality_filter(spark, R.RunConfig(str(src1), out_root, num_chunks=2))
+
+    real_rename = os.rename
+
+    def deny_chunk_promotion(src, dst):
+        if "/chunk=" in dst.replace("\\", "/"):
+            raise OSError("injected promotion failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(R.os, "rename", deny_chunk_promotion)
+    with pytest.raises(OSError):
+        R.run_quality_filter(spark, cfg, prior=prior)
+    monkeypatch.setattr(R.os, "rename", real_rename)
+
+    fresh = R.run_quality_filter(spark, cfg)
+    out = R.load_output(spark, fresh).toPandas()
+    assert len(out) == len(pages_pdf) and out["url"].is_unique
+    assert fresh.run_id == R.run_fingerprint(cfg) != R.run_fingerprint(cfg, prior)
+
+
+@pytest.fixture(scope="module")
+def host_clustered(tmp_path_factory):
+    """The skew bench's layout at sf0.001 x4: the hot host's 800 pages in
+    one single-row-group file, the other 1,200 over 15 small files."""
+    import importlib.util
+
+    from conftest import SF_DIR
+
+    tool = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools", "skew_bench.py")
+    spec = importlib.util.spec_from_file_location("skew_bench", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod.build_host_clustered(
+        SF_DIR, str(tmp_path_factory.mktemp("skew") / "pages"), 4
+    )
+
+
+def _spy_plans(monkeypatch) -> dict:
+    """Record the layout pass and the filter plan a run builds."""
+    seen: dict = {}
+    real_layout, real_qf = R._input_layout, R._pipeline_mod.quality_filter
+
+    def layout(*a):
+        seen["layout"] = real_layout(*a)
+        return seen["layout"]
+
+    def qf(src, **kw):
+        seen["filter"] = real_qf(src, **kw)
+        return seen["filter"]
+
+    monkeypatch.setattr(R, "_input_layout", layout)
+    monkeypatch.setattr(R._pipeline_mod, "quality_filter", qf)
+    return seen
+
+
+@pytest.mark.parametrize("chunk_input", [True, False])
+def test_runner_plan_shapes(spark, host_clustered, tmp_path, monkeypatch, chunk_input):
+    """With ``chunk_input`` the salted spread is the layout pass's ONE
+    exchange and the filter over the staged chunks is the fused plan (no
+    exchange, one Arrow boundary); without it the filter keeps the split
+    plan's single narrow exchange."""
+    from test_plans import _detail, _n_nodes, _plan
+
+    seen = _spy_plans(monkeypatch)
+    cfg = R.RunConfig(host_clustered, str(tmp_path / "out"), num_chunks=2, repartition_to=4,
+                      chunk_input=chunk_input)
+    R.run_quality_filter(spark, cfg)
+    filt = _plan(seen["filter"])
+    if chunk_input:
+        layout = _plan(seen["layout"])
+        assert _n_nodes(layout, "Exchange") == 1, layout
+        exchange = _detail(layout, "Exchange")
+        assert "hashpartitioning(xxhash64(url#" in exchange and f", {cfg.salt}, 42), 4)" in exchange, exchange
+        assert _n_nodes(filt, "Exchange") == 0, filt
+        assert _n_nodes(filt, "ArrowEvalPython") == 1, filt
+    else:
+        assert "layout" not in seen
+        assert _n_nodes(filt, "Exchange") == 1, filt
+        assert _n_nodes(filt, "ArrowEvalPython") == 2, filt
+
+
+def _output_digest(df) -> tuple:
+    row = df.agg(
+        F.count(F.lit(1)),
+        F.bit_xor(F.xxhash64("url", "keep", "score", "drop_rules", "scrubbed_text",
+                             "extracted_text", "perplexity", "lang_pred")),
+    ).collect()[0]
+    return tuple(row)
+
+
+def test_chunk_input_spreads_hot_host_and_keeps_output(spark, host_clustered, tmp_path):
+    """The layout pass spreads a host-clustered input into near-equal
+    staged files, and staging changes neither the output rows nor the
+    metrics totals."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    out_root = str(tmp_path / "out")
+    runs = {
+        staged: R.run_quality_filter(spark, R.RunConfig(host_clustered, out_root, num_chunks=2,
+                                                        repartition_to=4, chunk_input=staged))
+        for staged in (True, False)
+    }
+    rows = [pq.ParquetFile(f).metadata.num_rows
+            for f in glob.glob(os.path.join(runs[True].run_dir, "input_chunked", "chunk=*", "*.parquet"))]
+    assert len(rows) == 2 * 4 and sum(rows) == 2000
+    assert max(rows) / (sum(rows) / len(rows)) <= 1.25, rows
+
+    assert _output_digest(R.load_output(spark, runs[True])) == _output_digest(R.load_output(spark, runs[False]))
+    totals = {
+        staged: R.metrics_summary(spark, out_root, r.run_id).drop("run_id").collect()[0].asDict()
+        for staged, r in runs.items()
+    }
+    assert totals[True] == totals[False] and totals[True]["docs_seen"] == 2000
+
+
+def test_clean_chunk_commits_with_one_sql_execution(spark, pages_path, tmp_path, monkeypatch):
+    """Per clean chunk the commit is ONE Spark action (the metrics
+    aggregate): no schema-inference read, no quarantine job."""
+    jss = spark._jsparkSession
+
+    def last_execution() -> int:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        execs = jss.sharedState().statusStore().executionsList()
+        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+    marks = []
+    real_rename = os.rename
+
+    def mark_promotion(src, dst):
+        if "/chunk=" in dst.replace("\\", "/"):
+            marks.append(last_execution())
+        return real_rename(src, dst)
+
+    cfg = _config(pages_path, tmp_path / "out1", repartition_to=4, chunk_input=True)
+    start = last_execution()
+    monkeypatch.setattr(R.os, "rename", mark_promotion)
+    R.run_quality_filter(spark, cfg)
+    # layout pass, filter write, then one metrics aggregate per chunk
+    assert [m - start for m in marks] == [3, 4, 5, 6]
+
+
+def test_clean_and_failed_quarantines_read_as_one_table(spark, pages_pdf, tmp_path):
+    """A clean run's driver-written quarantine reads back empty with the
+    same schema as a Spark-written one, and both read together."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curator_spark.datagen import PAGES_SCHEMA
+
+    pdf = pages_pdf.iloc[:100]
+    bad = pdf.iloc[:1].assign(url="https://bad.example/nullhtml", html=None)
+    srcs = {}
+    for name, part in (("clean", pdf), ("failed", pd.concat([pdf, bad], ignore_index=True))):
+        srcs[name] = tmp_path / name
+        srcs[name].mkdir()
+        pq.write_table(pa.Table.from_pandas(part, schema=PAGES_SCHEMA, preserve_index=False),
+                       str(srcs[name] / "a.parquet"))
+    out_root = str(tmp_path / "out")
+    runs = {name: R.run_quality_filter(spark, R.RunConfig(str(src), out_root, num_chunks=2))
+            for name, src in srcs.items()}
+
+    def quarantine(name):
+        return spark.read.parquet(os.path.join(out_root, "failed_rows", f"run_id={runs[name].run_id}"))
+
+    clean, failed = quarantine("clean"), quarantine("failed")
+    assert clean.count() == 0 and failed.count() == 1
+    assert clean.schema == failed.schema
+    both = R.read_table(spark, out_root, "failed_rows").toPandas()
+    assert list(both["url"]) == ["https://bad.example/nullhtml"]
+    assert list(both["run_id"]) == [runs["failed"].run_id]
