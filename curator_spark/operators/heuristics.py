@@ -1,7 +1,8 @@
 """Gopher/C4-style heuristic quality rules as NATIVE Column expressions.
 
-Per the north rule these stay JVM-side (whole-stage codegen; no Python).
-Semantics are pinned to be bit-identical with the pure-python versions in
+Per the north rule the ratios and rules stay JVM-side (whole-stage codegen;
+no Python); in the pipeline their per-document counts arrive from the
+scoring UDF, which has already tokenized each page. Semantics are pinned to be bit-identical with the pure-python versions in
 ``rules.heuristic_stats`` — the oracle runs those, tests assert equality.
 
 Reference analog: the char-census building block
@@ -20,12 +21,6 @@ from .. import rules
 # Java regex classes (NOTE: \v means "vertical whitespace" in Java — use \x0B
 # to match Python's [ \t\n\r\f\v] exactly; SURVEY.md §7 regex-dialect hazard).
 _WS_CLASS = r" \t\n\r\f\x0B"
-# Every code point Python's str.strip() removes (all 29 str.isspace chars);
-# Spark's trim removes only U+0020.
-_PY_WS = (
-    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680\u2000\u2001\u2002\u2003"
-    "\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000"
-)
 # ASCII punct/symbol only (twin of rules._SYMBOL_RE): CJK/Arabic letters are
 # NOT symbols.
 _SYMBOL_CLASS = r"[!-/:-@\[-`{-~]"
@@ -61,60 +56,60 @@ def heuristics_stage(
     """Adds n_chars, n_words, mean_word_len, stop_density, symbol_ratio,
     repeated_line_frac, dup_word_frac.
 
-    Perf note: Spark evaluates higher-order functions (aggregate/filter/
-    transform) interpreted, re-evaluating duplicated subtrees, so the heavy
-    per-token statistics are expressed as single regex scans instead —
-    char_sum as a whitespace-strip length diff, stop_hits as one
-    boundary-anchored regexp_count — which stay inside whole-stage codegen.
-    Only dup_word_frac/repeated_line_frac keep (cheap, single) array ops.
+    Ride-along contract: ``stop_hits_col`` / ``token_stats_cols`` =
+    (n_words_col, n_distinct_col) name counts the scoring UDF already
+    computed in Python over the same text; with ``token_stats_cols`` the
+    stage also reads the UDF's ``tok_chars``, ``n_symbols``, ``n_lines`` and
+    ``n_distinct_lines`` columns (fixed names, ``udf_stages._TEXT_SCORE_SCHEMA``;
+    ``rules.heuristic_counts_batch``). Counts come from Python, so the JVM
+    scans no text: no stopword regex, no split, no strip, no line array.
+    Ratios and everything downstream (thresholds, verdict) stay native
+    Column expressions. The counts follow the python tokenizer
+    (``rules.tokens``) and ``str.strip()``, so every statistic equals
+    ``rules.heuristic_stats`` (pinned by property tests and the frozen hash
+    book).
 
-    ``stop_hits_col`` / ``token_stats_cols`` = (n_words_col,
-    n_distinct_col): when the scoring UDF already tokenized each document
-    (the langid vote computes exactly these numbers), pass the columns and
-    this stage performs NO re-tokenization at all — no stopword alternation
-    regex, no split, no array_distinct (combined ~1.3 s of an 8-core sf0.1
-    run). The ride-along counts follow the PYTHON tokenizer
-    (``rules.tokens``: str.strip of all whitespace) — the same semantics as
-    the golden oracle, so pipeline-vs-golden parity is exact (pinned by
-    equivalence/property tests + the frozen hash book). The JVM fallback
-    below differs on one edge the fixtures (and real extracted text) never
-    hit: Spark's ``trim`` strips only 0x20 spaces, so text with LEADING
-    non-space whitespace (e.g. "\\tfoo") gains an empty leading token in
-    the fallback. The fallback's own SQL oracle (DuckDB trim, also
-    space-only) shares its behavior, so each verification pair stays
-    internally exact. With ride-along columns the char sum and the
-    blank-line test strip like ``str.strip()`` instead (``btrim`` over
-    ``_PY_WS``), so every statistic equals ``rules.heuristic_stats``.
+    Without ride-along columns the stage computes every count itself as
+    native expressions — the registry's ``heuristic_stats`` form, checked
+    against its DuckDB oracle. Spark evaluates higher-order functions
+    interpreted, so the per-token statistics there are single regex scans
+    (char_sum as a whitespace-strip length diff, stop_hits as one
+    boundary-anchored regexp_count) that stay inside whole-stage codegen;
+    only the token and line counts keep (cheap, single) array ops. This
+    form differs from ``rules.tokens`` on one edge: Spark's ``trim`` strips
+    only 0x20 spaces, so text with LEADING non-space whitespace (e.g.
+    "\\tfoo") gains an empty leading token, and a line holding only
+    non-space whitespace counts as non-blank. DuckDB's trim is space-only
+    too, so the pair stays exact.
     """
     text = F.col(text_col)
     trimmed = F.trim(text)
-    strip = F.trim
-    tmp_cols: list[str] = []
     if token_stats_cols is not None:
         n_words = F.col(token_stats_cols[0])
         n_distinct = F.col(token_stats_cols[1])
-        strip = lambda c: F.btrim(c, F.lit(_PY_WS))  # noqa: E731
+        char_sum, n_symbols = F.col("tok_chars"), F.col("n_symbols")
+        n_lines, n_distinct_lines = F.col("n_lines"), F.col("n_distinct_lines")
     else:
         # lowercase once, split once: the token array used for count+distinct
         lwords = F.when(
             F.length(trimmed) == 0, F.array().cast("array<string>")
         ).otherwise(F.split(F.lower(trimmed), rf"[{_WS_CLASS}]+"))
         df = df.withColumn("_lwords", lwords)
-        tmp_cols.append("_lwords")
         n_words = F.size(F.col("_lwords"))
         n_distinct = F.size(F.array_distinct(F.col("_lwords")))
-    # sum(len(token)) == len(trimmed) - (# whitespace chars inside trimmed)
-    char_sum = F.length(F.regexp_replace(strip(text), rf"[{_WS_CLASS}]", ""))
+        # sum(len(token)) == len(trimmed) - (# whitespace chars inside trimmed)
+        char_sum = F.length(F.regexp_replace(trimmed, rf"[{_WS_CLASS}]", ""))
+        n_symbols = F.length(text) - F.length(F.regexp_replace(text, _SYMBOL_CLASS, ""))
+        # deliberately INLINE twice: runtime subexpression elimination already
+        # dedupes the repeated filter within the Project; a materializing
+        # withColumn measured ~20% slower (extra array copy per row)
+        lines = F.filter(F.split(text, r"\n"), lambda ln: F.length(F.trim(ln)) > 0)
+        n_lines = F.size(lines)
+        n_distinct_lines = F.size(F.array_distinct(lines))
     if stop_hits_col is not None:
         stop_hits = F.col(stop_hits_col)
     else:
         stop_hits = F.regexp_count(F.lower(trimmed), F.lit(_STOPWORD_COUNT_RE))
-    n_symbols = F.length(text) - F.length(F.regexp_replace(text, _SYMBOL_CLASS, ""))
-    # deliberately INLINE twice: runtime subexpression elimination already
-    # dedupes the repeated filter within the Project; a materializing
-    # withColumn measured ~20% slower (extra array copy per row)
-    lines = F.filter(F.split(text, r"\n"), lambda ln: F.length(strip(ln)) > 0)
-    n_lines = F.size(lines)
 
     return (
         df.withColumn("n_chars", F.length(text).cast("long"))
@@ -135,7 +130,7 @@ def heuristics_stage(
             "repeated_line_frac",
             F.when(
                 n_lines > 1,
-                F.lit(1.0) - F.size(F.array_distinct(lines)).cast("double") / n_lines,
+                F.lit(1.0) - n_distinct_lines.cast("double") / n_lines,
             ).otherwise(F.lit(0.0)),
         )
         .withColumn(
@@ -145,7 +140,7 @@ def heuristics_stage(
                 F.lit(1.0) - n_distinct.cast("double") / n_words,
             ).otherwise(F.lit(0.0)),
         )
-        .drop(*tmp_cols)
+        .drop("_lwords")
     )
 
 

@@ -17,6 +17,13 @@ score code:
 - salted: ``extract_stage_narrow`` before the shuffle, ``text_score_stage``
   after it, so only narrow text columns cross the wire.
 
+Both shapes score through ``_score_texts``, which also returns the
+per-document counts the Gopher/C4 heuristics need (token count, distinct
+tokens, stopword hits, token characters, ASCII symbols, non-blank and
+distinct non-blank lines). Python tokenizes each page once; the JVM
+heuristics (``heuristics_stage``) turn the counts into ratios and rules
+without scanning the text again.
+
 Both take an optional per-row generation-params column whose ``truncate``
 key overrides the truncation limit (``rules.truncate_limit``).
 """
@@ -52,6 +59,11 @@ _TEXT_SCORE_SCHEMA = StructType(
         StructField("stop_hits", IntegerType()),
         StructField("tok_words", IntegerType()),
         StructField("tok_distinct", IntegerType()),
+        # counts behind the heuristics' ratios (rules.heuristic_counts_batch)
+        StructField("tok_chars", IntegerType()),
+        StructField("n_symbols", IntegerType()),
+        StructField("n_lines", IntegerType()),
+        StructField("n_distinct_lines", IntegerType()),
         StructField("perplexity", DoubleType()),
         StructField("scrubbed_text", StringType()),
         StructField("scrub_email", IntegerType()),
@@ -87,19 +99,26 @@ def _score_texts(trunc: list[str]) -> dict[str, list]:
     langid/scrub stay per-row python but build columns, not row tuples.
     stop_hits / token counts ride along from the langid vote (already
     tokenized) so the JVM never re-tokenizes: no stopword alternation
-    regex, no split, no array_distinct in the downstream heuristics."""
+    regex, no split, no array_distinct in the downstream heuristics. The
+    character and line counts (``rules.heuristic_counts_batch``) ride along
+    too, so the JVM never regex-scans a page: it only divides and compares."""
     if not trunc:  # zip(*[]) cannot unpack; emit empty columns
         return {f: [] for f in _TEXT_SCORE_SCHEMA.fieldNames()}
     lid = rules.langid_token_stats_batch(trunc)
     ppl = get_lm().perplexities(trunc)
     scr = [rules.scrub_text(t) for t in trunc]
     lang_pred, lang_conf, stop_hits, tok_words, tok_distinct = zip(*lid)
+    tok_chars, n_symbols, n_lines, n_distinct_lines = zip(*rules.heuristic_counts_batch(trunc))
     return {
         "lang_pred": lang_pred,
         "lang_conf": lang_conf,
         "stop_hits": stop_hits,
         "tok_words": tok_words,
         "tok_distinct": tok_distinct,
+        "tok_chars": tok_chars,
+        "n_symbols": n_symbols,
+        "n_lines": n_lines,
+        "n_distinct_lines": n_distinct_lines,
         "perplexity": ppl,
         "scrubbed_text": [x[0] for x in scr],
         "scrub_email": [x[1]["email"] for x in scr],

@@ -94,8 +94,20 @@ def quality_filter(
 
 
 def kept_pages(verdicts: DataFrame) -> DataFrame:
-    """The keep side (F5) — what downstream training-data jobs consume."""
-    return verdicts.filter(F.col("keep")).select("url", "warc_ts", "lang_pred", "scrubbed_text")
+    """The keep side (F5) — what downstream training-data jobs consume.
+
+    Filtering on ``keep`` directly lets Catalyst push the verdict below the
+    scoring UDF's Project, and the plan then runs the UDF twice per row:
+    once for the Filter, once for the projected columns. Predicates never
+    cross a Project holding a nondeterministic column, so the filter reads
+    ``keep`` through one (``spark_partition_id() >= 0`` is always true) and
+    each page is scored once on both plan shapes."""
+    kept = F.col("keep") & (F.spark_partition_id() >= 0)
+    return (
+        verdicts.withColumn("_kept", kept)
+        .filter(F.col("_kept"))
+        .select("url", "warc_ts", "lang_pred", "scrubbed_text")
+    )
 
 
 def export_corpus(

@@ -1892,11 +1892,14 @@ def _curate_corpus_exact_sql(
     quality score."""
     quota = budget // k
     wm1 = span_w - 1
-    # The url-dedup window below orders by url0 alone, while the Spark side
-    # (canonical_url_dedup) breaks ties with an xxhash64 over the whole row.
-    # The two agree only because the urls in each canonical group are
-    # distinct strings (_COLLIDE_URL_CASE_SQL emits distinct variants); a
-    # generator that repeats a url within one group would split the twins.
+    # The url-dedup window's last key mirrors canonical_url_dedup's
+    # full-row xxhash64 tiebreak: each makes its engine's order total over
+    # distinct rows, so neither leaves the kept row to scheduling. DuckDB
+    # has no Spark xxhash64, so the oracle breaks url ties on doc_id, the
+    # row's unique key; the two keys pick the same row while the urls in
+    # each canonical group are distinct strings (_COLLIDE_URL_CASE_SQL emits
+    # distinct variants). A generator that repeats a url within one group
+    # would split the twins.
     return f"""
     WITH RECURSIVE u0 AS (
       SELECT doc_id, source, text, {_COLLIDE_URL_CASE_SQL} AS url0
@@ -1905,7 +1908,7 @@ def _curate_corpus_exact_sql(
       SELECT doc_id, source, text,
              row_number() OVER (
                PARTITION BY {url_canonical.canonical_url_sql('url0')}
-               ORDER BY url0) AS rk0
+               ORDER BY url0, doc_id) AS rk0
       FROM u0 WHERE url0 IS NOT NULL),
     base AS MATERIALIZED (
       SELECT doc_id, source, text FROM u0k WHERE rk0 = 1

@@ -433,6 +433,47 @@ def heuristic_stats(text: str) -> dict[str, float]:
     }
 
 
+_ASCII_WS = " \t\n\r\f\v"  # the _WS_RE class: what tokens() splits on
+_ASCII_WS_BYTES = _ASCII_WS.encode()
+# what str.strip() removes from ASCII text (bytes.strip() misses \x1c-\x1f)
+_ASCII_STRIP_BYTES = bytes(c for c in range(128) if chr(c).isspace())
+_SYMBOL_BYTES = bytes(c for c in range(128) if _SYMBOL_RE.match(chr(c)))
+
+
+def heuristic_counts_batch(texts) -> list[tuple[int, int, int, int]]:
+    """Batch twin of the counts behind ``heuristic_stats`` (bit-identical,
+    pinned by property tests): per text (tok_chars, n_symbols, n_lines,
+    n_distinct_lines), where
+
+    - ``tok_chars`` = sum of token lengths (mean_word_len * n_words);
+    - ``n_symbols`` = ASCII punct/symbol code points (symbol_ratio *
+      n_words);
+    - ``n_lines`` / ``n_distinct_lines`` = lines ``str.strip()`` leaves
+      non-empty, and how many of them differ (repeated_line_frac =
+      1 - distinct / lines when lines > 1).
+
+    The scoring UDF ships them next to the langid vote's token counts, so
+    the JVM heuristics compute only ratios and rules from them.
+    ``tokens`` splits the stripped text on ASCII whitespace, and a stripped
+    text neither starts nor ends with whitespace, so its tokens' lengths sum
+    to its length minus its ASCII-whitespace count: no token list is built.
+    ASCII rows take both character counts as C-level ``bytes.translate``
+    deletions; other rows count with ``str.count`` and ``_SYMBOL_RE``."""
+    out = []
+    for t in texts:
+        if t.isascii():
+            b = t.encode("ascii")
+            tok_chars = len(b.strip(_ASCII_STRIP_BYTES).translate(None, _ASCII_WS_BYTES))
+            n_symbols = len(b) - len(b.translate(None, _SYMBOL_BYTES))
+        else:
+            s = t.strip()
+            tok_chars = len(s) - sum(map(s.count, _ASCII_WS))
+            n_symbols = len(_SYMBOL_RE.findall(t))
+        lines = [ln for ln in t.split("\n") if ln.strip()]
+        out.append((tok_chars, n_symbols, len(lines), len(set(lines))))
+    return out
+
+
 # Rule ids are the stable names reported in drop_rules / metrics.
 RULE_NAMES = (
     "len",

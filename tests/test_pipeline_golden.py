@@ -343,13 +343,6 @@ def test_curate_corpus_url_dedup_stage(spark, pages_df):
     assert out == clean_texts
 
 
-def test_py_ws_is_every_python_whitespace():
-    from curator_spark.operators.heuristics import _PY_WS
-
-    assert set(_PY_WS) == {chr(c) for c in range(0x110000) if chr(c).isspace()}
-    assert len(_PY_WS) == len(set(_PY_WS)) == 29
-
-
 # Unicode whitespace the JVM's space-only trim kept: the pipeline heuristics
 # must still equal the python spec (str.strip) on them
 UNICODE_WS_TEXTS = [
@@ -361,18 +354,25 @@ UNICODE_WS_TEXTS = [
 
 
 def test_pipeline_heuristics_match_rules_on_unicode_whitespace(spark):
-    """With the scoring UDF's ride-along token counts, heuristics_stage
-    equals ``rules.heuristic_stats`` on every statistic."""
+    """Texts scored by the scoring UDF (``text_score_stage``) and then
+    ``heuristics_stage`` with its ride-along counts equal
+    ``rules.heuristic_stats`` on every statistic."""
     from curator_spark import rules
     from curator_spark.operators.heuristics import heuristics_stage
+    from curator_spark.operators.udf_stages import text_score_stage
 
-    texts = UNICODE_WS_TEXTS + [" \x1c plain text \n\x85\nplain text "]
-    rows = [
-        (i, t, *rules.langid_token_stats_batch([t])[0][2:]) for i, t in enumerate(texts)
+    texts = UNICODE_WS_TEXTS + [
+        " \x1c plain text \n\x85\nplain text ",
+        "crlf line\r\ncrlf line\r\n\u2028\r\nlast",
+        "\U0001f600 astral \U0001d49c!! ?? \U0001f600 astral \U0001d49c!!",
+        "\x1c",
+        "",
     ]
-    df = spark.createDataFrame(rows, "i int, text_t string, stop_hits int, tok_words int, tok_distinct int")
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text_t string")
     got = (
-        heuristics_stage(df, stop_hits_col="stop_hits", token_stats_cols=("tok_words", "tok_distinct"))
+        heuristics_stage(
+            text_score_stage(df), stop_hits_col="stop_hits", token_stats_cols=("tok_words", "tok_distinct")
+        )
         .orderBy("i")
         .toPandas()
     )

@@ -61,6 +61,34 @@ def test_pipeline_salted_plan_shuffles_narrow_columns_once(pages_df):
     assert "html" not in exchange, exchange
 
 
+@pytest.mark.parametrize("repartition_to", [None, 8])
+def test_pipeline_heuristics_do_not_rescan_text(pages_df, repartition_to):
+    """The scoring UDF ships the heuristics' counts: no Project above its
+    ArrowEvalPython regex-scans, strips or splits the text again (the
+    verdict's ``filter`` lambda over its rule array is allowed)."""
+    import re
+
+    from curator_spark.plans.pipeline import quality_filter
+
+    plan = _plan(quality_filter(pages_df, repartition_to=repartition_to))
+    top_udf = max(int(i) for i in re.findall(r"\((\d+)\) ArrowEvalPython", plan))
+    projects = re.findall(r"\((\d+)\) Project\b(.*?)(?=\n\(\d+\) |\Z)", plan, re.DOTALL)
+    above = [body for i, body in projects if int(i) > top_udf]
+    assert above, plan
+    for body in above:
+        assert not re.search(r"\b(regexp_replace|b?trim|split)\(", body), body
+
+
+@pytest.mark.parametrize("repartition_to,n_udfs", [(None, 1), (8, 2)])
+def test_kept_pages_scores_each_page_once(pages_df, repartition_to, n_udfs):
+    """The keep filter must not be pushed below the scoring UDF's Project:
+    pushed, it runs every UDF a second time for the Filter."""
+    from curator_spark.plans.pipeline import kept_pages, quality_filter
+
+    plan = _plan(kept_pages(quality_filter(pages_df, repartition_to=repartition_to)))
+    assert _n_nodes(plan, "ArrowEvalPython") == n_udfs, plan
+
+
 def test_q3_broadcasts_dims(spark):
     from curator_spark import queries as q
 

@@ -163,6 +163,57 @@ def test_langid_batch_equals_per_row(corpus):
         assert got == want
 
 
+# every str.isspace code point (\x1c-\x1f included), CRLF as one unit,
+# astral/emoji, ASCII punctuation, ASCII and non-ASCII letters
+_COUNT_ALPHABET = (
+    [chr(c) for c in range(0x110000) if chr(c).isspace()]
+    + ["\r\n", "\U0001f600", "\U0001d49c", "\U00020000", "\u200b"]
+    + list("!-/:@[`{~.,") + list("ab Z9") + ["\xe9", "\u0628", "\u4e2d"]
+)
+
+
+def _spec_counts(t):
+    """heuristic_counts_batch's definitions, spelled out over the spec
+    tokenizer."""
+    lines = [ln for ln in t.split("\n") if ln.strip()]
+    return (
+        sum(len(w) for w in rules.tokens_spec(t)),
+        len(rules._SYMBOL_RE.findall(t)),
+        len(lines),
+        len(set(lines)),
+    )
+
+
+def test_heuristic_counts_batch_equals_heuristic_stats():
+    """The scoring UDF's count kernel must reproduce ``heuristic_stats``:
+    the JVM divides these counts exactly as the spec does (mean_word_len =
+    tok_chars / n_words, symbol_ratio = n_symbols / n_words,
+    repeated_line_frac = 1 - distinct / lines)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    text = st.lists(st.sampled_from(_COUNT_ALPHABET), max_size=60).map("".join)
+
+    @given(st.lists(text, max_size=6))
+    @settings(max_examples=300, deadline=None)
+    def check(batch):
+        got = rules.heuristic_counts_batch(batch)
+        assert len(got) == len(batch)
+        for t, (tok_chars, n_symbols, n_lines, n_distinct) in zip(batch, got):
+            assert (tok_chars, n_symbols, n_lines, n_distinct) == _spec_counts(t), repr(t)
+            s = rules.heuristic_stats(t)
+            n_words = s["n_words"]
+            assert s["mean_word_len"] == (tok_chars / n_words if n_words else 0.0), repr(t)
+            assert s["symbol_ratio"] == (n_symbols / n_words if n_words else 0.0), repr(t)
+            assert s["repeated_line_frac"] == (
+                1.0 - n_distinct / n_lines if n_lines > 1 else 0.0
+            ), repr(t)
+
+    check()
+    edge = ["", " ", "\x1c", "\x1cab\x1c", "a\x1cb", "\n\n", "\u3000\n\xa0\n", "\x85x\x85"]
+    assert rules.heuristic_counts_batch(edge) == [_spec_counts(t) for t in edge]
+
+
 def test_scrub_gate_precision_on_fixture(pages_pdf):
     """The scrub fast path's cheap gates must stay NEARLY EXACT on the
     fixture corpus — the measured property that justifies keeping scrub
