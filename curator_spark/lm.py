@@ -50,6 +50,11 @@ _ADD_K = 0.1
 _ENCODE_LUT = np.full(128, _OOV, dtype=np.int64)
 for _c, _i in _CHAR_TO_ID.items():
     _ENCODE_LUT[ord(_c)] = _i
+# The batch scorer's encoder: every codepoint -> symbol id in ONE uint8
+# take, and a trigram (a, b, c) -> flat uint16 index (a*V + b)*V + c.
+_ENCODE_U8 = np.full(0x110000, _OOV, dtype=np.uint8)
+_ENCODE_U8[:128] = _ENCODE_LUT
+assert _V**3 <= 1 << 16, "trigram index must fit uint16"
 
 
 class CharTrigramLM:
@@ -61,6 +66,7 @@ class CharTrigramLM:
         for i in range(2, len(ids)):
             counts[ids[i - 2] * _V + ids[i - 1], ids[i]] += 1.0
         self._logp = np.log(counts / counts.sum(axis=1, keepdims=True))
+        self._logp_flat = self._logp.ravel()
 
     @staticmethod
     def _encode(text: str) -> np.ndarray:
@@ -90,10 +96,13 @@ class CharTrigramLM:
         trigram-scored as ONE concatenated array (amortizing numpy's
         per-call overhead, measured ~6x vs per-row), then each row's
         log-probs are recovered by slicing. Bit-identical to per-row
-        ``perplexity``: a row's trigrams occupy lp[s:e-2] (the two
-        boundary-crossing trigrams per row are simply never read), and
-        np.mean over a contiguous slice runs the same pairwise algorithm as
-        over a standalone array. Sub-batched to bound peak memory."""
+        ``perplexity``: the uint8 table and flat uint16 trigram index pick
+        the same ``_logp`` entries as its int64 ids and 2-D index; a row's
+        trigrams occupy lp[s:e-2] (the two boundary-crossing trigrams per
+        row are simply never read); and np.mean is the pairwise sum (the
+        same over a contiguous slice as over a standalone array) divided by
+        the count, which is what the row's sum / (n - 2) computes.
+        Sub-batched to bound peak memory."""
         out = np.empty(len(texts))
         pos = 0
         chunk: list[str] = []
@@ -108,15 +117,17 @@ class CharTrigramLM:
             if not chunk:
                 break
             lens = [len(c) for c in chunk]
-            ids = self._encode("".join(chunk))
-            if len(ids) >= 3:
-                ctx = ids[:-2] * _V + ids[1:-1]
-                lp = self._logp[ctx, ids[2:]]
-            else:
-                lp = np.empty(0)
+            codes = np.frombuffer("".join(chunk).encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+            ids = _ENCODE_U8.take(codes)
+            tri = ids[:-2].astype(np.uint16)
+            tri *= _V
+            tri += ids[1:-1]
+            tri *= _V
+            tri += ids[2:]
+            lp = self._logp_flat.take(tri)
             s = 0
             for n in lens:
-                out[pos] = math.exp(-lp[s : s + n - 2].mean()) if n >= 3 else 0.0
+                out[pos] = math.exp(-(lp[s : s + n - 2].sum() / (n - 2))) if n >= 3 else 0.0
                 pos += 1
                 s += n
             chunk, chunk_chars = [], 0

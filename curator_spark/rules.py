@@ -75,8 +75,6 @@ def tokens(text: str) -> list[str]:
 # boilerplate shell, so extraction must return that span byte-identically.
 # ---------------------------------------------------------------------------
 
-_P_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
-
 
 def extract_status(html_bytes: bytes | None) -> tuple[str, str | None]:
     """Extract main text with per-row error capture: (text, error_tag).
@@ -87,6 +85,11 @@ def extract_status(html_bytes: bytes | None) -> tuple[str, str | None]:
     request_processor/base_request_processor.py:534-558). Failed rows score
     as empty text (the len rule drops them) AND carry the tag so the runner
     can quarantine them into a failed-rows table (K3).
+
+    The text is the first match of ``<p>(.*?)</p>`` (DOTALL), found with two
+    C-level ``str.find`` calls: the first ``<p>`` and the first ``</p>``
+    after it. If that ``<p>`` has no ``</p>`` after it, no later ``<p>``
+    has one either, so the regex would not match at all.
     """
     if html_bytes is None:
         return "", "null_html"
@@ -94,10 +97,11 @@ def extract_status(html_bytes: bytes | None) -> tuple[str, str | None]:
         html = bytes(html_bytes).decode("utf-8")
     except UnicodeDecodeError:
         return "", "decode_error"
-    m = _P_RE.search(html)
-    if m is None:
+    i = html.find("<p>")
+    j = html.find("</p>", i + 3) if i >= 0 else -1
+    if j < 0:
         return "", "no_marker"
-    return m.group(1), None
+    return html[i + 3 : j], None
 
 
 def extract_text(html_bytes: bytes | None) -> str:
@@ -238,24 +242,40 @@ def _vote_tail(toks: list[str]) -> tuple[str, float, int, int, int]:
     return _LANGS[best_i], best / n_words, en_hits, n_words, n_distinct
 
 
+# The 23 str.isspace code points that str.split() splits on but _WS_RE does
+# not: \x1c-\x1f and the 19 non-ASCII ones (pinned by an exhaustive test).
+_SPLIT_ONLY_WS_RE = re.compile(
+    "[\x1c-\x1f\x85\xa0\u1680\u2000-\u200a\u2028\u2029\u202f\u205f\u3000]"
+)
+
+
 def langid_token_stats_batch(texts) -> list[tuple[str, float, int, int, int]]:
     """Batch twin of ``langid_token_stats`` (bit-identical, pinned by
     equivalence tests): ONE C-level \\x1c-\\x1f separator scan over the
-    concatenated batch replaces a per-row regex gate, and ASCII rows of a
+    concatenated batch replaces a per-row regex gate, and rows of a
     separator-free batch tokenize with inlined ``str.lower().split()``
     (no per-row function-call or gate overhead — the fused UDF's dominant
-    per-row cost). Non-ASCII rows and separator-bearing batches fall back
-    to the per-row spec path row by row."""
+    per-row cost). A non-ASCII row takes that path only when at most half
+    its characters are non-ASCII (so neither script rule can fire) and its
+    lowered text holds no whitespace that ``str.split`` splits on and the
+    spec does not. Other rows, and separator-bearing batches, fall back to
+    the per-row spec path row by row."""
     no_fs = not _has_fs("".join(t for t in texts if t))
     out = []
     for t in texts:
-        if not (no_fs and t and t.isascii()):
+        if not (no_fs and t):
             out.append(langid_token_stats(t))
             continue
-        # inline of the spec's ASCII branch: no script check possible
-        # (isascii => zero ar/zh hits), tokens == lower().split() under the
-        # batch-level separator guard
-        toks = t.lower().split()
+        low = t.lower()
+        if not t.isascii() and (
+            2 * (len(t) - len(t.encode("ascii", "ignore"))) > len(t)
+            or _SPLIT_ONLY_WS_RE.search(low) is not None
+        ):
+            out.append(langid_token_stats(t))
+            continue
+        # inline of the spec's non-script branch: tokens == lower().split()
+        # under the guards above
+        toks = low.split()
         if not toks:
             out.append(("und", 0.0, 0, 0, 0))
             continue
@@ -328,12 +348,37 @@ def scrub_text_sequential(text: str) -> tuple[str, dict[str, int]]:
     return out, counts
 
 
-_DIGIT_RE = re.compile(r"[0-9]")
+# \d, like SCRUB_PATTERNS: Unicode digits (Arabic-Indic, fullwidth) match too.
+_DIGIT_RE = re.compile(r"\d")
 # Necessary condition for ANY phone match: every alternative of the phone
 # pattern ends in \d{3}[-. ]\d{4}. A bare digit gate passes on almost every
 # web page (years, counts); this one skips the expensive phone scan unless
 # a phone-shaped digit group is actually present.
-_PHONE_GATE_RE = re.compile(r"[0-9]{3}[-. ][0-9]{4}")
+_PHONE_GATE_RE = re.compile(r"\d{3}[-. ]\d{4}")
+# Twins of the phone/ip/ssn patterns led by the lookahead each pattern
+# already implies (its first character is one of these), so they match
+# exactly the same spans; the lookahead gives sre a first-character set to
+# skip ahead with instead of trying the lookbehind at every position.
+_PHONE_SCAN_RE = re.compile(r"(?=[+(\d])" + SCRUB_PATTERNS[1][1].pattern)
+_IP_SCAN_RE = re.compile(r"(?=\d)" + SCRUB_PATTERNS[2][1].pattern)
+_SSN_SCAN_RE = re.compile(r"(?=\d)" + SCRUB_PATTERNS[3][1].pattern)
+# casefold(), not lower(): re.IGNORECASE also folds U+017F (long s) onto s,
+# and lower() leaves it as is.
+_TOX_NEEDLES = tuple(w.casefold() for w in TOXICITY_LEXICON)
+
+
+def _digit_gate(text: str) -> bool:
+    """Whether ``text`` holds a \\d digit: ten C-level memchr scans on
+    ASCII text, a regex search otherwise."""
+    if text.isascii():
+        return any(d in text for d in "0123456789")
+    return _DIGIT_RE.search(text) is not None
+
+
+def _tox_gate(text: str) -> bool:
+    """Whether the casefolded text holds a lexicon word: a necessary
+    condition for a ``_TOX_RE`` match."""
+    return any(map(text.casefold().__contains__, _TOX_NEEDLES))
 
 
 def scrub_text(text: str) -> tuple[str, dict[str, int]]:
@@ -344,22 +389,22 @@ def scrub_text(text: str) -> tuple[str, dict[str, int]]:
     a digit for phone/ip/ssn, case-folded substring for toxicity), so clean
     pages — the overwhelming majority at web scale — cost a few C-level
     scans instead of six full regex passes. The guards only skip passes
-    that provably cannot match, so output is byte-identical to
+    that provably cannot match, and the phone/ip/ssn passes run the
+    lookahead-led twins, so output is byte-identical to
     ``scrub_text_sequential``.
     """
     out = text
     counts = {"email": 0, "phone": 0, "ip": 0, "ssn": 0, "toxicity": 0}
     if "@" in out:
         out, counts["email"] = SCRUB_PATTERNS[0][1].subn("<EMAIL>", out)
-    if _DIGIT_RE.search(out) is not None:
+    if _digit_gate(out):
         if _PHONE_GATE_RE.search(out) is not None:
-            out, counts["phone"] = SCRUB_PATTERNS[1][1].subn("<PHONE>", out)
+            out, counts["phone"] = _PHONE_SCAN_RE.subn("<PHONE>", out)
         if "." in out:
-            out, counts["ip"] = SCRUB_PATTERNS[2][1].subn("<IP>", out)
+            out, counts["ip"] = _IP_SCAN_RE.subn("<IP>", out)
         if "-" in out:
-            out, counts["ssn"] = SCRUB_PATTERNS[3][1].subn("<ID>", out)
-    lower = out.lower()
-    if any(w in lower for w in TOXICITY_LEXICON):
+            out, counts["ssn"] = _SSN_SCAN_RE.subn("<ID>", out)
+    if _tox_gate(out):
         out, counts["toxicity"] = _TOX_RE.subn("<TOX>", out)
     return out, counts
 

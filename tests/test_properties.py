@@ -5,6 +5,8 @@ every weird byte sequence eventually appears."""
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -86,6 +88,10 @@ def test_truncate_limit_contract(p):
         assert lim == max(1, min(k, rules.TRUNCATE_CHARS))
 
 
+# the extraction spec: the first lazy <p>...</p> match, newlines included
+_P_MODEL_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
+
+
 @settings(max_examples=200, deadline=None)
 @given(bytes_strategy)
 def test_extract_status_tags(b):
@@ -98,12 +104,51 @@ def test_extract_status_tags(b):
         decodable = False
     if not decodable:
         assert (text, err) == ("", "decode_error")
-    elif rules._P_RE.search(html) is None:
+    elif _P_MODEL_RE.search(html) is None:
         assert (text, err) == ("", "no_marker")
     else:
         assert err is None
     assert rules.extract_text(b) == text
     assert rules.extract_status(None) == ("", "null_html")
+
+
+def _extract_model(b):
+    if b is None:
+        return "", "null_html"
+    try:
+        html = b.decode("utf-8")
+    except UnicodeDecodeError:
+        return "", "decode_error"
+    m = _P_MODEL_RE.search(html)
+    return (m.group(1), None) if m else ("", "no_marker")
+
+
+_MARKER = st.sampled_from(["<p>", "</p>", "<p></p>"])
+_FILLER = st.lists(
+    st.sampled_from(["x", "\xe9", "\n", "\r\n", "<", ">", "/", "p", "<p", "</p", "p>", "</"]),
+    max_size=4,
+).map("".join)
+# 0-3 markers in any order, each followed by filler
+_MARKED = st.tuples(_FILLER, st.lists(st.tuples(_MARKER, _FILLER), max_size=3)).map(
+    lambda t: (t[0] + "".join(m + f for m, f in t[1])).encode("utf-8")
+)
+# an undecodable byte sequence spliced between two marked documents
+_UNDECODABLE = st.tuples(
+    _MARKED, st.sampled_from([b"\xff", b"\x80", b"\xc3", b"\xed\xa0\x80"]), _MARKED
+).map(lambda t: t[0] + t[1] + t[2])
+
+
+@settings(max_examples=400, deadline=None)
+@given(st.one_of(st.none(), _MARKED, _UNDECODABLE))
+def test_extract_status_equals_regex_model(b):
+    """The two-find fast path must equal the first lazy DOTALL match."""
+    assert rules.extract_status(b) == _extract_model(b)
+
+
+def test_extract_status_marker_edges():
+    for b in [b"", b"<p></p>", b"<p>", b"</p>", b"</p><p>", b"<p></p></p>", b"<p>a<p>b</p>",
+              b"</p>x<p>y</p>", b"<p>a</p><p>b</p>", b"<p>\n</p>", b"<p>/p>", b"<p></p\xff"]:
+        assert rules.extract_status(b) == _extract_model(b), b
 
 
 @settings(max_examples=100, deadline=None)

@@ -9,11 +9,22 @@ corpus plus adversarial literals.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
 from curator_spark import rules
 from curator_spark.lm import _CHAR_TO_ID, _OOV, get_lm
+
+# Texts the scrub gates once let through unmasked: \d in SCRUB_PATTERNS
+# matches Unicode digits, and re.IGNORECASE folds U+017F (long s) onto s.
+GATE_LEAKS = [
+    "call \u0665\u0665\u0665-\u0661\u0662\u0663-\u0664\u0665\u0666\u0667",
+    "ip \u0661\u0669\u0662.\u0661\u0666\u0668.\u0661.\u0661",
+    "id \uff16\uff14\uff15-\uff14\uff12-\uff14\uff12\uff14\uff15",
+    "\u017flurword",
+]
 
 ADVERSARIAL = [
     "",
@@ -23,6 +34,7 @@ ADVERSARIAL = [
     "x@y not-an-email @ lone",
     "9.9.9.9.9 300.1.2.3 1.2.3.4",
     "123-45-6789 and (555) 123-4567 or 555.123.4567",
+    "call +1 555.123.4567 or +1-(555)123-4567",
     "BADWORD2 badword2 Badword2, slurword! hateterm?",
     "emailless digits 12345 dashes --- dots ...",
     "le la les et je ne pas une des dans",
@@ -30,7 +42,7 @@ ADVERSARIAL = [
     "这是 一个 中文 句子",
     "the the the the the",
     "word",
-]
+] + GATE_LEAKS
 
 
 @pytest.fixture(scope="module")
@@ -43,6 +55,74 @@ def corpus(pages_pdf):
 def test_scrub_fast_path_equals_sequential(corpus):
     for t in corpus:
         assert rules.scrub_text(t) == rules.scrub_text_sequential(t), t[:80]
+
+
+def test_scrub_masks_gate_leaks():
+    for t in GATE_LEAKS:
+        out, counts = rules.scrub_text(t)
+        assert (out, counts) == rules.scrub_text_sequential(t), t
+        assert sum(counts.values()) == 1, t
+
+
+def test_digit_gate_sees_every_unicode_digit():
+    digits = [chr(c) for c in range(0x110000) if re.fullmatch(r"\d", chr(c))]
+    assert len(digits) > 600
+    for d in digits:
+        assert rules._digit_gate(f"ab {d} cd"), repr(d)
+    assert not rules._digit_gate("no digits \xbd \u2163 here")
+
+
+def test_tox_gate_passes_every_ignorecase_fold():
+    """Every code point re.IGNORECASE matches to a lexicon letter, put in
+    place of that letter, must still pass the toxicity gate."""
+    letters = "".join(sorted(set("".join(rules.TOXICITY_LEXICON))))
+    any_letter = re.compile("[" + re.escape(letters) + "]", re.IGNORECASE)
+    folds = [chr(c) for c in range(0x110000) if any_letter.fullmatch(chr(c))]
+    assert "\u017f" in folds
+    for w in rules.TOXICITY_LEXICON:
+        for i, letter in enumerate(w):
+            for c in folds:
+                if re.fullmatch(re.escape(letter), c, re.IGNORECASE):
+                    t = "x " + w[:i] + c + w[i + 1 :] + " y"
+                    assert rules._TOX_RE.search(t) is not None, repr(t)
+                    assert rules._tox_gate(t), repr(t)
+
+
+# non-ASCII Nd digits: Arabic-Indic, extended Arabic-Indic, Devanagari,
+# Mongolian, fullwidth, mathematical (astral)
+_UNICODE_DIGITS = ["\u0660", "\u0665", "\u06f5", "\u096a", "\u1811", "\uff15", "\U0001d7d8"]
+
+
+def test_scrub_fast_path_property():
+    """Scrub gates and lookahead-led twins against the sequential spec on
+    text dense in ASCII and Unicode digits, the pattern punctuation, long s
+    and mixed-case lexicon words."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    def mixed_case(w):
+        forms = [str.lower, str.upper, lambda c: "\u017f" if c == "s" else c]
+        return st.lists(st.sampled_from(forms), min_size=len(w), max_size=len(w)).map(
+            lambda fs: "".join(f(c) for f, c in zip(fs, w))
+        )
+
+    digits = list("0123456789") + _UNICODE_DIGITS
+    piece = st.one_of(
+        st.sampled_from(list("+()-. @") + ["\u017f", "a", "Z", "co", "\n"]),
+        st.text(alphabet=st.sampled_from(digits), min_size=1, max_size=4),
+        st.sampled_from(rules.TOXICITY_LEXICON).flatmap(mixed_case),
+    )
+
+    @given(st.lists(piece, max_size=30).map("".join))
+    @settings(max_examples=500, deadline=None)
+    def check(t):
+        assert rules.scrub_text(t) == rules.scrub_text_sequential(t)
+
+    check()
+    for d in _UNICODE_DIGITS:
+        for t in (f"{d * 3}-{d * 3}-{d * 4}", f"{d * 3}.{d}.{d * 2}.{d}", f"{d * 3}-{d * 2}-{d * 4}"):
+            assert rules.scrub_text(t) == rules.scrub_text_sequential(t), repr(t)
+            assert rules.scrub_text(t)[0].startswith("<"), repr(t)
 
 
 def test_langid_matches_naive_vote(corpus):
@@ -77,6 +157,27 @@ def test_lm_batch_matches_per_row(corpus):
     # sub-batching boundary: force multiple 2M-char chunks
     wide = [t * 50 for t in corpus[:40] if t] + corpus
     assert lm.perplexities(wide).tolist() == [lm.perplexity(t) for t in wide]
+
+
+def test_lm_batch_bits_equal_per_row_property():
+    """uint8 encoder, flat uint16 trigram gather and sum / (n - 2) against
+    per-row perplexity, compared as float bits: empty and 1-2 char rows,
+    None, astral, lone surrogates, non-ASCII and case-expanding text."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    lm = get_lm()
+    chars = list("ab .,09Z") + ["\xe9", "\u0130", "\xdf", "\u4e2d", "\U0001f600",
+                                "\U0001d49c", "\udcff", "\ud800", "\x7f", "\x80"]
+    text = st.lists(st.sampled_from(chars), max_size=12).map("".join)
+
+    @given(st.lists(st.one_of(st.none(), text), max_size=8))
+    @settings(max_examples=300, deadline=None)
+    def check(batch):
+        want = np.array([lm.perplexity(t or "") for t in batch], dtype=np.float64)
+        assert lm.perplexities(batch).tobytes() == want.tobytes()
+
+    check()
 
 
 def test_lm_batch_handles_none_rows():
@@ -163,6 +264,44 @@ def test_langid_batch_equals_per_row(corpus):
         assert got == want
 
 
+# the str.isspace code points str.split splits on and tokens_spec does not
+_SPLIT_ONLY_WS = [chr(c) for c in range(0x110000) if chr(c).isspace() and chr(c) not in " \t\n\r\f\v"]
+
+
+def test_langid_batch_non_ascii_fast_path_property():
+    """Non-ASCII rows take lower().split() only when no script rule can fire
+    and no split-only whitespace is present; every other row must fall back
+    to the spec."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    assert len(_SPLIT_ONLY_WS) == 23
+    assert [chr(c) for c in range(0x110000) if rules._SPLIT_ONLY_WS_RE.match(chr(c))] == _SPLIT_ONLY_WS
+    words = ["the", "le", "der", "a", "B", "\xe9", "\u0130", "\u4e2d", "\u6587", "\u0628", "\u0639"]
+    no_fs = [c for c in _SPLIT_ONLY_WS if c not in rules._FS_CHARS]
+    text_no_fs = st.lists(st.sampled_from(words + no_fs + [" ", "\n"]), max_size=16).map("".join)
+    text_any = st.lists(st.sampled_from(words + _SPLIT_ONLY_WS + [" "]), max_size=16).map("".join)
+
+    @given(st.one_of(st.lists(text_no_fs, max_size=5), st.lists(text_any, max_size=5)))
+    @settings(max_examples=500, deadline=None)
+    def check(batch):
+        assert rules.langid_token_stats_batch(batch) == [rules.langid_token_stats(t) for t in batch]
+
+    check()
+    edges = [
+        "ab\u4e2d\u6587",        # exactly half non-ASCII: fast path, no script
+        "\u4e2d\u6587a",         # CJK majority
+        "\u0628\u0628\u0628 a",   # Arabic majority
+        "a\u0628 \u0628b",       # exactly half, two tokens
+        "\u0130STANBUL le",     # lower() lengthens the text
+        "\xe9t\xe9 the \xe9",
+    ]
+    for c in _SPLIT_ONLY_WS:
+        edges += [f"\xe9{c}le the", f"{c}\xe9 a{c}", f"the{c}a"]
+    for batch in [edges, [t for t in edges if not rules._has_fs(t)]] + [[t] for t in edges]:
+        assert rules.langid_token_stats_batch(batch) == [rules.langid_token_stats(t) for t in batch]
+
+
 # every str.isspace code point (\x1c-\x1f included), CRLF as one unit,
 # astral/emoji, ASCII punctuation, ASCII and non-ASCII letters
 _COUNT_ALPHABET = (
@@ -230,11 +369,10 @@ def test_scrub_gate_precision_on_fixture(pages_pdf):
     ]
     gates = {
         "email": lambda t: "@" in t,
-        "phone": lambda t: rules._DIGIT_RE.search(t) is not None
-        and rules._PHONE_GATE_RE.search(t) is not None,
-        "ip": lambda t: rules._DIGIT_RE.search(t) is not None and "." in t,
-        "ssn": lambda t: rules._DIGIT_RE.search(t) is not None and "-" in t,
-        "toxicity": lambda t: any(w in t.lower() for w in rules.TOXICITY_LEXICON),
+        "phone": lambda t: rules._digit_gate(t) and rules._PHONE_GATE_RE.search(t) is not None,
+        "ip": lambda t: rules._digit_gate(t) and "." in t,
+        "ssn": lambda t: rules._digit_gate(t) and "-" in t,
+        "toxicity": rules._tox_gate,
     }
     pats = {name: pat for name, pat, _ in rules.SCRUB_PATTERNS}
     pats["toxicity"] = rules._TOX_RE
@@ -250,3 +388,14 @@ def test_scrub_gate_precision_on_fixture(pages_pdf):
             f"matchers (ratio {fired / max(true, 1):.2f})"
         )
         assert true >= 10, f"fixture no longer exercises {name}"
+    # soundness on Unicode digits: the fixture with its digits mapped to
+    # Arabic-Indic and fullwidth forms, which \d matches too
+    unicode_texts = GATE_LEAKS + [
+        t.translate(str.maketrans("0123456789", "".join(chr(z + i) for i in range(10))))
+        for t in texts
+        for z in (0x0660, 0xFF10)
+    ]
+    for name in ("phone", "ip", "ssn"):
+        hits = [t for t in unicode_texts if pats[name].search(t) is not None]
+        assert len(hits) >= 10, f"unicode arm no longer exercises {name}"
+        assert all(gates[name](t) for t in hits), name
