@@ -31,6 +31,13 @@ Layout
 - ``queries``    : the named query registry with DuckDB oracle twins
                    (exposed to the verification driver via
                    ``__spark_entry__``).
+- ``zipgate``    : stat-gated ``zipimporter.invalidate_caches``, installed
+                   here because this is the first module every UDF imports
+                   in a Python worker.
 """
 
+from curator_spark import zipgate as _zipgate
+
 __version__ = "0.1.0"
+
+_zipgate.install()

@@ -10,10 +10,8 @@ import zipfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    out_dir = os.path.join(REPO, "dist")
-    os.makedirs(out_dir, exist_ok=True)
-    out = os.path.join(out_dir, "curator_spark.zip")
+def build(out: str) -> str:
+    """Write every ``curator_spark/**/*.py`` into the zip at ``out``."""
     with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as z:
         pkg = os.path.join(REPO, "curator_spark")
         for root, _dirs, files in os.walk(pkg):
@@ -23,6 +21,13 @@ def main() -> str:
                 if f.endswith(".py"):
                     full = os.path.join(root, f)
                     z.write(full, os.path.relpath(full, REPO))
+    return out
+
+
+def main() -> str:
+    out_dir = os.path.join(REPO, "dist")
+    os.makedirs(out_dir, exist_ok=True)
+    out = build(os.path.join(out_dir, "curator_spark.zip"))
     print(out)
     return out
 
