@@ -111,37 +111,31 @@ def heuristics_stage(
     else:
         stop_hits = F.regexp_count(F.lower(trimmed), F.lit(_STOPWORD_COUNT_RE))
 
-    return (
-        df.withColumn("n_chars", F.length(text).cast("long"))
-        .withColumn("n_words", n_words.cast("long"))
-        .withColumn(
-            "mean_word_len",
-            F.when(n_words > 0, char_sum.cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "stop_density",
-            F.when(n_words > 0, stop_hits.cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "symbol_ratio",
-            F.when(n_words > 0, n_symbols.cast("double") / n_words).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "repeated_line_frac",
-            F.when(
-                n_lines > 1,
-                F.lit(1.0) - n_distinct_lines.cast("double") / n_lines,
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "dup_word_frac",
-            F.when(
-                n_words > 0,
-                F.lit(1.0) - n_distinct.cast("double") / n_words,
-            ).otherwise(F.lit(0.0)),
-        )
-        .drop("_lwords")
-    )
+    stats = {
+        "n_chars": F.length(text).cast("long"),
+        "n_words": n_words.cast("long"),
+        "mean_word_len": F.when(n_words > 0, char_sum.cast("double") / n_words).otherwise(
+            F.lit(0.0)
+        ),
+        "stop_density": F.when(n_words > 0, stop_hits.cast("double") / n_words).otherwise(
+            F.lit(0.0)
+        ),
+        "symbol_ratio": F.when(n_words > 0, n_symbols.cast("double") / n_words).otherwise(
+            F.lit(0.0)
+        ),
+        "repeated_line_frac": F.when(
+            n_lines > 1,
+            F.lit(1.0) - n_distinct_lines.cast("double") / n_lines,
+        ).otherwise(F.lit(0.0)),
+        "dup_word_frac": F.when(
+            n_words > 0,
+            F.lit(1.0) - n_distinct.cast("double") / n_words,
+        ).otherwise(F.lit(0.0)),
+    }
+    # one projection: each chained withColumn re-analyses the whole plan
+    if token_stats_cols is not None:
+        return df.withColumns(stats)
+    return df.withColumns(stats).drop("_lwords")
 
 
 def census_stage(df: DataFrame, text_col: str = "text_t") -> DataFrame:

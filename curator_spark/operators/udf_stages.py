@@ -151,9 +151,12 @@ def _params(params_col: str | None) -> F.Column:
 
 
 def _expand(df: DataFrame, struct: F.Column, schema: StructType) -> DataFrame:
-    """One struct-returning UDF call -> one top-level column per field."""
-    df = df.withColumn("_m", struct)
-    return df.withColumns({f: F.col("_m")[f] for f in schema.fieldNames()}).drop("_m")
+    """One struct-returning UDF call -> one top-level column per field, in
+    one projection. The call repeats per field in the logical plan, but
+    the optimizer collapses projections over a Python UDF and
+    ``ExtractPythonUDFs`` evaluates identical calls once, so the executed
+    plan holds one ``ArrowEvalPython`` either way."""
+    return df.withColumns({f: struct[f] for f in schema.fieldNames()})
 
 
 def add_text_t(df: DataFrame) -> DataFrame:

@@ -49,8 +49,10 @@ def verdict_stage(df: DataFrame) -> DataFrame:
     any_hard = F.array_max(hard) == 1
     raw_score = F.when(any_hard, F.lit(0)).otherwise(F.lit(5) - F.size(fired))
     score = F.least(F.greatest(raw_score, F.lit(0)), F.lit(5))
-    return (
-        df.withColumn("drop_rules", fired)
-        .withColumn("score", score.cast("int"))
-        .withColumn("keep", score >= F.lit(rules.KEEP_THRESHOLD))
+    return df.withColumns(
+        {
+            "drop_rules": fired,
+            "score": score.cast("int"),
+            "keep": score >= F.lit(rules.KEEP_THRESHOLD),
+        }
     )

@@ -13,8 +13,9 @@ Re-expresses the reference's driver-side lifecycle on Spark:
   base_request_processor.py:252-270); each chunk's output is written to a
   staging dir then atomically renamed with a manifest — the parquet stand-in
   for an Iceberg snapshot commit (SURVEY.md §7 "Resume atomicity without
-  Iceberg"). Before the rename a clean chunk costs ONE Spark action (its
-  metrics aggregate); only a chunk with failed rows runs a quarantine job.
+  Iceberg"). After the write, ONE Spark action aggregates the metrics of
+  every chunk the attempt wrote; before its rename a clean chunk then costs
+  no Spark action, and only a chunk with failed rows runs a quarantine job.
 - **Resume**: on rerun, committed chunks are skipped entirely; a partially
   written chunk is invisible (staging never renamed) and recomputed. ALL
   missing chunks run as ONE job (never a scan per chunk), and with
@@ -60,6 +61,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .. import lm as _lm_mod
 from .. import rules as _rules_mod
@@ -238,8 +240,18 @@ def _catalog_event(config: "RunConfig", run_id: str, status: str) -> None:
     )
 
 
-def _chunk_metrics(out: DataFrame, run_id: str, chunk: int, wall_ms: int) -> pd.DataFrame:
-    """Per-spark-partition counters over the committed chunk output."""
+def _attempt_metrics(
+    spark: SparkSession, staging: str, schema: StructType, run_id: str
+) -> pd.DataFrame:
+    """Per-(chunk, spark partition) counters over one attempt's partitioned
+    staging write: every chunk it wrote, in one aggregate. The read takes
+    the held schema plus the partition column (no inference job), as a new
+    StructType, since ``StructType.add`` would mutate the held schema."""
+    staged = (
+        spark.read.schema(StructType(schema.fields + [StructField("chunk", IntegerType())]))
+        .option("basePath", staging)
+        .parquet(staging)
+    )
     aggs = [
         F.count("*").alias("docs_seen"),
         F.sum(F.col("keep").cast("long")).alias("docs_kept"),
@@ -254,14 +266,14 @@ def _chunk_metrics(out: DataFrame, run_id: str, chunk: int, wall_ms: int) -> pd.
     for s in _SCRUB_RULES:
         aggs.append(F.sum(F.col(f"scrub_{s}")).alias(f"scrubs_{s}"))
     pdf = (
-        out.groupBy(F.spark_partition_id().alias("partition_id"))
+        staged.groupBy(
+            F.col("chunk").cast("long").alias("chunk"),
+            F.spark_partition_id().alias("partition_id"),
+        )
         .agg(*aggs)
         .toPandas()
     )
     pdf.insert(0, "run_id", run_id)
-    pdf.insert(1, "chunk", chunk)
-    pdf["wall_ms"] = wall_ms
-    pdf["committed_at"] = datetime.now(timezone.utc)
     return pdf
 
 
@@ -330,28 +342,36 @@ def run_quality_filter(
             os.rmdir(run_q)
         _catalog_event(config, run_id, "FAILED")
 
-    def _commit_chunk_tables(chunk: int, data_dir: str, wall_ms: int, schema) -> None:
+    def _commit_chunk_tables(
+        chunk: int, data_dir: str, metrics: pd.DataFrame, wall_ms: int, schema
+    ) -> None:
         """Metrics, then the K3 quarantine, of one staged chunk: rows whose
         extract failed land in a persisted ``failed_rows`` table a user can
         inspect and re-drive (analog of the failed-requests sink,
-        base_request_processor.py:459-488). The read takes the schema the
-        runner already holds (no inference job) and the metrics already
-        count the failed rows, so a clean chunk costs ONE Spark action: its
-        empty quarantine file is written by the driver. Deterministic
-        metrics filename + Hive-style (run_id, chunk) quarantine dir
-        replaced whole -> idempotent under retries (exactly one metrics row
-        per (run, chunk, partition) no matter how many attempts ran)."""
-        data = spark.read.schema(schema).parquet(data_dir)
-        metrics = _chunk_metrics(data, run_id, chunk, wall_ms)
+        base_request_processor.py:459-488). ``metrics`` is the attempt's
+        one aggregate (``_attempt_metrics``), which already counts the
+        failed rows, so a clean chunk costs NO Spark action: its metrics
+        slice and its empty quarantine file are written by the driver. Only
+        a chunk with failed rows reads its data (with the schema the runner
+        already holds, no inference job) for the quarantine write.
+        Deterministic metrics filename + Hive-style (run_id, chunk)
+        quarantine dir replaced whole -> idempotent under retries (exactly
+        one metrics row per (run, chunk, partition) no matter how many
+        attempts ran)."""
+        mine = metrics[metrics["chunk"] == chunk].assign(
+            wall_ms=wall_ms, committed_at=datetime.now(timezone.utc)
+        )
         _append_table(
-            config.output_root, "metrics", metrics, filename=f"part-{run_id}-c{chunk}.parquet"
+            config.output_root, "metrics", mine, filename=f"part-{run_id}-c{chunk}.parquet"
         )
         qdir = os.path.join(
             config.output_root, "failed_rows", f"run_id={run_id}", f"chunk={chunk}"
         )
-        if metrics["docs_failed"].sum() > 0:
+        if mine["docs_failed"].sum() > 0:
             (
-                data.filter(F.col("error").isNotNull())
+                spark.read.schema(schema)
+                .parquet(data_dir)
+                .filter(F.col("error").isNotNull())
                 .select(*_QUARANTINE_SCHEMA.names)
                 .write.mode("overwrite")
                 .parquet(qdir)
@@ -420,6 +440,7 @@ def run_quality_filter(
                 "chunk"
             ).parquet(staging)
             wall_ms = int((time.monotonic() - t0) * 1000)
+            metrics = _attempt_metrics(spark, staging, schema, run_id)
             for chunk in missing:
                 src_dir = os.path.join(staging, f"chunk={chunk}")
                 cdir = _chunk_dir(run_dir, chunk)
@@ -431,7 +452,7 @@ def run_quality_filter(
                 # THEN the atomic rename — the rename is the single commit
                 # point, so a chunk can never be committed without its
                 # metrics, and a retry overwrites rather than duplicates
-                _commit_chunk_tables(chunk, src_dir, wall_ms // len(missing), schema)
+                _commit_chunk_tables(chunk, src_dir, metrics, wall_ms // len(missing), schema)
                 open(os.path.join(src_dir, "_SUCCESS"), "a").close()
                 if os.path.exists(cdir):
                     shutil.rmtree(cdir)
@@ -473,12 +494,14 @@ def load_output(spark: SparkSession, result: RunResult) -> DataFrame:
     return spark.read.parquet(os.path.join(result.run_dir, "chunk=*"))
 
 
-def cancel_run(config: RunConfig) -> str:
+def cancel_run(config: RunConfig, prior: RunResult | None = None) -> str:
     """Mark an in-flight run CANCELLED in the catalog (batch-cancel analog,
     llm.py:236-244 / base_batch_request_processor.py:739-754). Committed
     chunks stay on disk — a later run of the same fingerprint resumes from
-    them; the catalog records that this attempt was aborted deliberately."""
-    run_id = run_fingerprint(config)
+    them; the catalog records that this attempt was aborted deliberately.
+    ``prior``: the prior run of an incremental run, as passed to
+    ``run_quality_filter``, so the event lands under that run's id."""
+    run_id = run_fingerprint(config, prior)
     _catalog_event(config, run_id, "CANCELLED")
     return run_id
 

@@ -156,15 +156,16 @@ def test_retry_commits_metrics_exactly_once(spark, pages_path, tmp_path, monkeyp
     """A retry after partial promotion must not re-promote or double-count
     committed chunks: exactly one metrics row per chunk, exact totals."""
     calls = {"n": 0}
-    real = R._chunk_metrics
+    real = R._append_table
 
-    def flaky(out, run_id, chunk, wall_ms):
-        calls["n"] += 1
-        if calls["n"] == 2:  # fail while committing the 2nd chunk
-            raise RuntimeError("injected metrics failure")
-        return real(out, run_id, chunk, wall_ms)
+    def flaky(root, name, pdf, filename=None):
+        if name == "metrics":
+            calls["n"] += 1
+            if calls["n"] == 2:  # fail while committing the 2nd chunk
+                raise RuntimeError("injected metrics failure")
+        return real(root, name, pdf, filename)
 
-    monkeypatch.setattr(R, "_chunk_metrics", flaky)
+    monkeypatch.setattr(R, "_append_table", flaky)
     cfg = _config(pages_path, tmp_path / "outr")
     res = R.run_quality_filter(spark, cfg)
     assert res.chunks_run == 4
@@ -207,6 +208,19 @@ def test_cancel_run_records_catalog(spark, pages_path, tmp_path):
     run_id = R.cancel_run(cfg)
     cat = R.read_table(spark, cfg.output_root, "runs_catalog").toPandas()
     assert list(cat[cat["run_id"] == run_id]["status"]) == ["CANCELLED"]
+
+
+def test_cancel_incremental_run_records_its_id(spark, pages_path, tmp_path):
+    """Cancelling an incremental run marks the incremental run's id, not the
+    id of a fresh run of the same config."""
+    cfg1 = _config(pages_path, tmp_path / "outci")
+    res1 = R.RunResult(R.run_fingerprint(cfg1), "", cache_hit=False, chunks_run=4, chunks_skipped=0)
+    cfg2 = _config(pages_path, tmp_path / "outci", salt="next")
+    run_id = R.cancel_run(cfg2, prior=res1)
+    assert run_id == R.run_fingerprint(cfg2, res1) != R.run_fingerprint(cfg2)
+    cat = R.read_table(spark, cfg2.output_root, "runs_catalog").toPandas()
+    assert list(cat[cat["run_id"] == R.run_fingerprint(cfg2, res1)]["status"]) == ["CANCELLED"]
+    assert R.run_fingerprint(cfg2) not in set(cat["run_id"])
 
 
 def test_incremental_catalog_lifecycle(spark, tmp_path):
@@ -267,6 +281,36 @@ def test_metrics_and_catalog(spark, pages_path, tmp_path, golden):
     assert metrics["drops_toxicity"].sum() == fired_tox
     cat = R.read_table(spark, cfg.output_root, "runs_catalog").toPandas()
     assert set(cat["status"]) == {"STARTED", "COMPLETED"}
+
+
+def test_chunk_metrics_count_committed_rows(spark, pages_path, tmp_path):
+    """Each chunk's metrics rows count exactly that chunk's committed rows,
+    after a fresh run and after a resume of two chunks, and the table reads
+    back as one table with an int64 chunk."""
+    import shutil
+
+    from pyspark.sql.types import LongType
+
+    cfg = _config(pages_path, tmp_path / "outm", repartition_to=4, chunk_input=True)
+    run_dir = os.path.join(cfg.output_root, "runs", R.run_fingerprint(cfg))
+
+    def check():
+        metrics = R.read_table(spark, cfg.output_root, "metrics")
+        assert metrics.schema["chunk"].dataType == LongType()
+        seen = metrics.toPandas().groupby("chunk")["docs_seen"].sum().to_dict()
+        committed = {
+            c: spark.read.parquet(R._chunk_dir(run_dir, c)).count() for c in range(4)
+        }
+        assert seen == committed and sum(committed.values()) == 500
+
+    R.run_quality_filter(spark, cfg)
+    check()
+    os.remove(os.path.join(run_dir, "manifest.json"))
+    shutil.rmtree(R._chunk_dir(run_dir, 1))
+    shutil.rmtree(R._chunk_dir(run_dir, 3))
+    res = R.run_quality_filter(spark, cfg)
+    assert res.chunks_run == 2 and res.chunks_skipped == 2
+    check()
 
 
 @pytest.mark.parametrize("prior_chunks", [3, 5])
@@ -524,8 +568,9 @@ def test_chunk_input_spreads_hot_host_and_keeps_output(spark, host_clustered, tm
 
 
 def test_clean_chunk_commits_with_one_sql_execution(spark, pages_path, tmp_path, monkeypatch):
-    """Per clean chunk the commit is ONE Spark action (the metrics
-    aggregate): no schema-inference read, no quarantine job."""
+    """ONE metrics aggregate per attempt covers every chunk, and a clean
+    chunk's commit runs no Spark action: no schema-inference read, no
+    quarantine job."""
     jss = spark._jsparkSession
 
     def last_execution() -> int:
@@ -545,8 +590,8 @@ def test_clean_chunk_commits_with_one_sql_execution(spark, pages_path, tmp_path,
     start = last_execution()
     monkeypatch.setattr(R.os, "rename", mark_promotion)
     R.run_quality_filter(spark, cfg)
-    # layout pass, filter write, then one metrics aggregate per chunk
-    assert [m - start for m in marks] == [3, 4, 5, 6]
+    # layout pass, filter write, one metrics aggregate, then nothing per chunk
+    assert [m - start for m in marks] == [3, 3, 3, 3]
 
 
 def test_clean_and_failed_quarantines_read_as_one_table(spark, pages_pdf, tmp_path):
