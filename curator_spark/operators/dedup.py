@@ -649,100 +649,77 @@ def simhash_near_pairs(
 
 # ---------------------------------------------------------------------------
 # D5. Duplicate-cluster resolution: connected components over near-dup pairs.
+# The edge count picks the path: union-find on the driver for the small
+# graphs verification leaves, two-phase contraction above a measured bound.
 # ---------------------------------------------------------------------------
 
+# Most symmetrized edges (2 per pair) resolved on the driver; set by driver
+# memory, as the driver path is faster at every measured size (BENCH.md).
+_CC_DRIVER_MAX_EDGES = 2_000_000
+_CC_MAX_ROUNDS = 50  # two-phase rounds grow as log n: a 100-chain takes 8
 
-def connected_components(
-    pairs: DataFrame, max_iterations: int = 50, algorithm: str = "propagate"
-) -> DataFrame:
+
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(id_a, id_b) near-dup pairs -> (node, component) with component = the
-    MINIMUM node id reachable through the pair graph. This is what turns
-    pairwise similarity into an actual dedup decision: one survivor (the
-    min id) per transitive duplicate cluster.
+    MINIMUM node id reachable through the pair graph: one survivor (the min
+    id) per transitive duplicate cluster. Ids keep the input's type (``url``
+    strings in the recipe, ``long`` doc ids in the registry). A pair with a
+    NULL endpoint is dropped: a NULL key is not a node.
 
-    ``algorithm``:
+    The edge count, observed by the edge checkpoint's own job, picks one of
+    two paths with identical labels:
 
-    - ``"propagate"`` (default): min-label propagation — each round every
-      node takes the min of its own label and its neighbors' labels; stop
-      when a round changes nothing. Labels only decrease and are bounded
-      below by the component min, so termination is guaranteed in DIAMETER
-      rounds (the cap is a safety net; a graph that exhausts it — diameter
-      > max_iterations — falls back to ``"two_phase"``, the algorithm that
-      shape exists for). Right for near-dup graphs: clusters are tiny and
-      shallow.
-    - ``"two_phase"``: alternating large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-      each round rewires edges toward neighborhood minima, converging in
-      O(log n) rounds regardless of diameter. Right at graph scale or for
-      chain-shaped components (a 10^6-long chain costs 10^6 propagation
-      rounds but ~20 two-phase rounds). Tests pin both algorithms equal on
-      randomized graphs. Raises ``RuntimeError`` if it has not reached its
-      fixpoint after ``max_iterations`` rounds, instead of returning
-      intermediate labels.
+    - at most ``_CC_DRIVER_MAX_EDGES``: Arrow-collect the edges, union-find
+      on the driver (Python's ``str`` order is code-point order, the order
+      of Spark's UTF-8 binary ``min``), return at most
+      ``defaultParallelism`` partitions;
+    - above: ``_cc_two_phase``, which raises ``RuntimeError`` rather than
+      return labels short of its fixpoint after ``_CC_MAX_ROUNDS`` rounds.
 
-    Deterministic: pure function of the pair set (no RNG/ids), min-based
-    resolution independent of shuffle order.
+    Deterministic: a pure function of the pair set.
     """
+    import pandas as pd
+    from pyspark.sql import Observation
+
+    pairs = pairs.filter(F.col("id_a").isNotNull() & F.col("id_b").isNotNull())
+    size = Observation()
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
-        # Materialize the edge set ONCE before iterating. Every subsequent
-        # JOB (labels init, each propagation round, the two-phase rounds,
-        # the final nodes join) re-reads edges; without this checkpoint the
-        # whole upstream pair pipeline — e.g. capped LSH + shingle Jaccard
-        # in near_dup_survivors — recomputes once per job. Measured at 120k
-        # docs (10x stress run): survivors wall 171 s -> ~90 s; the edge
-        # set itself is narrow (two longs per near-dup pair), so the
-        # checkpoint is cheap at any corpus scale.
+        .observe(size, F.count(F.lit(1)).alias("n"))
+        # Materialize the edge set ONCE: every later JOB re-reads it, and
+        # without this the upstream pair pipeline (capped LSH + Jaccard in
+        # near_dup_survivors) recomputes per job — survivors 171 -> ~90 s at
+        # 120k docs (10x stress run).
         .localCheckpoint()
     )
-    if algorithm == "two_phase":
-        return _cc_two_phase(edges, max_iterations)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint()  # eager: materializes AND truncates lineage; the
-        # blocks are released by the context cleaner when the frame is GC'd,
-        # so no explicit persist/unpersist bookkeeping (or leak) is needed
-    )
-    converged = False
-    for _ in range(max_iterations):
-        neigh = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("neigh_lbl"))
-        )
-        new_labels = (
-            labels.join(neigh, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce(F.col("neigh_lbl"), F.col("lbl"))).alias(
-                    "lbl"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # diameter exceeded the cap: propagation would return silently-wrong
-        # intermediate labels; this graph shape is exactly what the log-round
-        # contraction handles
-        return _cc_two_phase(edges, max_iterations)
-    return labels.select("node", F.col("lbl").alias("component"))
+    if size.get["n"] > _CC_DRIVER_MAX_EDGES:
+        return _cc_two_phase(edges)
+    # one direction of each pair suffices; <= keeps self-loops as nodes
+    pdf = edges.filter(F.col("src") <= F.col("dst")).toPandas()
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # a root is its set's min
+    labels = pd.DataFrame({"node": list(parent), "component": [find(n) for n in parent]})
+    spark = edges.sparkSession
+    # Arrow makes one partition per arrow.maxRecordsPerBatch rows
+    return spark.createDataFrame(
+        labels, edges.selectExpr("src AS node", "dst AS component").schema
+    ).coalesce(spark.sparkContext.defaultParallelism)
 
 
-def _cc_two_phase(edges_sym: DataFrame, max_rounds: int) -> DataFrame:
+def _cc_two_phase(edges_sym: DataFrame) -> DataFrame:
     """Alternating large-star/small-star contraction.
 
     Per round on the undirected edge multiset E (kept deduped):
@@ -802,7 +779,7 @@ def _cc_two_phase(edges_sym: DataFrame, max_rounds: int) -> DataFrame:
 
     e = edges_sym
     prev = None
-    for _ in range(max_rounds):
+    for _ in range(_CC_MAX_ROUNDS):
         e = sym(large_star(e))
         # localCheckpoint (eager) truncates the logical plan: without it
         # every round nests the previous round's plan and Catalyst analysis
@@ -819,7 +796,7 @@ def _cc_two_phase(edges_sym: DataFrame, max_rounds: int) -> DataFrame:
         # the labels read off it below would be silently wrong
         raise RuntimeError(
             f"connected_components: two-phase contraction did not converge in "
-            f"{max_rounds} rounds; raise max_iterations"
+            f"{_CC_MAX_ROUNDS} rounds"
         )
     # fixpoint: e (directed larger->smaller after small_star) is a star
     # forest; every non-root node appears once as src with dst = its root

@@ -27,17 +27,6 @@ _SYMBOL_CLASS = r"[!-/:-@\[-`{-~]"
 
 _EN_STOPWORDS = sorted(rules.LANG_LEXICONS["en"])
 
-
-def words_col(text: Column) -> Column:
-    """Whitespace tokens of the trimmed text; [] for blank. NOT exactly
-    rules.tokens — see the leading-whitespace edge documented on
-    heuristics_stage below and textanalysis.jvm_tokens."""
-    trimmed = F.trim(text)
-    return F.when(F.length(trimmed) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(trimmed, rf"[{_WS_CLASS}]+")
-    )
-
-
 # Token-exact stopword counter as ONE regex scan: a stopword counts only as
 # a full whitespace-delimited token (same as membership of the split token
 # in the lexicon), which the zero-width boundary assertions encode. Java

@@ -273,7 +273,9 @@ def _attempt_metrics(
         .agg(*aggs)
         .toPandas()
     )
-    pdf.insert(0, "run_id", run_id)
+    # string dtype: as object, a chunk's empty slice went to parquet as type
+    # null and the metrics table read run_id back as an integer
+    pdf.insert(0, "run_id", pd.Series(run_id, index=pdf.index, dtype="string"))
     return pdf
 
 

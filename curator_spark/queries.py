@@ -450,8 +450,9 @@ def q_embedding_near_dup(spark, sf_dir):
 def q_near_dup_components(spark, sf_dir):
     """Transitive duplicate clusters: connected components (min-label) over
     the exact all-pairs Jaccard>=0.5 graph — oracle-checked against a
-    DuckDB recursive CTE. The iterative Spark operator
-    (dedup.connected_components) is the same one the scale path uses.
+    DuckDB recursive CTE. The operator (dedup.connected_components: a
+    driver union-find up to its edge bound, two-phase contraction above it)
+    is the same one the scale path uses.
     ORACLE-SCALE ONLY as registered: the edge feed is the all-pairs
     ``ngram_jaccard`` (O(n^2)); at corpus scale feed it LSH-verified pairs
     as ``minhash_jaccard_dedup`` / ``near_dup_survivors`` do."""

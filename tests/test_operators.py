@@ -262,33 +262,8 @@ def test_simhash_properties(docs_df):
     assert near[(0, 3)] == 0
 
 
-def test_connected_components_matches_union_find(spark):
-    """Iterative min-label propagation == a classic union-find on the same
-    edges, including a chain (transitivity) and singleton-free semantics."""
-    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20), (5, 30)]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    got = {r.node: r.component for r in dedup.connected_components(df).collect()}
-
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {n: find(n) for n in parent}
-    assert got == want
-    assert got[4] == 1  # chain 1-2-3-4 collapses transitively
-
-
 def _union_find(pairs):
-    parent: dict[int, int] = {}
+    parent: dict = {}
 
     def find(x):
         parent.setdefault(x, x)
@@ -304,11 +279,34 @@ def _union_find(pairs):
     return {n: find(n) for n in parent}
 
 
-def test_two_phase_cc_matches_propagation_on_random_graphs(spark):
-    """Large-star/small-star must agree with plain propagation AND a
-    union-find twin on randomized graphs of varying density, including a
-    100-node chain (the diameter case two-phase exists for: it converges in
-    O(log n) rounds where propagation needs 100)."""
+def _components(df):
+    return {r.node: r.component for r in dedup.connected_components(df).collect()}
+
+
+def _both_paths(monkeypatch, dfs):
+    """Labels of each frame via the driver union-find, then via two-phase
+    contraction (forced by an edge bound of 0)."""
+    driver = [_components(df) for df in dfs]
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    two = [_components(df) for df in dfs]
+    monkeypatch.undo()
+    return driver, two
+
+
+def test_connected_components_matches_union_find(spark):
+    """connected_components == a classic union-find on the same edges,
+    including a chain (transitivity) and singleton-free semantics."""
+    pairs = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20), (5, 30)]
+    got = _components(spark.createDataFrame(pairs, "id_a long, id_b long"))
+    assert got == _union_find(pairs)
+    assert got[4] == 1  # chain 1-2-3-4 collapses transitively
+
+
+def test_cc_paths_match_union_find_on_random_graphs(spark, monkeypatch):
+    """The driver union-find and large-star/small-star contraction both
+    equal a union-find model on randomized graphs of varying density,
+    stars, chains, cliques, isolated pairs and a 100-node chain (the
+    diameter case two-phase exists for: O(log n) rounds)."""
     rng = np.random.RandomState(11)
     cases = []
     for density in (0.5, 1.5, 3.0):
@@ -316,40 +314,82 @@ def test_two_phase_cc_matches_propagation_on_random_graphs(spark):
         m = int(n * density)
         cases.append([(int(rng.randint(n)), int(rng.randint(n))) for _ in range(m)])
     cases.append([(5, 5), (7, 8)])  # self-loop + pair
-    for pairs in cases:
-        pairs = [(a, b) for a, b in pairs if a != b] or [(0, 1)]
-        df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    cases.append([(0, i) for i in range(1, 30)] + [(i, 100) for i in range(40, 50)])  # stars
+    cases.append([(i + 1, i) for i in range(20)] + [(50, 49), (49, 48)])  # chains
+    cases.append([(a, b) for a in range(9, 17) for b in range(9, 17) if a < b])  # clique
+    cases.append([(2 * i + 1, 2 * i) for i in range(25)])  # isolated pairs
+    cases.append([(i, i + 1) for i in range(100)])  # 100-node chain
+    dfs = [spark.createDataFrame(pairs, "id_a long, id_b long") for pairs in cases]
+    driver, two = _both_paths(monkeypatch, dfs)
+    for pairs, got_driver, got_two in zip(cases, driver, two):
         want = _union_find(pairs)
-        prop = {r.node: r.component for r in dedup.connected_components(df).collect()}
-        two = {
-            r.node: r.component
-            for r in dedup.connected_components(
-                df, algorithm="two_phase", max_iterations=30
-            ).collect()
-        }
-        assert prop == want, "propagation drift"
-        assert two == want, "two_phase drift"
-    # the diameter case two-phase exists for: a 100-node chain collapses in
-    # O(log n) rounds (propagation would need 100 — beyond its default cap)
-    chain = [(i, i + 1) for i in range(100)]
-    df = spark.createDataFrame(chain, "id_a long, id_b long")
-    two = {
-        r.node: r.component
-        for r in dedup.connected_components(df, algorithm="two_phase", max_iterations=30).collect()
-    }
-    assert two == {n: 0 for n in range(101)}
+        assert got_driver == want, "driver drift"
+        assert got_two == want, "two_phase drift"
+    assert two[-1] == {n: 0 for n in range(101)}
 
 
-def test_cc_raises_when_rounds_run_out(spark):
+def test_cc_string_keys_match_union_find(spark, monkeypatch):
+    """url-like and non-ASCII string ids: the driver's Python ``min`` (code
+    points) equals Spark's UTF-8 binary ``min``. U+FFFF sorts before
+    U+10000 in both, but after it in UTF-16 (Java ``String``) order."""
+    pairs = [
+        ("\U00010000", "\uffff"),
+        ("https://b\u00fccher.de/a", "https://bucher.de/a"),
+        ("https://bucher.de/a", "https://\u4f8b\u3048.jp/"),
+        ("https://a.com/x/", "https://a.com/x"),
+        ("B", "a"),
+        ("\u00e9t\u00e9", "\U0001f600"),
+        ("\U0001f600", "zz"),
+    ]
+    df = spark.createDataFrame(pairs, "id_a string, id_b string")
+    (driver,), (two,) = _both_paths(monkeypatch, [df])
+    want = _union_find(pairs)
+    assert driver == want
+    assert two == want
+    assert driver["\U00010000"] == "\uffff"
+    assert driver["\U0001f600"] == "zz"
+    assert driver["https://\u4f8b\u3048.jp/"] == "https://bucher.de/a"
+
+
+def test_cc_drops_null_endpoints(spark, monkeypatch):
+    """A pair with a NULL endpoint is no edge and its other endpoint no
+    node, on both paths; near_dup_survivors over a NULL-key document
+    completes, and that document survives (the anti-join never matches a
+    NULL key)."""
+    pairs = [(None, "a"), ("a", "b"), (None, None), ("c", None), ("d", "b")]
+    df = spark.createDataFrame(pairs, "id_a string, id_b string")
+    (driver,), (two,) = _both_paths(monkeypatch, [df])
+    assert driver == two == {"a": "a", "b": "a", "d": "a"}
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    docs = spark.createDataFrame(
+        [("u0", base + " today"), ("u1", base + " tonight"), (None, base + " again"),
+         (None, "completely different content about spark partitioning")],
+        "url string, text string",
+    )
+    out = [r.url for r in dedup.near_dup_survivors(docs, key="url").collect()]
+    assert sorted(out, key=str) == sorted(["u0", None, None], key=str)
+
+
+def test_cc_driver_result_partitions(spark):
+    """The driver path returns at most defaultParallelism partitions: Arrow
+    would make one per arrow.maxRecordsPerBatch rows."""
+    pairs = spark.range(5000).select(
+        F.col("id").alias("id_a"), (F.col("id") + 10_000).alias("id_b")
+    )
+    comp = dedup.connected_components(pairs)
+    assert comp.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    assert comp.count() == 10_000
+
+
+def test_cc_raises_when_rounds_run_out(spark, monkeypatch):
     """A 100-node chain needs 8 two-phase rounds: a smaller cap must raise,
-    not return labels short of the fixpoint — called directly and via the
-    propagate path's two-phase fallback."""
+    not return labels short of the fixpoint."""
     chain = [(i, i + 1) for i in range(100)]
     df = spark.createDataFrame(chain, "id_a long, id_b long")
-    with pytest.raises(RuntimeError, match="raise max_iterations"):
-        dedup.connected_components(df, algorithm="two_phase", max_iterations=2)
-    with pytest.raises(RuntimeError, match="raise max_iterations"):
-        dedup.connected_components(df, max_iterations=3)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="did not converge in 2 rounds"):
+        dedup.connected_components(df)
 
 
 def test_near_dup_survivors_end_to_end(spark):

@@ -624,3 +624,29 @@ def test_clean_and_failed_quarantines_read_as_one_table(spark, pages_pdf, tmp_pa
     both = R.read_table(spark, out_root, "failed_rows").toPandas()
     assert list(both["url"]) == ["https://bad.example/nullhtml"]
     assert list(both["run_id"]) == [runs["failed"].run_id]
+
+
+def test_empty_chunk_metrics_keep_string_run_id(spark, pages_pdf, tmp_path):
+    """A chunk with no rows still writes its metrics slice with a string
+    ``run_id``: an empty slice's object column once went to parquet as
+    type null, the metrics table then read ``run_id`` as an integer, and
+    ``metrics_summary`` failed to cast the run id."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curator_spark.datagen import PAGES_SCHEMA
+
+    cfg = R.RunConfig(str(tmp_path / "in"), str(tmp_path / "out"), num_chunks=3)
+    pdf = pages_pdf.iloc[:40]
+    buckets = spark.createDataFrame(pdf[["url"]]).select("url", R._chunk_bucket(cfg).alias("c"))
+    # pages of chunk 1 only: chunk 0's metrics file, the first one read, is empty
+    urls = [r.url for r in buckets.filter("c = 1").limit(2).collect()]
+    os.makedirs(cfg.input_path)
+    pq.write_table(
+        pa.Table.from_pandas(pdf[pdf["url"].isin(urls)], schema=PAGES_SCHEMA, preserve_index=False),
+        os.path.join(cfg.input_path, "a.parquet"),
+    )
+    res = R.run_quality_filter(spark, cfg)
+    assert dict(R.read_table(spark, cfg.output_root, "metrics").dtypes)["run_id"] == "string"
+    rows = R.metrics_summary(spark, cfg.output_root, res.run_id).collect()
+    assert [(r.run_id, r.docs_seen) for r in rows] == [(res.run_id, 2)]
