@@ -840,25 +840,10 @@ def near_dup_survivors(
 # ---------------------------------------------------------------------------
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array<float/double> columns, computed in
-    double with a sequential fold (deterministic, matches the single-node
-    oracle's accumulation order). SPEC ONLY: Spark interprets higher-order
-    functions and re-evaluates duplicated subtrees, so this expression is
-    banned from hot paths (CLAUDE.md invariant) — use ``cosine_scores``
-    (bit-identical, vectorized) there; tests pin the two equal."""
-    da = F.transform(a, lambda x: x.cast("double"))
-    db = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
-    na = F.sqrt(F.aggregate(da, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(db, F.lit(0.0), lambda acc, v: acc + v * v))
-    return dot / (na * nb)
-
-
 def _seq_dot(a, b):
     """Sequential-order double dot product: cumsum accumulates left-to-right
-    like the SQL fold (numpy's sum/dot use pairwise/SIMD orders, which are
-    NOT bit-identical for floats)."""
+    like DuckDB's ``list_cosine_similarity`` oracle (numpy's sum/dot use
+    pairwise/SIMD orders, which are NOT bit-identical for floats)."""
     prod = a * b
     return prod.cumsum(axis=-1)[..., -1]
 
@@ -886,11 +871,12 @@ def _as_vec(v, dim: int | None = None):
 
 
 def cosine_scores(a: Column, b: Column) -> Column:
-    """Vectorized cosine (Arrow-batched pandas UDF): bit-identical to the
-    ``cosine`` fold spec — elementwise double products accumulated in
-    sequential order via cumsum, IEEE sqrt/divide — at codegen-class speed
-    (the interpreted HOF fold measured ~7x slower end-to-end in the
-    similarity_topk driver bench)."""
+    """Vectorized cosine (Arrow-batched pandas UDF): a sequential double
+    fold — elementwise double products accumulated in order via cumsum,
+    IEEE sqrt/divide — bit-identical to DuckDB's ``list_cosine_similarity``
+    oracle, at codegen-class speed (an interpreted higher-order-function
+    fold measured ~7x slower end-to-end in the similarity_topk driver
+    bench)."""
     import numpy as np
     import pandas as pd
 
@@ -975,7 +961,7 @@ def embedding_near_dup_pairs(
     constants. For sub-quadratic near-dup at corpus scale, block by
     sign-LSH / simhash first (similarity.lsh_ann, simhash_near_pairs).
 
-    Scoring is bit-identical to ``cosine_scores``'s fold spec (sequential
+    Scoring is bit-identical to ``cosine_scores`` (sequential
     cumsum dots, IEEE sqrt/divide; degenerate rows — null / null-element /
     dim-mismatched vs their partner — can never pass the threshold, exactly
     like the NULL cosines of the pair form). ``n_blocks``: pick ≈

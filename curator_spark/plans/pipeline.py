@@ -49,7 +49,7 @@ OUTPUT_COLUMNS = [
     "drop_rules",
     "score",
     "keep",
-    "error",  # per-row extract error tag (null = ok) feeding the K3 quarantine
+    "error",  # per-row extract error tag (null = ok) read by the K3 failed_rows view
 ]
 
 

@@ -14,8 +14,9 @@ Re-expresses the reference's driver-side lifecycle on Spark:
   staging dir then atomically renamed with a manifest — the parquet stand-in
   for an Iceberg snapshot commit (SURVEY.md §7 "Resume atomicity without
   Iceberg"). After the write, ONE Spark action aggregates the metrics of
-  every chunk the attempt wrote; before its rename a clean chunk then costs
-  no Spark action, and only a chunk with failed rows runs a quarantine job.
+  every chunk the attempt wrote; each chunk's slice is then a driver write
+  inside the chunk's own staging dir, so the rename is the ONE commit
+  point for its rows and its counters.
 - **Resume**: on rerun, committed chunks are skipped entirely; a partially
   written chunk is invisible (staging never renamed) and recomputed. ALL
   missing chunks run as ONE job (never a scan per chunk), and with
@@ -30,13 +31,15 @@ Re-expresses the reference's driver-side lifecycle on Spark:
 - **Incremental runs**: ``run_quality_filter(..., prior=result)`` scores
   only the input pages absent from a prior run's output (the same
   anti-join) and unions the prior rows into the same chunked commit, so an
-  incremental run crashes, resumes, quarantines and records metrics exactly
-  like a fresh one.
-- **Failed-row quarantine**: rows with a per-row extract error commit into a
-  ``failed_rows`` table (url, warc_ts, error) partitioned by (run, chunk) —
-  the failed-requests sink analog (base_request_processor.py:459-488).
+  incremental run crashes, resumes and records metrics exactly like a
+  fresh one.
+- **Failed rows**: rows with a per-row extract error commit with the rest
+  of their chunk, tagged in ``error``; ``failed_rows`` is the (url,
+  warc_ts, error) view over them — the failed-requests sink analog
+  (base_request_processor.py:459-488).
 - **Metrics + lineage**: per (run, chunk, spark partition) counter rows —
-  docs seen/kept/dropped/scrubbed per rule — appended to a metrics table
+  docs seen/kept/dropped/failed, per-rule drops and scrubs — in each
+  committed chunk's ``_metrics`` dir, read back by ``metrics_table``
   (analog of the status trackers, online_status_tracker.py:44-93).
 - **Run catalog**: one row per run in a ``runs`` table (analog of the SQLite
   metadata DB, db.py:61-137).
@@ -46,6 +49,7 @@ Re-expresses the reference's driver-side lifecycle on Spark:
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import inspect
 import json
@@ -53,12 +57,10 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -90,7 +92,6 @@ class RunConfig:
     # only the pages new since the prior run are staged. Worth it when
     # resumes are expected; pure overhead for fire-and-forget runs.
     chunk_input: bool = False
-    extra: dict = field(default_factory=dict)
 
     def to_json(self) -> str:
         return json.dumps(
@@ -100,7 +101,6 @@ class RunConfig:
                 "repartition_to": self.repartition_to,
                 "salt": self.salt,
                 "chunk_input": self.chunk_input,
-                "extra": self.extra,
             },
             sort_keys=True,
         )
@@ -186,21 +186,16 @@ def _ensure_chunked_input(
     return root
 
 
-def _append_table(root: str, name: str, pdf: pd.DataFrame, filename: str | None = None) -> None:
-    """Append-only driver-side table (metrics / runs catalog): one parquet
-    file per append, read back as a directory dataset. A deterministic
-    ``filename`` makes the append IDEMPOTENT (a retry overwrites its own
-    earlier file instead of duplicating the row) — used for per-chunk
-    metrics so crash/retry can never double-count."""
+def _append_table(root: str, name: str, pdf: pd.DataFrame) -> None:
+    """Append-only driver-side table (a chunk's metrics / runs catalog): one
+    parquet file per append, read back as a directory dataset."""
     d = os.path.join(root, name)
     os.makedirs(d, exist_ok=True)
     pdf = pdf.copy()
     for col in pdf.columns:  # Spark's parquet reader rejects TIMESTAMP(NANOS)
         if str(pdf[col].dtype).startswith("datetime64[ns"):
             pdf[col] = pdf[col].astype("datetime64[us, UTC]")
-    pdf.to_parquet(
-        os.path.join(d, filename or f"part-{uuid.uuid4().hex}.parquet"), index=False
-    )
+    pdf.to_parquet(os.path.join(d, f"part-{uuid.uuid4().hex}.parquet"), index=False)
 
 
 def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
@@ -212,12 +207,6 @@ def read_table(spark: SparkSession, root: str, name: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _SCRUB_RULES = ("email", "phone", "ip", "ssn", "toxicity")
-
-# failed_rows columns, fixed so a driver-written empty file and a Spark
-# write read back as one table
-_QUARANTINE_SCHEMA = pa.schema(
-    [("url", pa.string()), ("warc_ts", pa.timestamp("us", tz="UTC")), ("error", pa.string())]
-)
 
 
 def _catalog_event(config: "RunConfig", run_id: str, status: str) -> None:
@@ -240,6 +229,22 @@ def _catalog_event(config: "RunConfig", run_id: str, status: str) -> None:
     )
 
 
+def _counters() -> dict[str, Column]:
+    """The per-run counters, each a long aggregate over output rows."""
+    counters = {
+        "docs_seen": F.count("*"),
+        "docs_kept": F.sum(F.col("keep").cast("long")),
+        "docs_dropped": F.sum((~F.col("keep")).cast("long")),
+        "docs_flagged": F.sum((F.size("drop_rules") > 0).cast("long")),
+        "docs_failed": F.sum(F.col("error").isNotNull().cast("long")),
+    }
+    for r in _rules_mod.RULE_NAMES:
+        counters[f"drops_{r}"] = F.sum(F.array_contains("drop_rules", r).cast("long"))
+    for s in _SCRUB_RULES:
+        counters[f"scrubs_{s}"] = F.sum(F.col(f"scrub_{s}"))
+    return counters
+
+
 def _attempt_metrics(
     spark: SparkSession, staging: str, schema: StructType, run_id: str
 ) -> pd.DataFrame:
@@ -252,25 +257,12 @@ def _attempt_metrics(
         .option("basePath", staging)
         .parquet(staging)
     )
-    aggs = [
-        F.count("*").alias("docs_seen"),
-        F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-        F.sum((~F.col("keep")).cast("long")).alias("docs_dropped"),
-        F.sum((F.size("drop_rules") > 0).cast("long")).alias("docs_flagged"),
-        F.sum(F.col("error").isNotNull().cast("long")).alias("docs_failed"),
-    ]
-    for r in _rules_mod.RULE_NAMES:
-        aggs.append(
-            F.sum(F.array_contains("drop_rules", r).cast("long")).alias(f"drops_{r}")
-        )
-    for s in _SCRUB_RULES:
-        aggs.append(F.sum(F.col(f"scrub_{s}")).alias(f"scrubs_{s}"))
     pdf = (
         staged.groupBy(
             F.col("chunk").cast("long").alias("chunk"),
             F.spark_partition_id().alias("partition_id"),
         )
-        .agg(*aggs)
+        .agg(*[agg.alias(name) for name, agg in _counters().items()])
         .toPandas()
     )
     # string dtype: as object, a chunk's empty slice went to parquet as type
@@ -321,77 +313,13 @@ def run_quality_filter(
     chunks_skipped = config.num_chunks - len(missing)
     chunks_run = 0
 
-    def _fail_catalog() -> None:
-        # metrics/quarantine commit BEFORE the chunk rename (so a committed
-        # chunk can never lack them); the inverse guarantee is restored here:
-        # on terminal failure, drop the provisional rows of chunks that never
-        # committed (deterministic filenames make this a targeted delete)
-        for c in range(config.num_chunks):
-            if not _is_committed(_chunk_dir(run_dir, c)):
-                m = os.path.join(
-                    config.output_root, "metrics", f"part-{run_id}-c{c}.parquet"
-                )
-                if os.path.exists(m):
-                    os.remove(m)
-                shutil.rmtree(
-                    os.path.join(
-                        config.output_root, "failed_rows", f"run_id={run_id}", f"chunk={c}"
-                    ),
-                    ignore_errors=True,
-                )
-        run_q = os.path.join(config.output_root, "failed_rows", f"run_id={run_id}")
-        if os.path.isdir(run_q) and not os.listdir(run_q):
-            os.rmdir(run_q)
-        _catalog_event(config, run_id, "FAILED")
-
-    def _commit_chunk_tables(
-        chunk: int, data_dir: str, metrics: pd.DataFrame, wall_ms: int, schema
-    ) -> None:
-        """Metrics, then the K3 quarantine, of one staged chunk: rows whose
-        extract failed land in a persisted ``failed_rows`` table a user can
-        inspect and re-drive (analog of the failed-requests sink,
-        base_request_processor.py:459-488). ``metrics`` is the attempt's
-        one aggregate (``_attempt_metrics``), which already counts the
-        failed rows, so a clean chunk costs NO Spark action: its metrics
-        slice and its empty quarantine file are written by the driver. Only
-        a chunk with failed rows reads its data (with the schema the runner
-        already holds, no inference job) for the quarantine write.
-        Deterministic metrics filename + Hive-style (run_id, chunk)
-        quarantine dir replaced whole -> idempotent under retries (exactly
-        one metrics row per (run, chunk, partition) no matter how many
-        attempts ran)."""
-        mine = metrics[metrics["chunk"] == chunk].assign(
-            wall_ms=wall_ms, committed_at=datetime.now(timezone.utc)
-        )
-        _append_table(
-            config.output_root, "metrics", mine, filename=f"part-{run_id}-c{chunk}.parquet"
-        )
-        qdir = os.path.join(
-            config.output_root, "failed_rows", f"run_id={run_id}", f"chunk={chunk}"
-        )
-        if mine["docs_failed"].sum() > 0:
-            (
-                spark.read.schema(schema)
-                .parquet(data_dir)
-                .filter(F.col("error").isNotNull())
-                .select(*_QUARANTINE_SCHEMA.names)
-                .write.mode("overwrite")
-                .parquet(qdir)
-            )
-        else:
-            shutil.rmtree(qdir, ignore_errors=True)
-            os.makedirs(qdir)
-            pq.write_table(
-                _QUARANTINE_SCHEMA.empty_table(), os.path.join(qdir, "part-00000.parquet")
-            )
-
     # ONE job per attempt covering EVERY missing chunk (fresh run = all of
     # them): output partitioned by chunk, then per-chunk atomic promotion.
     # Per-chunk jobs would scan the input once per chunk — at 100 TB that is
     # num_chunks full scans. The missing list is recomputed from committed
     # state at the top of every attempt, so a retry after a partial
     # promotion never re-runs, re-promotes, or double-counts a chunk that
-    # already committed (idempotent metrics/quarantine appends).
+    # already committed (its metrics committed with it).
     attempt = 0
     while True:
         missing = [
@@ -447,14 +375,19 @@ def run_quality_filter(
                 src_dir = os.path.join(staging, f"chunk={chunk}")
                 cdir = _chunk_dir(run_dir, chunk)
                 if not os.path.isdir(src_dir):  # empty chunk: commit empty dir
-                    os.makedirs(src_dir, exist_ok=True)
                     # write an empty parquet so readers see the schema
                     spark.createDataFrame([], schema).write.mode("overwrite").parquet(src_dir)
-                # metrics + quarantine from staging FIRST (both idempotent),
-                # THEN the atomic rename — the rename is the single commit
-                # point, so a chunk can never be committed without its
-                # metrics, and a retry overwrites rather than duplicates
-                _commit_chunk_tables(chunk, src_dir, metrics, wall_ms // len(missing), schema)
+                # the chunk's metrics slice goes INSIDE its staging dir
+                # (readers of the rows skip ``_``-prefixed dirs), so the
+                # rename below commits rows and counters together and a
+                # chunk that never commits leaves no counters behind
+                _append_table(
+                    src_dir,
+                    "_metrics",
+                    metrics[metrics["chunk"] == chunk].assign(
+                        wall_ms=wall_ms // len(missing), committed_at=datetime.now(timezone.utc)
+                    ),
+                )
                 open(os.path.join(src_dir, "_SUCCESS"), "a").close()
                 if os.path.exists(cdir):
                     shutil.rmtree(cdir)
@@ -462,7 +395,7 @@ def run_quality_filter(
                 chunks_run += 1
         except Exception:
             if attempt >= config.max_attempts:
-                _fail_catalog()
+                _catalog_event(config, run_id, "FAILED")
                 raise
         finally:
             # promoted chunks were renamed OUT of staging; whatever remains
@@ -496,6 +429,16 @@ def load_output(spark: SparkSession, result: RunResult) -> DataFrame:
     return spark.read.parquet(os.path.join(result.run_dir, "chunk=*"))
 
 
+def failed_rows(spark: SparkSession, result: RunResult) -> DataFrame:
+    """The committed rows whose per-row extract failed, with their error tag
+    (``null_html`` | ``decode_error`` | ``no_marker``) — the failed-requests
+    sink (base_request_processor.py:459-488) as a view over the output, so
+    it follows exactly the chunks that committed."""
+    return load_output(spark, result).filter(F.col("error").isNotNull()).select(
+        "url", "warc_ts", "error"
+    )
+
+
 def cancel_run(config: RunConfig, prior: RunResult | None = None) -> str:
     """Mark an in-flight run CANCELLED in the catalog (batch-cancel analog,
     llm.py:236-244 / base_batch_request_processor.py:739-754). Committed
@@ -508,13 +451,23 @@ def cancel_run(config: RunConfig, prior: RunResult | None = None) -> str:
     return run_id
 
 
+def metrics_table(spark: SparkSession, output_root: str, run_id: str | None = None) -> DataFrame:
+    """The per-(run, chunk, spark partition) metrics rows of every committed
+    chunk of ``run_id`` (all runs when None). A run with no committed chunk
+    reads as an empty frame of the counter columns."""
+    path = os.path.join(output_root, "runs", run_id or "*", "chunk=*", "_metrics")
+    if not glob.glob(path):
+        cols = ["run_id string", "chunk long", "partition_id int"]
+        cols += [f"{c} long" for c in _counters()] + ["wall_ms long", "committed_at timestamp"]
+        return spark.createDataFrame([], ", ".join(cols))
+    return spark.read.parquet(path)
+
+
 def metrics_summary(spark: SparkSession, output_root: str, run_id: str | None = None) -> DataFrame:
-    """A2/A3 roll-up over the per-partition metrics table: totals per run —
+    """A2/A3 roll-up over the per-partition metrics rows: totals per run —
     docs seen/kept/dropped and per-rule drop/scrub counters (the analog of
     curator's end-of-run status report, online_status_tracker.py:504-519)."""
-    m = read_table(spark, output_root, "metrics")
-    if run_id is not None:
-        m = m.filter(F.col("run_id") == run_id)
+    m = metrics_table(spark, output_root, run_id)
     sums = [
         F.sum(c).alias(c)
         for c in m.columns

@@ -83,8 +83,8 @@ def extract_status(html_bytes: bytes | None) -> tuple[str, str | None]:
     'no_marker' — the analog of curator's per-row error rows
     (/root/reference/src/bespokelabs/curator/llm/prompt_formatter.py:129-195,
     request_processor/base_request_processor.py:534-558). Failed rows score
-    as empty text (the len rule drops them) AND carry the tag so the runner
-    can quarantine them into a failed-rows table (K3).
+    as empty text (the len rule drops them) AND carry the tag, which the
+    runner's ``failed_rows`` view reads back (K3).
 
     The text is the first match of ``<p>(.*?)</p>`` (DOTALL), found with two
     C-level ``str.find`` calls: the first ``<p>`` and the first ``</p>``

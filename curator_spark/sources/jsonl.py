@@ -10,7 +10,7 @@ Spark restatement: ``spark.read.json`` in PERMISSIVE mode with an explicit
 schema + ``_corrupt_record``: well-formed lines parse into typed columns,
 malformed lines land whole in the corrupt column with nulls elsewhere — the
 scan never fails, bad rows stay inspectable/re-drivable (same contract as
-the runner's failed_rows quarantine). An explicit schema is mandatory at
+the runner's ``failed_rows`` view). An explicit schema is mandatory at
 scale: schema inference is a second full pass over the data.
 """
 

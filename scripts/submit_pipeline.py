@@ -26,7 +26,7 @@ import json
 def main() -> None:
     p = argparse.ArgumentParser(description="curator_spark quality-filter run")
     p.add_argument("--input", required=True, help="pages parquet path/dir")
-    p.add_argument("--output", required=True, help="output root (runs/, metrics/, runs_catalog/)")
+    p.add_argument("--output", required=True, help="output root (runs/, runs_catalog/)")
     p.add_argument("--chunks", type=int, default=4)
     p.add_argument("--repartition", type=int, default=None)
     p.add_argument("--salt", default=None)

@@ -76,8 +76,9 @@ def test_crash_resume_skips_committed(spark, pages_path, tmp_path, golden):
 
 
 def test_quarantine_and_failed_metric(spark, tmp_path, golden):
-    """K3/F2: rows whose extract fails land in a persisted failed_rows table
-    with error tags (and count into docs_failed), without failing the job."""
+    """K3/F2: rows whose extract fails commit with error tags, read back
+    through ``failed_rows`` (and count into docs_failed), without failing
+    the job; a clean run's ``failed_rows`` is empty with the same schema."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -95,25 +96,26 @@ def test_quarantine_and_failed_metric(spark, tmp_path, golden):
              "html": None, "text": "", "lang": "en"},
         ]
     )
-    src = tmp_path / "in_bad"
-    src.mkdir()
-    pq.write_table(
-        pa.Table.from_pandas(pd.concat([pdf, bad], ignore_index=True), schema=PAGES_SCHEMA,
-                             preserve_index=False),
-        str(src / "a.parquet"),
-    )
+    src, clean_src = tmp_path / "in_bad", tmp_path / "in_clean"
+    for d, part in ((src, pd.concat([pdf, bad], ignore_index=True)), (clean_src, pdf)):
+        d.mkdir()
+        pq.write_table(pa.Table.from_pandas(part, schema=PAGES_SCHEMA, preserve_index=False),
+                       str(d / "a.parquet"))
     cfg = R.RunConfig(input_path=str(src), output_root=str(tmp_path / "outq"), num_chunks=2)
     res = R.run_quality_filter(spark, cfg)
-    failed = R.read_table(spark, cfg.output_root, "failed_rows").toPandas()
-    tags = dict(zip(failed["url"], failed["error"]))
+    failed = R.failed_rows(spark, res)
+    tags = {r.url: r.error for r in failed.collect()}
     assert tags == {
         "https://bad.example/undecodable": "decode_error",
         "https://bad.example/markerless": "no_marker",
         "https://bad.example/nullhtml": "null_html",
     }
-    assert (failed["run_id"] == res.run_id).all()
-    metrics = R.read_table(spark, cfg.output_root, "metrics").toPandas()
+    metrics = R.metrics_table(spark, cfg.output_root, res.run_id).toPandas()
     assert metrics["docs_failed"].sum() == 3
+    clean = R.failed_rows(
+        spark, R.run_quality_filter(spark, R.RunConfig(str(clean_src), cfg.output_root, num_chunks=2))
+    )
+    assert clean.count() == 0 and clean.schema == failed.schema
     # failed rows are still verdict rows (dropped by the len rule), not lost
     out = R.load_output(spark, res).toPandas()
     assert len(out) == 103
@@ -158,27 +160,27 @@ def test_retry_commits_metrics_exactly_once(spark, pages_path, tmp_path, monkeyp
     calls = {"n": 0}
     real = R._append_table
 
-    def flaky(root, name, pdf, filename=None):
-        if name == "metrics":
+    def flaky(root, name, pdf):
+        if name == "_metrics":
             calls["n"] += 1
             if calls["n"] == 2:  # fail while committing the 2nd chunk
                 raise RuntimeError("injected metrics failure")
-        return real(root, name, pdf, filename)
+        return real(root, name, pdf)
 
     monkeypatch.setattr(R, "_append_table", flaky)
     cfg = _config(pages_path, tmp_path / "outr")
     res = R.run_quality_filter(spark, cfg)
     assert res.chunks_run == 4
-    metrics = R.read_table(spark, cfg.output_root, "metrics").toPandas()
+    metrics = R.metrics_table(spark, cfg.output_root, res.run_id).toPandas()
     assert len(metrics) == 4
     assert sorted(metrics["chunk"]) == [0, 1, 2, 3]
     assert metrics["docs_seen"].sum() == 500
 
 
 def test_failed_run_leaves_no_phantom_metrics(spark, pages_path, tmp_path, monkeypatch):
-    """Metrics/quarantine commit before the chunk rename; when a run fails
-    terminally, the provisional rows of never-committed chunks must be
-    removed — metrics must exist iff the chunk committed."""
+    """Metrics commit inside the chunk rename; when a run fails terminally
+    no chunk committed, so the run has no metrics, a FAILED event, and no
+    staging left behind."""
     import pytest as _pytest
 
     real_rename = os.rename
@@ -192,15 +194,55 @@ def test_failed_run_leaves_no_phantom_metrics(spark, pages_path, tmp_path, monke
     cfg = _config(pages_path, tmp_path / "outf", max_attempts=1)
     with _pytest.raises(OSError):
         R.run_quality_filter(spark, cfg)
-    metrics_dir = os.path.join(cfg.output_root, "metrics")
-    leftover = [f for f in os.listdir(metrics_dir)] if os.path.isdir(metrics_dir) else []
-    assert leftover == [], leftover
-    assert not os.path.isdir(os.path.join(cfg.output_root, "failed_rows", f"run_id={R.run_fingerprint(cfg)}"))
+    assert R.metrics_table(spark, cfg.output_root, R.run_fingerprint(cfg)).count() == 0
     cat = R.read_table(spark, cfg.output_root, "runs_catalog").toPandas()
     assert "FAILED" in set(cat["status"])
     # no staging garbage accumulates either
     run_dir = os.path.join(cfg.output_root, "runs", R.run_fingerprint(cfg))
     assert not [d for d in os.listdir(run_dir) if ".staging-" in d]
+
+
+@pytest.mark.parametrize("with_failed_row", [False, True])
+def test_lost_chunk_takes_its_counters_with_it(spark, pages_pdf, tmp_path, with_failed_row):
+    """A committed chunk that is lost (the run's kill-and-resume shape:
+    chunk dir and manifest removed) takes its metrics and its failed rows
+    with it; the resume brings each back exactly once."""
+    import shutil
+
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from curator_spark.datagen import PAGES_SCHEMA
+
+    null_url = "https://bad.example/nullhtml"
+    pdf = pages_pdf
+    if with_failed_row:
+        pdf = pd.concat([pdf, pdf.iloc[:1].assign(url=null_url, html=None)], ignore_index=True)
+    cfg = R.RunConfig(str(tmp_path / "in"), str(tmp_path / "out"), num_chunks=2)
+    os.makedirs(cfg.input_path)
+    pq.write_table(pa.Table.from_pandas(pdf, schema=PAGES_SCHEMA, preserve_index=False),
+                   os.path.join(cfg.input_path, "a.parquet"))
+    res = R.run_quality_filter(spark, cfg)
+    # lose the chunk holding the failed row (chunk 0 when there is none)
+    lost = 0
+    if with_failed_row:
+        bucket = spark.createDataFrame([(null_url,)], "url string").select(R._chunk_bucket(cfg))
+        lost = bucket.collect()[0][0]
+    shutil.rmtree(R._chunk_dir(res.run_dir, lost))
+    os.remove(os.path.join(res.run_dir, "manifest.json"))
+
+    kept = spark.read.parquet(R._chunk_dir(res.run_dir, 1 - lost)).count()
+    summary = R.metrics_summary(spark, cfg.output_root, res.run_id).collect()[0]
+    assert (summary.docs_seen, summary.docs_failed) == (kept, 0) and kept < len(pdf)
+    assert R.failed_rows(spark, res).count() == 0
+
+    res = R.run_quality_filter(spark, cfg)
+    assert res.chunks_run == 1 and res.chunks_skipped == 1
+    failed = [null_url] if with_failed_row else []
+    summary = R.metrics_summary(spark, cfg.output_root, res.run_id).collect()[0]
+    assert (summary.docs_seen, summary.docs_failed) == (len(pdf), len(failed))
+    assert [r.url for r in R.failed_rows(spark, res).collect()] == failed
 
 
 def test_cancel_run_records_catalog(spark, pages_path, tmp_path):
@@ -272,8 +314,10 @@ def test_fingerprint_tracks_operator_sources(pages_path, tmp_path, monkeypatch, 
 
 def test_metrics_and_catalog(spark, pages_path, tmp_path, golden):
     cfg = _config(pages_path, tmp_path / "out3")
-    R.run_quality_filter(spark, cfg)
-    metrics = R.read_table(spark, cfg.output_root, "metrics").toPandas()
+    res = R.run_quality_filter(spark, cfg)
+    # the rename is the one commit point: nothing lands beside the run dirs
+    assert sorted(os.listdir(cfg.output_root)) == ["runs", "runs_catalog"]
+    metrics = R.metrics_table(spark, cfg.output_root, res.run_id).toPandas()
     assert metrics["docs_seen"].sum() == len(golden)
     assert metrics["docs_kept"].sum() == int(golden["keep"].sum())
     # per-rule drop counters match the oracle
@@ -295,7 +339,7 @@ def test_chunk_metrics_count_committed_rows(spark, pages_path, tmp_path):
     run_dir = os.path.join(cfg.output_root, "runs", R.run_fingerprint(cfg))
 
     def check():
-        metrics = R.read_table(spark, cfg.output_root, "metrics")
+        metrics = R.metrics_table(spark, cfg.output_root)
         assert metrics.schema["chunk"].dataType == LongType()
         seen = metrics.toPandas().groupby("chunk")["docs_seen"].sum().to_dict()
         committed = {
@@ -381,7 +425,7 @@ def test_incremental_run(spark, tmp_path, golden, monkeypatch, prior_chunks):
 def test_incremental_crash_resume_quarantine(spark, tmp_path, monkeypatch):
     """An incremental run that dies mid-promotion resumes like a fresh run:
     committed chunks are skipped, each url is output and counted once, the
-    new null-html page is quarantined, and no staging dir is left behind."""
+    new null-html page is a failed row, and no staging dir is left behind."""
     import pandas as pd
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -426,10 +470,7 @@ def test_incremental_crash_resume_quarantine(spark, tmp_path, monkeypatch):
     assert len(out) == len(pdf) + 1 and out["url"].is_unique
     summary = R.metrics_summary(spark, out_root, res2.run_id).collect()[0]
     assert summary.docs_seen == len(pdf) + 1
-    failed = spark.read.parquet(
-        os.path.join(out_root, "failed_rows", f"run_id={res2.run_id}")
-    ).toPandas()
-    assert list(failed["url"]) == [null_url]
+    assert [r.url for r in R.failed_rows(spark, res2).collect()] == [null_url]
     assert not [d for d in os.listdir(res2.run_dir) if ".staging-" in d]
 
 
@@ -570,7 +611,7 @@ def test_chunk_input_spreads_hot_host_and_keeps_output(spark, host_clustered, tm
 def test_clean_chunk_commits_with_one_sql_execution(spark, pages_path, tmp_path, monkeypatch):
     """ONE metrics aggregate per attempt covers every chunk, and a clean
     chunk's commit runs no Spark action: no schema-inference read, no
-    quarantine job."""
+    per-chunk write job."""
     jss = spark._jsparkSession
 
     def last_execution() -> int:
@@ -594,38 +635,6 @@ def test_clean_chunk_commits_with_one_sql_execution(spark, pages_path, tmp_path,
     assert [m - start for m in marks] == [3, 3, 3, 3]
 
 
-def test_clean_and_failed_quarantines_read_as_one_table(spark, pages_pdf, tmp_path):
-    """A clean run's driver-written quarantine reads back empty with the
-    same schema as a Spark-written one, and both read together."""
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from curator_spark.datagen import PAGES_SCHEMA
-
-    pdf = pages_pdf.iloc[:100]
-    bad = pdf.iloc[:1].assign(url="https://bad.example/nullhtml", html=None)
-    srcs = {}
-    for name, part in (("clean", pdf), ("failed", pd.concat([pdf, bad], ignore_index=True))):
-        srcs[name] = tmp_path / name
-        srcs[name].mkdir()
-        pq.write_table(pa.Table.from_pandas(part, schema=PAGES_SCHEMA, preserve_index=False),
-                       str(srcs[name] / "a.parquet"))
-    out_root = str(tmp_path / "out")
-    runs = {name: R.run_quality_filter(spark, R.RunConfig(str(src), out_root, num_chunks=2))
-            for name, src in srcs.items()}
-
-    def quarantine(name):
-        return spark.read.parquet(os.path.join(out_root, "failed_rows", f"run_id={runs[name].run_id}"))
-
-    clean, failed = quarantine("clean"), quarantine("failed")
-    assert clean.count() == 0 and failed.count() == 1
-    assert clean.schema == failed.schema
-    both = R.read_table(spark, out_root, "failed_rows").toPandas()
-    assert list(both["url"]) == ["https://bad.example/nullhtml"]
-    assert list(both["run_id"]) == [runs["failed"].run_id]
-
-
 def test_empty_chunk_metrics_keep_string_run_id(spark, pages_pdf, tmp_path):
     """A chunk with no rows still writes its metrics slice with a string
     ``run_id``: an empty slice's object column once went to parquet as
@@ -647,6 +656,6 @@ def test_empty_chunk_metrics_keep_string_run_id(spark, pages_pdf, tmp_path):
         os.path.join(cfg.input_path, "a.parquet"),
     )
     res = R.run_quality_filter(spark, cfg)
-    assert dict(R.read_table(spark, cfg.output_root, "metrics").dtypes)["run_id"] == "string"
+    assert dict(R.metrics_table(spark, cfg.output_root).dtypes)["run_id"] == "string"
     rows = R.metrics_summary(spark, cfg.output_root, res.run_id).collect()
     assert [(r.run_id, r.docs_seen) for r in rows] == [(res.run_id, 2)]
