@@ -1093,10 +1093,10 @@ def decontaminate(
     definition; python twin ``jvm_tokens``), same position/token space as
     the rest of the span family.
 
-    ``key`` must be non-null and unique per row; it is not checked. Drop
-    mode removes hit docs with a ``left_anti`` join on ``key``, which never
-    matches NULL, so a contaminated row with a NULL key survives; flag mode
-    merges the ``n_hits`` of rows that share a key.
+    Hits are matched back onto ``docs`` on ``key`` with null-safe
+    equality, so rows that share a key share one verdict: a hit in any of
+    them drops (or flags, with the merged ``n_hits``) all of them. NULL
+    keys are one such shared key, never a way past the filter.
 
     Collision contract: ACTION-grade like ``strip_duplicate_spans`` — a
     false n-gram match silently discards a clean training doc, so both
@@ -1139,13 +1139,14 @@ def decontaminate(
     hits = _hashed_positioned_shingles120(docs, text_col, key, w).join(
         cont_grams, ["h", "h2"], "left_semi"
     )
+    hits = hits.select(F.col("id").alias("_hit_id"))
+    on_key = F.col(key).eqNullSafe(F.col("_hit_id"))
     if mode == "drop":
-        return docs.join(
-            hits.select(F.col("id").alias(key)).distinct(), key, "left_anti"
-        )
-    per_doc = hits.groupBy("id").agg(F.count("*").alias("n_hits"))
+        return docs.join(hits.distinct(), on_key, "left_anti")
+    per_doc = hits.groupBy("_hit_id").agg(F.count("*").alias("n_hits"))
     return (
-        docs.join(per_doc.select(F.col("id").alias(key), "n_hits"), key, "left")
+        docs.join(per_doc, on_key, "left")
+        .drop("_hit_id")
         .withColumn("n_hits", F.coalesce(F.col("n_hits"), F.lit(0).cast("long")))
         .withColumn("contaminated", F.col("n_hits") > 0)
     )
@@ -1223,20 +1224,21 @@ def strip_duplicate_spans(
     Removable hits merge into maximal spans per doc (same gaps-and-islands
     contract as ``duplicate_spans``), and those token ranges are cut.
 
-    Output (key, text_stripped, n_words, n_removed, n_kept_words):
-    ``text_stripped`` is
-    the WHITESPACE-NORMALIZED token sequence minus removed spans, joined by
-    single spaces (the standard token-level dedup contract — original
-    inter-token whitespace is not preserved); docs with nothing to remove
-    pass through with n_removed = 0 (normalized the same way, so the column
-    is uniformly single-spaced). Pure function of row content: reshuffle/
-    retry-deterministic.
+    Output: every input column except ``text_col`` (key first), plus
+    (text_stripped, n_words, n_removed, n_kept_words), one row per input
+    row. ``text_stripped`` is the WHITESPACE-NORMALIZED token sequence
+    minus removed spans, joined by single spaces (the standard token-level
+    dedup contract — original inter-token whitespace is not preserved);
+    docs with nothing to remove pass through with n_removed = 0 (normalized
+    the same way, so the column is uniformly single-spaced). Pure function
+    of row content: reshuffle/retry-deterministic.
 
     Plan: same single-pass hashed-window detection as ``duplicate_spans``
     (sort-based/spilling, no join), then ONE small join of per-doc span
     lists (collect_list bounded by doc length — spans per doc can't exceed
-    n_tokens/w) back onto the doc scan, and one Arrow stage to cut tokens.
-    Docs without removable spans take the join's left-outer fast path.
+    n_tokens/w) back onto the doc scan, and one Arrow stage to cut tokens
+    that passes the other columns through. Docs without removable spans
+    take the join's left-outer fast path.
 
     Collision contract — STRONGER than ``duplicate_spans``' 60-bit key,
     because this op is an ACTION: a false merge there adds a noise hit to
@@ -1250,6 +1252,7 @@ def strip_duplicate_spans(
     collision-free but re-introduces the 50-100B string shuffle the hashed
     form exists to avoid (measured 4.5x on the detection op)."""
     import pandas as pd
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     sh = _hashed_positioned_shingles120(df, text_col, key, w)
 
@@ -1265,12 +1268,12 @@ def strip_duplicate_spans(
     per_doc = spans.groupBy(key).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    joined = df.select(key, text_col).join(per_doc, key, "left")
-
-    key_type = df.schema[key].dataType.simpleString()  # key-generic (long doc_id, string url, ...)
-    out_schema = (
-        f"{key} {key_type}, text_stripped string, n_words long, n_removed long, "
-        "n_kept_words long"
+    joined = df.join(per_doc, key, "left")
+    carried = [c for c in joined.columns if c not in (text_col, "_spans")]
+    out_schema = StructType(
+        [f for f in joined.schema.fields if f.name in carried]
+        + [StructField("text_stripped", StringType())]
+        + [StructField(c, LongType()) for c in ("n_words", "n_removed", "n_kept_words")]
     )
 
     def cut(batches):
@@ -1309,10 +1312,10 @@ def strip_duplicate_spans(
             o = pd.DataFrame(
                 out_rows,
                 columns=["text_stripped", "n_words", "n_removed", "n_kept_words"],
+                index=pdf.index,
             )
             o["n_words"] = o["n_words"].astype("Int64")
             o["n_kept_words"] = o["n_kept_words"].astype("Int64")
-            o.insert(0, key, pdf[key].values)
-            yield o
+            yield pd.concat([pdf[carried], o], axis=1)
 
     return joined.mapInPandas(cut, schema=out_schema)

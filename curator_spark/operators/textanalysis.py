@@ -145,11 +145,12 @@ def lang_scores(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> D
     return _lang_argmax(out, langs)
 
 
-def quality_score(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
-    """Heuristic quality score over a plain text column (no html/model
-    stages): length + symbol + stopword + dup-word rules, score 5 - fired,
-    clipped to [0,5] (np.clip parity, examples/custom/predict.py:63)."""
-    text = F.col(text_col)
+def quality_score_cols(text: Column) -> dict[str, Column]:
+    """The heuristic quality score as Columns of one row: the four rule
+    flags (f_len, f_symbol, f_stopword, f_dup_word) and ``score``, 5 -
+    fired, clipped to [0,5] (np.clip parity,
+    examples/custom/predict.py:63). Each is aliased by its key, so a
+    caller scores rows in the projection that carries them."""
     w = words(text)
     lw = words(F.lower(text))  # same tokens as transform(w, lower), codegen
     n_words = F.size(w)
@@ -157,27 +158,25 @@ def quality_score(df: DataFrame, text_col: str = "text", key: str = "doc_id") ->
     en = sorted(rules.LANG_LEXICONS["en"])
     stop_hits = F.size(F.filter(lw, lambda x: x.isin(*en)))
     n_symbols = n_chars - F.length(F.regexp_replace(text, r"[!-/:-@\[-`{-~]", ""))
-    flags = [
-        ((n_chars < rules.MIN_CHARS) | (n_chars > rules.MAX_CHARS)).alias("f_len"),
-        (
-            (n_words > 0)
-            & (n_symbols.cast("double") / n_words > rules.MAX_SYMBOL_RATIO)
-        ).alias("f_symbol"),
-        (
-            (n_words > 0)
-            & (stop_hits.cast("double") / n_words < rules.MIN_STOPWORD_DENSITY)
-        ).alias("f_stopword"),
-        (
-            (n_words > 0)
-            & (
-                F.lit(1.0) - F.size(F.array_distinct(lw)).cast("double") / n_words
-                > rules.MAX_DUP_WORD_FRAC
-            )
-        ).alias("f_dup_word"),
-    ]
-    fired = sum(f.cast("int") for f in [c for c in flags])
-    score = F.least(F.greatest(F.lit(5) - fired, F.lit(0)), F.lit(5))
-    return df.select(F.col(key), *flags, score.cast("int").alias("score"))
+    dup_frac = F.lit(1.0) - F.size(F.array_distinct(lw)).cast("double") / n_words
+    flags = {
+        "f_len": (n_chars < rules.MIN_CHARS) | (n_chars > rules.MAX_CHARS),
+        "f_symbol": (n_words > 0) & (n_symbols.cast("double") / n_words > rules.MAX_SYMBOL_RATIO),
+        "f_stopword": (n_words > 0)
+        & (stop_hits.cast("double") / n_words < rules.MIN_STOPWORD_DENSITY),
+        "f_dup_word": (n_words > 0) & (dup_frac > rules.MAX_DUP_WORD_FRAC),
+    }
+    fired = sum(f.cast("int") for f in flags.values())
+    score = F.least(F.greatest(F.lit(5) - fired, F.lit(0)), F.lit(5)).cast("int")
+    return {name: c.alias(name) for name, c in {**flags, "score": score}.items()}
+
+
+def quality_score(df: DataFrame, text_col: str = "text", key: str = "doc_id") -> DataFrame:
+    """Heuristic quality score over a plain text column (no html/model
+    stages): length + symbol + stopword + dup-word rules
+    (``quality_score_cols``). Output (key, f_len, f_symbol, f_stopword,
+    f_dup_word, score)."""
+    return df.select(F.col(key), *quality_score_cols(F.col(text_col)).values())
 
 
 def token_budget_pack_bucketed(
@@ -208,25 +207,31 @@ def token_budget_pack_bucketed(
     the global pack (pinned against the DuckDB oracle at k=1).
 
     ``score_col``: rank by an EXISTING score column instead of recomputing
-    ``quality_score`` over ``text_col`` — what a composed recipe wants when
-    an upstream stage already scored the docs (curate_corpus_exact packs
-    span-stripped text by the original quality score).
+    ``quality_score_cols`` over ``text_col`` — what a composed recipe wants
+    when an upstream stage already scored the docs (curate_corpus_exact
+    packs span-stripped text by the original quality score).
 
-    Output: (key, bucket, score, n_bpe_tokens, running_tokens), where
-    ``running_tokens`` is the within-bucket running sum.
+    Output: the input rows that fit, with ``bucket``, ``score``,
+    ``n_bpe_tokens`` and ``running_tokens`` (the within-bucket running sum)
+    added in one projection; input columns of those names are replaced.
+    Rows are packed as they come, so a repeated key is packed per row;
+    NULL-key rows are never packed.
     """
     from pyspark.sql import Window
 
-    if score_col is not None:
-        scored = df.select(key, F.col(score_col).alias("score"))
-    else:
-        scored = quality_score(df, text_col, key).select(key, "score")
-    toks = token_stats(df, text_col, key).select(key, "n_bpe_tokens")
+    text = F.col(text_col)
+    score = F.col(score_col) if score_col is not None else quality_score_cols(text)["score"]
     bucket = (
         F.conv(F.substring(F.md5(F.col(key).cast("string")), 1, 4), 16, 10).cast("long")
         % F.lit(k)
     )
-    ranked = scored.join(toks, key).withColumn("bucket", bucket)
+    ranked = df.filter(F.col(key).isNotNull()).withColumns(
+        {
+            "bucket": bucket,
+            "score": score,
+            "n_bpe_tokens": F.regexp_count(text, F.lit(BPE_TOKEN_PATTERN)).cast("long"),
+        }
+    )
     # pack order = the oracle's ORDER BY: score desc, content hash, key
     w = (
         Window.partitionBy("bucket")
@@ -234,10 +239,8 @@ def token_budget_pack_bucketed(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     running = F.sum("n_bpe_tokens").over(w)
-    return (
-        ranked.withColumn("running_tokens", running.cast("long"))
-        .filter(F.col("running_tokens") <= budget // k)
-        .select(key, "bucket", "score", "n_bpe_tokens", "running_tokens")
+    return ranked.withColumn("running_tokens", running.cast("long")).filter(
+        F.col("running_tokens") <= budget // k
     )
 
 

@@ -191,9 +191,12 @@ def curate_corpus(
          (``textanalysis.token_budget_pack_bucketed``).
 
     Output: (url, warc_ts, lang_pred, text) — ``text`` is the scrubbed,
-    span-stripped, whitespace-normalized token sequence. Every stage is
-    keyed on url and a pure function of row content, so the result is
-    deterministic under reshuffle/retry at any parallelism.
+    span-stripped, whitespace-normalized token sequence. Each stage hands
+    its rows forward (the strip and the pack return their input rows plus
+    new columns), so no stage's output is joined back onto its input and
+    the strip's Arrow cut runs once. Every stage is keyed on url and a
+    pure function of row content, so the result is deterministic under
+    reshuffle/retry at any parallelism.
 
     Caching contract: the kept intermediate stays persisted for the
     session (it is referenced by the lazy plan this function returns, so
@@ -214,8 +217,8 @@ def curate_corpus(
         pages = dedup.canonical_url_dedup(pages, url_col="url", ts_col="warc_ts")
     kept = kept_pages(quality_filter(pages, repartition_to=repartition_to))
     # The kept intermediate feeds MANY downstream subtrees (exact-dedup agg,
-    # survivor semi-join, LSH candidates, Jaccard verify, the corpus join,
-    # the span strip) and each is a separate Spark job — without
+    # LSH candidates, Jaccard verify, the survivor semi-join into the span
+    # strip) and each is a separate Spark job — without
     # materialization the fused-UDF scoring stage re-executes per job (the
     # same failure mode the connected_components edge checkpoint fixed;
     # ReuseExchange never spans jobs). Persist the NARROW kept columns once;
@@ -244,12 +247,13 @@ def curate_corpus(
     surv = dedup.near_dup_survivors(
         kept, text_col="scrubbed_text", key="url", threshold=jaccard_threshold
     )
-    corpus = kept.join(surv.select("url"), "url", "left_semi")
-    stripped = dedup.strip_duplicate_spans(
-        corpus, text_col="scrubbed_text", key="url", w=span_w
-    )
     corpus = (
-        corpus.join(stripped, "url")
+        dedup.strip_duplicate_spans(
+            kept.join(surv.select("url"), "url", "left_semi"),
+            text_col="scrubbed_text",
+            key="url",
+            w=span_w,
+        )
         # n_kept_words counts REAL rendered words — n_words - n_removed
         # would count phantom empty tokens (leading/trailing tab/newline)
         # toward the floor (review-caught)
@@ -265,10 +269,9 @@ def curate_corpus(
             corpus, cap=domain_cap_n, grouping=domain_grouping
         ).drop("domain")
     if token_budget is not None:
-        packed = ta.token_budget_pack_bucketed(
+        corpus = ta.token_budget_pack_bucketed(
             corpus, budget=token_budget, k=16, text_col="text", key="url"
-        )
-        corpus = corpus.join(packed.select("url"), "url", "left_semi")
+        ).select(*corpus.columns)
     return corpus
 
 

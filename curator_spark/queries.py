@@ -1038,7 +1038,7 @@ def q_token_budget_pack_bucketed(spark, sf_dir):
     generator at k=1 in pytest (test_token_budget_pack_bucketed_k1_matches_oracle)."""
     return textanalysis.token_budget_pack_bucketed(
         _t(spark, sf_dir, "documents"), budget=20000, k=4
-    )
+    ).select("doc_id", "bucket", "score", "n_bpe_tokens", "running_tokens")
 
 
 # Synthesized-url CASE shared by the domain_cap oracle and the composed
@@ -1528,10 +1528,9 @@ def q_classifier_metrics(spark, sf_dir):
     """A7: prediction-vs-label confusion counts + precision/recall
     (predict.py:72-88, train_classifier.py:19-47 analog) — the aggregation
     underlying the F1>=0.99 acceptance gate."""
-    d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    scored = textanalysis.quality_score(_t(spark, sf_dir, "documents"))
-    j = scored.join(d, "doc_id").select(
-        (F.col("score") >= 3).alias("pred"), (F.col("n_chars") >= 200).alias("label")
+    score = textanalysis.quality_score_cols(F.col("text"))["score"]
+    j = _t(spark, sf_dir, "documents").select(
+        (score >= 3).alias("pred"), (F.col("n_chars") >= 200).alias("label")
     )
     tp = F.sum((F.col("pred") & F.col("label")).cast("long"))
     fp = F.sum((F.col("pred") & ~F.col("label")).cast("long"))
@@ -2060,36 +2059,26 @@ def q_curate_corpus_exact(spark, sf_dir):
     d = dedup.canonical_url_dedup(d, url_col="url0").drop("url0")
     cont = d.filter(F.col("doc_id") % 7 == 0).select("doc_id", "text")
     d = dedup.decontaminate(d, cont, w=13, mode="drop")
-    scored = textanalysis.quality_score(d).select("doc_id", "score")
-    kept = d.select("doc_id", "source", "text").join(
-        scored.filter(F.col("score") >= 4), "doc_id"
-    )
+    kept = d.select(
+        "doc_id", "source", "text", textanalysis.quality_score_cols(F.col("text"))["score"]
+    ).filter(F.col("score") >= 4)
     surv = dedup.near_dup_survivors(kept, threshold=0.5)
     corpus = kept.join(surv.select("doc_id"), "doc_id", "left_semi")
-    stripped = dedup.strip_duplicate_spans(corpus, w=8)
-    floored = (
-        corpus.join(
-            stripped.select("doc_id", "text_stripped", "n_kept_words"), "doc_id"
-        )
+    withu = (
+        dedup.strip_duplicate_spans(corpus, w=8)
         .filter(F.col("n_kept_words") >= 5)
-        .select("doc_id", "source", "score", "text_stripped")
-    )
-    withu = floored.select(
-        "doc_id", "score", "text_stripped", _synth_url_col().alias("url")
+        .select("doc_id", "score", "text_stripped", _synth_url_col().alias("url"))
     )
     capped = textanalysis.domain_cap(
         withu, cap=3, grouping="etld1", tiebreak_col="doc_id"
     )
-    packed = textanalysis.token_budget_pack_bucketed(
+    return textanalysis.token_budget_pack_bucketed(
         capped,
         budget=12000,
         k=4,
         text_col="text_stripped",
         key="doc_id",
         score_col="score",
-    )
-    return packed.join(
-        capped.select("doc_id", "domain", "text_stripped"), "doc_id"
     ).select(
         "doc_id",
         "domain",

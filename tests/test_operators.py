@@ -557,7 +557,12 @@ def test_token_budget_pack_bucketed_k1_matches_oracle(spark):
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    b1 = {tuple(r) for r in textanalysis.token_budget_pack_bucketed(docs, budget=20000, k=1).collect()}
+    b1 = {
+        tuple(r)
+        for r in textanalysis.token_budget_pack_bucketed(docs, budget=20000, k=1)
+        .select("doc_id", "bucket", "score", "n_bpe_tokens", "running_tokens")
+        .collect()
+    }
     con = duckdb.connect()
     con.register("documents", docs.select("doc_id", "text").toPandas())
     want = set(con.execute(queries._token_budget_sql(20000, k=1)).fetchall())
@@ -569,8 +574,11 @@ def test_token_budget_pack_bucketed_respects_per_bucket_quota(spark):
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    # a short NULL-key doc fits any quota, but is never packed
+    null_key = spark.createDataFrame([(None, "the cat sat on the mat")], "doc_id long, text string")
+    docs = docs.select("doc_id", "text").unionByName(null_key)
     out = textanalysis.token_budget_pack_bucketed(docs, budget=20000, k=4).collect()
-    assert out
+    assert out and all(r.doc_id is not None for r in out)
     assert {r.bucket for r in out} <= set(range(4))
     by_bucket: dict[int, int] = {}
     for r in out:
@@ -1052,7 +1060,10 @@ def test_strip_duplicate_spans_hand_fixture(spark):
     """Keep-one substring dedup: the min-doc owner keeps each duplicated
     span, every other doc loses exactly those token ranges; pass-through
     docs come back whitespace-normalized with n_removed=0; null text stays
-    null; deterministic under repartition."""
+    null; deterministic under repartition. Every other input column comes
+    back unchanged (a timestamp too) and ``text`` is gone."""
+    import datetime
+
     S = " ".join(f"s{i}" for i in range(10))
     rows = [
         (0, "x1 x2  x3 " + S + " y1 y2"),   # owner (min doc) — double space normalizes
@@ -1062,8 +1073,15 @@ def test_strip_duplicate_spans_hand_fixture(spark):
         (4, None),
         (5, ""),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: r for r in dedup.strip_duplicate_spans(df, w=8).collect()}
+    ts0 = datetime.datetime(2024, 3, 31, 1, 30, 0, 123456)
+    carried = {d: (ts0 + datetime.timedelta(days=d, microseconds=d), f"src{d}") for d, _ in rows}
+    df = spark.createDataFrame(
+        [(d, t, *carried[d]) for d, t in rows], "doc_id long, text string, ts timestamp, src string"
+    )
+    out = dedup.strip_duplicate_spans(df, w=8)
+    assert "text" not in out.columns and dict(out.dtypes)["ts"] == "timestamp"
+    got = {r.doc_id: r for r in out.collect()}
+    assert {d: (r.ts, r.src) for d, r in got.items()} == carried
     assert got[0].text_stripped == "x1 x2 x3 " + S + " y1 y2" and got[0].n_removed == 0
     assert got[1].text_stripped == "z1 z2 z3 z4 z5" and got[1].n_removed == 10
     assert got[2].text_stripped == "tail1 tail2" and got[2].n_removed == 10
@@ -1368,8 +1386,17 @@ def test_decontaminate_flag_matches_python_model(spark):
 
 
 def test_decontaminate_drop_is_flag_filter_identity(spark):
+    from curator_spark.operators.textanalysis import jvm_tokens
+
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     cont = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id", "text")
+    # a contaminated NULL-key row: flagged in flag mode, gone in drop mode
+    quoted = next(
+        r.text for r in cont.orderBy("doc_id").collect() if r.text and len(jvm_tokens(r.text)) >= 13
+    )
+    docs = docs.select("doc_id", "text").unionByName(
+        spark.createDataFrame([(None, quoted)], "doc_id long, text string")
+    )
     flagged = dedup.decontaminate(docs, cont, w=13, mode="flag")
     clean_ids = {r.doc_id for r in flagged.filter(~F.col("contaminated")).collect()}
     dropped = dedup.decontaminate(docs, cont, w=13, mode="drop")
@@ -1378,14 +1405,14 @@ def test_decontaminate_drop_is_flag_filter_identity(spark):
     # sanity: every contaminant doc LONG ENOUGH to yield a 13-gram is gone
     # (a <13-token contaminant contributes no grams and may survive);
     # survivors exist
-    from curator_spark.operators.textanalysis import jvm_tokens
-
     long_cont = {
         r.doc_id
         for r in docs.filter(F.col("doc_id") % 7 == 0).select("doc_id", "text").collect()
         if r.text is not None and len(jvm_tokens(r.text)) >= 13
     }
     assert clean_ids and long_cont and not (long_cont & clean_ids)
+    assert flagged.filter(F.col("doc_id").isNull()).first().contaminated
+    assert None not in clean_ids
 
     # broadcast=False (shuffle-join fallback for oversized gram sets) is
     # row-identical

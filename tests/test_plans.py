@@ -148,13 +148,25 @@ def test_pipeline_has_no_interpreted_hof_in_hot_path(pages_df):
 def test_token_budget_pack_bucketed_window_is_hash_partitioned(spark):
     """The bucketed pack's running-sum window must sort WITHIN hash
     partitions of the bucket key — never a SinglePartition global sort
-    (the 100x-scale failure mode of an unbucketed window)."""
+    (the 100x-scale failure mode of an unbucketed window). Score, bucket
+    and token count are columns of the input rows: no join at all."""
     from curator_spark.operators import textanalysis
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = _plan(textanalysis.token_budget_pack_bucketed(docs, budget=20000, k=8))
     assert "SinglePartition" not in plan
     assert "hashpartitioning(bucket" in plan
+    assert _n_nodes(plan, r"\w*Join") == 0, plan
+
+
+def test_curate_corpus_runs_the_span_strip_once(pages_df):
+    """The recipe hands rows forward: the strip's Arrow cut and the pack
+    return their input rows, so nothing joins their output back onto
+    their input and the plan holds ONE MapInPandas."""
+    from curator_spark.plans.pipeline import curate_corpus_session
+
+    with curate_corpus_session(pages_df, domain_cap_n=2, token_budget=20000) as corpus:
+        assert _n_nodes(_plan(corpus), "MapInPandas") == 1
 
 
 def test_lang_scores_plan_one_partial_agg_no_lambda(spark):
