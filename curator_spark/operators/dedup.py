@@ -244,15 +244,13 @@ assert max(MINHASH_A) * (2**32 - 1) + max(MINHASH_B) < 2**62
 
 
 def minhash_lsh_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    key: str = "doc_id",
+    shingles: DataFrame,
     num_hashes: int = 8,
     bands: int = 4,
-    w: int = 3,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """Candidate near-dup pairs (a<b) sharing >=1 LSH band.
+    """Candidate near-dup pairs (a<b) sharing >=1 LSH band, from ``shingle_rows``
+    (id, s) rows; a signature is a min, so distinct rows give the same pairs.
 
     ``max_bucket_size`` caps the in-bucket self-join: a band bucket of B
     docs yields B^2/2 pairs, so one boilerplate bucket can dominate the
@@ -266,8 +264,7 @@ def minhash_lsh_candidates(
     in whole-stage codegen (higher-order functions are interpreted in Spark;
     an array-expression formulation of the signature measured ~20x slower):
 
-      scan -> explode shingles (generator, codegen)
-           -> one md5 per shingle -> hash-agg min((a_i*h + b_i) mod P)
+      shingle rows -> one md5 per shingle -> hash-agg min((a_i*h + b_i) mod P)
               x num_hashes (cheap long arithmetic; partial agg
               combines map-side: one row per doc reaches the shuffle)
            -> explode band digests -> ONE shuffle on band -> in-bucket
@@ -282,9 +279,8 @@ def minhash_lsh_candidates(
             f"num_hashes must be <= {len(MINHASH_A)} (got {num_hashes})"
         )
     rows_per_band = num_hashes // bands
-    ex = shingle_rows(df, text_col=text_col, key=key, w=w)
     h32 = F.conv(F.substring(F.md5(F.col("s")), 1, 8), 16, 10).cast("long")
-    sig = ex.select("id", h32.alias("_h")).groupBy("id").agg(
+    sig = shingles.select("id", h32.alias("_h")).groupBy("id").agg(
         *[
             F.min((F.col("_h") * MINHASH_A[i] + MINHASH_B[i]) % MINHASH_P).alias(f"h{i}")
             for i in range(num_hashes)
@@ -331,25 +327,18 @@ def minhash_lsh_candidates(
 
 
 def ngram_jaccard_pairs(
-    df: DataFrame,
+    shingles: DataFrame,
     pairs: DataFrame | None = None,
-    text_col: str = "text",
-    key: str = "doc_id",
-    w: int = 3,
     threshold: float = 0.0,
 ) -> DataFrame:
-    """Exact Jaccard over distinct word-w-shingles for each candidate pair.
+    """Exact Jaccard over distinct ``shingle_rows`` (id, s) per candidate pair.
 
     ``pairs`` defaults to all (a<b) pairs — O(n^2), test-scale only; pass the
     LSH candidates at scale so the verify join is |candidates|, not n^2.
     Output: (id_a, id_b, inter, union_sz, jaccard) with exact integer
     inter/union so the double division is bit-stable cross-engine.
     """
-    # Shingling is the expensive subtree; placing it BELOW the
-    # dropDuplicates shuffle lets Spark's ReuseExchange serve all three
-    # consumers (x side, y side, per-doc counts) from ONE evaluation —
-    # without it the plan re-shingles every document 3x.
-    ex = shingle_rows(df, text_col=text_col, key=key, w=w).dropDuplicates(["id", "s"])
+    ex = shingles.dropDuplicates(["id", "s"])
     na = ex.groupBy("id").agg(F.count("*").alias("n"))
     if pairs is None:
         inter = (
@@ -819,20 +808,23 @@ def near_dup_survivors(
     """The end-to-end dedup operator a corpus pipeline actually wants:
     exact-dedup -> capped MinHash-LSH candidates -> Jaccard verify ->
     connected components -> ONE survivor (min key) per duplicate cluster.
-    Output: (doc_id, fp_md5, group_size) of surviving docs — exact-dup
-    group winners minus near-dup cluster losers."""
-    exact = exact_dedup(df, text_col, key)  # (key, fp_md5, group_size)
-    survivors = df.join(exact.select(key), key, "left_semi")
-    cand = minhash_lsh_candidates(
-        survivors, text_col, key, max_bucket_size=max_bucket_size
+    Output: the rows of ``df`` that keep their exact-text group (its min key,
+    matched null-safely on (key, fp_md5)) and lose no near-dup cluster, with
+    all of ``df``'s columns plus ``fp_md5`` and ``group_size``. One distinct
+    (id, s) shingle table, materialized once, feeds the LSH and the verify:
+    ReuseExchange did not dedupe their subtrees (12 shingle runs at 20k pages)."""
+    fp = df.withColumn("fp_md5", F.md5(F.col(text_col)))
+    keepers = (
+        fp.join(exact_dedup_groups(df, text_col, key), "fp_md5")
+        .filter(F.col(key).eqNullSafe(F.col("keep_id")))
+        .select(*fp.columns, "group_size")
     )
-    near = ngram_jaccard_pairs(survivors, pairs=cand, text_col=text_col, key=key,
-                               threshold=threshold)
+    shingles = shingle_rows(keepers, text_col, key).dropDuplicates(["id", "s"]).localCheckpoint()
+    cand = minhash_lsh_candidates(shingles, max_bucket_size=max_bucket_size)
+    near = ngram_jaccard_pairs(shingles, pairs=cand, threshold=threshold)
     comp = connected_components(near.select("id_a", "id_b"))
-    losers = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(key)
-    )
-    return exact.join(losers, key, "left_anti")
+    losers = comp.filter(F.col("node") != F.col("component")).select(F.col("node").alias(key))
+    return keepers.join(losers, key, "left_anti")
 
 
 # ---------------------------------------------------------------------------

@@ -178,7 +178,9 @@ def curate_corpus(
          dedup/strip/cap work downstream;
       2. exact dedup + capped MinHash-LSH + Jaccard verify + connected
          components -> one survivor per duplicate cluster
-         (``dedup.near_dup_survivors``);
+         (``dedup.near_dup_survivors``, keepers matched on (url, digest):
+         a url shared by two texts carries only the page whose group it
+         keeps; a NULL-url page goes on unless a urled page has its text);
       3. substring-level keep-one span strip over the survivors
          (``dedup.strip_duplicate_spans`` — cross-doc boilerplate runs are
          cut everywhere but their min-key owner), then a
@@ -192,11 +194,11 @@ def curate_corpus(
 
     Output: (url, warc_ts, lang_pred, text) — ``text`` is the scrubbed,
     span-stripped, whitespace-normalized token sequence. Each stage hands
-    its rows forward (the strip and the pack return their input rows plus
-    new columns), so no stage's output is joined back onto its input and
-    the strip's Arrow cut runs once. Every stage is keyed on url and a
-    pure function of row content, so the result is deterministic under
-    reshuffle/retry at any parallelism.
+    its rows forward (near-dup survivors, the strip and the pack return
+    their input rows plus new columns), so no stage's output is joined back
+    onto its input and the strip's Arrow cut runs once. Every stage is keyed
+    on url and a pure function of row content, so the result is
+    deterministic under reshuffle/retry at any parallelism.
 
     Caching contract: the kept intermediate stays persisted for the
     session (it is referenced by the lazy plan this function returns, so
@@ -217,8 +219,7 @@ def curate_corpus(
         pages = dedup.canonical_url_dedup(pages, url_col="url", ts_col="warc_ts")
     kept = kept_pages(quality_filter(pages, repartition_to=repartition_to))
     # The kept intermediate feeds MANY downstream subtrees (exact-dedup agg,
-    # LSH candidates, Jaccard verify, the survivor semi-join into the span
-    # strip) and each is a separate Spark job — without
+    # the shingle table, the span strip), each a separate Spark job — without
     # materialization the fused-UDF scoring stage re-executes per job (the
     # same failure mode the connected_components edge checkpoint fixed;
     # ReuseExchange never spans jobs). Persist the NARROW kept columns once;
@@ -244,12 +245,11 @@ def curate_corpus(
         # anti join) re-executes per job (r5 self-review finding)
         if _persist_registry is not None:
             _persist_registry.append(kept)
-    surv = dedup.near_dup_survivors(
-        kept, text_col="scrubbed_text", key="url", threshold=jaccard_threshold
-    )
     corpus = (
         dedup.strip_duplicate_spans(
-            kept.join(surv.select("url"), "url", "left_semi"),
+            dedup.near_dup_survivors(
+                kept, text_col="scrubbed_text", key="url", threshold=jaccard_threshold
+            ),
             text_col="scrubbed_text",
             key="url",
             w=span_w,

@@ -365,7 +365,7 @@ _MINHASH_SQL = f"""
 @_register("minhash_lsh_pairs", _MINHASH_SQL)
 def q_minhash_lsh_pairs(spark, sf_dir):
     return dedup.minhash_lsh_candidates(
-        _t(spark, sf_dir, "documents"), num_hashes=8, bands=4, w=3
+        dedup.shingle_rows(_t(spark, sf_dir, "documents"), w=3), num_hashes=8, bands=4
     )
 
 
@@ -399,7 +399,7 @@ def q_ngram_jaccard(spark, sf_dir):
     pairs — O(n^2) shingle self-join. At corpus scale pass the capped LSH
     candidates instead (|candidates| joins) — ``minhash_jaccard_dedup``
     below is that production composition."""
-    return dedup.ngram_jaccard_pairs(_t(spark, sf_dir, "documents"), w=3)
+    return dedup.ngram_jaccard_pairs(dedup.shingle_rows(_t(spark, sf_dir, "documents"), w=3))
 
 
 @_register(
@@ -456,8 +456,8 @@ def q_near_dup_components(spark, sf_dir):
     ORACLE-SCALE ONLY as registered: the edge feed is the all-pairs
     ``ngram_jaccard`` (O(n^2)); at corpus scale feed it LSH-verified pairs
     as ``minhash_jaccard_dedup`` / ``near_dup_survivors`` do."""
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, w=3, threshold=0.5).select("id_a", "id_b")
+    shingles = dedup.shingle_rows(_t(spark, sf_dir, "documents"), w=3)
+    pairs = dedup.ngram_jaccard_pairs(shingles, threshold=0.5).select("id_a", "id_b")
     return dedup.connected_components(pairs)
 
 
@@ -544,7 +544,8 @@ def q_near_dup_survivors(spark, sf_dir):
     connected components -> one survivor (min doc_id) per duplicate
     cluster. Oracle-exact: the DuckDB twin composes the verified per-stage
     SQL (capped-LSH Jaccard CTEs + recursive-CTE components)."""
-    return dedup.near_dup_survivors(_t(spark, sf_dir, "documents"), threshold=0.5)
+    surv = dedup.near_dup_survivors(_t(spark, sf_dir, "documents"), threshold=0.5)
+    return surv.select("doc_id", "fp_md5", "group_size")
 
 
 # The xxhash64 production simhash (dedup.simhash, python twin in pytest) is
@@ -630,10 +631,9 @@ def q_minhash_jaccard_dedup(spark, sf_dir):
     survivors = docs.join(
         dedup.exact_dedup(docs).select("doc_id"), "doc_id", "left_semi"
     )
-    cand = dedup.minhash_lsh_candidates(
-        survivors, num_hashes=8, bands=4, w=3, max_bucket_size=200
-    )
-    return dedup.ngram_jaccard_pairs(survivors, pairs=cand, w=3, threshold=0.5)
+    shingles = dedup.shingle_rows(survivors, w=3)
+    cand = dedup.minhash_lsh_candidates(shingles, num_hashes=8, bands=4, max_bucket_size=200)
+    return dedup.ngram_jaccard_pairs(shingles, pairs=cand, threshold=0.5)
 
 
 # ===========================================================================
@@ -2062,10 +2062,8 @@ def q_curate_corpus_exact(spark, sf_dir):
     kept = d.select(
         "doc_id", "source", "text", textanalysis.quality_score_cols(F.col("text"))["score"]
     ).filter(F.col("score") >= 4)
-    surv = dedup.near_dup_survivors(kept, threshold=0.5)
-    corpus = kept.join(surv.select("doc_id"), "doc_id", "left_semi")
     withu = (
-        dedup.strip_duplicate_spans(corpus, w=8)
+        dedup.strip_duplicate_spans(dedup.near_dup_survivors(kept, threshold=0.5), w=8)
         .filter(F.col("n_kept_words") >= 5)
         .select("doc_id", "score", "text_stripped", _synth_url_col().alias("url"))
     )

@@ -93,7 +93,8 @@ def test_shingle_rows_matches_jvm_tokens_model(spark):
 
 
 def test_minhash_finds_planted_near_dup(docs_df):
-    pairs = {(r.id_a, r.id_b) for r in dedup.minhash_lsh_candidates(docs_df).collect()}
+    cand = dedup.minhash_lsh_candidates(dedup.shingle_rows(docs_df))
+    pairs = {(r.id_a, r.id_b) for r in cand.collect()}
     assert (0, 3) in pairs  # exact dup always collides
     assert (0, 1) in pairs or (1, 3) in pairs  # near-dup shares bands
     assert (2, 4) not in pairs
@@ -105,10 +106,12 @@ def test_minhash_constant_bounds_and_wider_family(docs_df):
     and the widest supported configuration must still find the planted
     exact dup (it collides under every minhash family)."""
     with pytest.raises(ValueError, match="num_hashes"):
-        dedup.minhash_lsh_candidates(docs_df, num_hashes=17, bands=1)
+        dedup.minhash_lsh_candidates(dedup.shingle_rows(docs_df), num_hashes=17, bands=1)
     pairs = {
         (r.id_a, r.id_b)
-        for r in dedup.minhash_lsh_candidates(docs_df, num_hashes=16, bands=8).collect()
+        for r in dedup.minhash_lsh_candidates(
+            dedup.shingle_rows(docs_df), num_hashes=16, bands=8
+        ).collect()
     }
     assert (0, 3) in pairs
 
@@ -119,8 +122,8 @@ def test_simhash_rejects_odd_bits(docs_df):
 
 
 def test_jaccard_on_candidates_matches_python(docs_df):
-    cand = dedup.minhash_lsh_candidates(docs_df)
-    out = dedup.ngram_jaccard_pairs(docs_df, pairs=cand).collect()
+    sh = dedup.shingle_rows(docs_df)
+    out = dedup.ngram_jaccard_pairs(sh, pairs=dedup.minhash_lsh_candidates(sh)).collect()
     texts = {r.doc_id: r.text for r in docs_df.collect()}
 
     def shingles(t):
@@ -148,14 +151,14 @@ def test_lsh_hot_bucket_cap_bounds_candidates(spark):
         (n + 2, boiler + " with one extra tail clause appended here"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = dedup.minhash_lsh_candidates(df).count()
+    uncapped = dedup.minhash_lsh_candidates(dedup.shingle_rows(df)).count()
     assert uncapped >= n * (n - 1) // 2  # the blow-up being defused
-    capped = dedup.minhash_lsh_candidates(df, max_bucket_size=50).count()
+    capped = dedup.minhash_lsh_candidates(dedup.shingle_rows(df), max_bucket_size=50).count()
     assert capped <= 10
     # full scale-path composition: exact-dedup first, then capped LSH
     survivors = df.join(dedup.exact_dedup(df).select("doc_id"), "doc_id", "left_semi")
     assert survivors.count() == 4
-    comp = dedup.minhash_lsh_candidates(survivors, max_bucket_size=50)
+    comp = dedup.minhash_lsh_candidates(dedup.shingle_rows(survivors), max_bucket_size=50)
     pairs = {(r.id_a, r.id_b) for r in comp.collect()}
     assert (0, n + 2) in pairs  # the boilerplate variant still found
     assert len(pairs) <= 6
@@ -407,6 +410,42 @@ def test_near_dup_survivors_end_to_end(spark):
     out = {r.doc_id: r for r in dedup.near_dup_survivors(df, threshold=0.5).collect()}
     assert set(out) == {0, 3}
     assert out[0].group_size == 2  # its exact-dup group had two members
+    assert out[3].text == rows[3][1]  # the input row itself, handed forward
+
+
+def test_near_dup_survivors_key_shared_by_two_texts(spark):
+    """A key shared by rows of two exact-text groups carries only the row
+    whose group it keeps: keepers are matched on (key, fp_md5), not on the
+    key alone, which let the other group's row through too."""
+    a = "the quick brown fox jumps over the lazy dog near the river bank"
+    b = "completely different content about spark partitioning and shuffles"
+    docs = spark.createDataFrame(
+        [("k", a), ("k", b), ("j", b)], "url string, scrubbed_text string"
+    )
+    out = dedup.near_dup_survivors(docs, text_col="scrubbed_text", key="url")
+    assert out.columns == ["url", "scrubbed_text", "fp_md5", "group_size"]
+    assert sorted((r.url, r.scrubbed_text, r.group_size) for r in out.collect()) == [
+        ("j", b, 2),
+        ("k", a, 1),
+    ]
+
+
+def test_near_dup_survivors_hands_null_key_rows_to_the_strip(spark):
+    """A NULL-url page keeps its exact-text group when no page with a url
+    shares its text, and flows through ``strip_duplicate_spans`` as the
+    recipe composes them (``canonical_url_dedup`` passes NULL urls
+    through). A url-keyed semi-join back onto the input dropped it."""
+    base = "the quick brown fox jumps over the lazy dog near the river bank"
+    other = "completely different content about spark partitioning and shuffles"
+    docs = spark.createDataFrame(
+        [("u0", base + " today"), (None, other), (None, base + " today")],
+        "url string, scrubbed_text string",
+    )
+    surv = dedup.near_dup_survivors(docs, text_col="scrubbed_text", key="url")
+    out = dedup.strip_duplicate_spans(surv, text_col="scrubbed_text", key="url", w=8)
+    got = sorted(((r.url, r.text_stripped) for r in out.collect()), key=str)
+    # the NULL-url copy of u0's text loses its exact group to u0
+    assert got == sorted([("u0", base + " today"), (None, other)], key=str)
 
 
 @pytest.fixture(scope="module")

@@ -206,7 +206,7 @@ def test_dedup_hot_paths_have_no_interpreted_lambda(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     for name, df in (
-        ("minhash_lsh_candidates", dedup.minhash_lsh_candidates(docs)),
+        ("minhash_lsh_candidates", dedup.minhash_lsh_candidates(dedup.shingle_rows(docs))),
         ("simhash", dedup.simhash(docs)),
         ("simhash_md5", dedup.simhash_md5(docs)),
         ("shingle_rows", dedup.shingle_rows(docs)),
@@ -223,13 +223,63 @@ def test_dedup_self_joins_reuse_signature_exchange(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     for name, df in (
-        ("minhash_lsh_candidates", dedup.minhash_lsh_candidates(docs)),
+        ("minhash_lsh_candidates", dedup.minhash_lsh_candidates(dedup.shingle_rows(docs))),
         ("simhash_md5_near_pairs", dedup.simhash_md5_near_pairs(docs)),
     ):
         df.collect()  # AQE finalizes reuse at runtime
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in plan, name
         assert "ReusedExchange" in plan, (name, plan)
+
+
+def _last_execution(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+
+
+def _generates_with_rows(spark, mark: int, expr: str) -> dict:
+    """Output rows of each executed ``Generate <expr>`` since ``mark``, keyed
+    by its SQL metric accumulator. A reused or cached subtree shows up under
+    several plan-graph nodes that share one accumulator, so the key counts
+    each evaluation once."""
+    _last_execution(spark)  # drains the listener bus
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = {}
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid <= mark:
+            continue
+        vals = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for n in range(nodes.size()):
+            node = nodes.apply(n)
+            if node.name() != "Generate" or expr not in node.desc():
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                acc = m.accumulatorId()
+                if m.name() == "number of output rows" and vals.contains(acc):
+                    rows = int(vals.apply(acc).replace(",", ""))
+                    if rows:
+                        out[acc] = rows
+    return out
+
+
+def test_near_dup_survivors_shingles_each_document_once(spark):
+    """One ``near_dup_survivors`` call runs the shingle generator once: the
+    distinct shingle table is materialized and feeds both the LSH and the
+    Jaccard verify (unmaterialized, their subtrees ran it 2x here and 12x in
+    a 20k-page recipe run; ReuseExchange did not dedupe them)."""
+    from curator_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    mark = _last_execution(spark)
+    dedup.near_dup_survivors(docs).collect()
+    runs = _generates_with_rows(spark, mark, "explode(sequence(")
+    assert len(runs) == 1, runs
 
 
 def test_quantiles_distinct_keeps_percentile_off_the_distinct_rewrite(spark):
