@@ -13,10 +13,9 @@ Re-expresses the reference's driver-side lifecycle on Spark:
   base_request_processor.py:252-270); each chunk's output is written to a
   staging dir then atomically renamed with a manifest — the parquet stand-in
   for an Iceberg snapshot commit (SURVEY.md §7 "Resume atomicity without
-  Iceberg"). After the write, ONE Spark action aggregates the metrics of
-  every chunk the attempt wrote; each chunk's slice is then a driver write
-  inside the chunk's own staging dir, so the rename is the ONE commit
-  point for its rows and its counters.
+  Iceberg"). The attempt's write is its one Spark job, and the rename is
+  the ONE commit point of a chunk; its counters are a view over the rows
+  it committed, so they need no commit of their own.
 - **Resume**: on rerun, committed chunks are skipped entirely; a partially
   written chunk is invisible (staging never renamed) and recomputed. ALL
   missing chunks run as ONE job (never a scan per chunk), and with
@@ -37,10 +36,10 @@ Re-expresses the reference's driver-side lifecycle on Spark:
   of their chunk, tagged in ``error``; ``failed_rows`` is the (url,
   warc_ts, error) view over them — the failed-requests sink analog
   (base_request_processor.py:459-488).
-- **Metrics + lineage**: per (run, chunk, spark partition) counter rows —
-  docs seen/kept/dropped/failed, per-rule drops and scrubs — in each
-  committed chunk's ``_metrics`` dir, read back by ``metrics_table``
-  (analog of the status trackers, online_status_tracker.py:44-93).
+- **Metrics + lineage**: per (run, chunk, writing task) counters — docs
+  seen/kept/dropped/failed, per-rule drops and scrubs — aggregated by
+  ``metrics_table`` over the committed rows at query time (analog of the
+  status trackers, online_status_tracker.py:44-93).
 - **Run catalog**: one row per run in a ``runs`` table (analog of the SQLite
   metadata DB, db.py:61-137).
 - **Bounded retries**: failed chunks retried up to ``max_attempts`` on top of
@@ -55,7 +54,6 @@ import inspect
 import json
 import os
 import shutil
-import time
 import uuid
 from dataclasses import dataclass
 from datetime import datetime, timezone
@@ -63,7 +61,6 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
 
 from .. import lm as _lm_mod
 from .. import rules as _rules_mod
@@ -187,8 +184,8 @@ def _ensure_chunked_input(
 
 
 def _append_table(root: str, name: str, pdf: pd.DataFrame) -> None:
-    """Append-only driver-side table (a chunk's metrics / runs catalog): one
-    parquet file per append, read back as a directory dataset."""
+    """Append-only driver-side table (the runs catalog): one parquet file
+    per append, read back as a directory dataset."""
     d = os.path.join(root, name)
     os.makedirs(d, exist_ok=True)
     pdf = pdf.copy()
@@ -245,32 +242,6 @@ def _counters() -> dict[str, Column]:
     return counters
 
 
-def _attempt_metrics(
-    spark: SparkSession, staging: str, schema: StructType, run_id: str
-) -> pd.DataFrame:
-    """Per-(chunk, spark partition) counters over one attempt's partitioned
-    staging write: every chunk it wrote, in one aggregate. The read takes
-    the held schema plus the partition column (no inference job), as a new
-    StructType, since ``StructType.add`` would mutate the held schema."""
-    staged = (
-        spark.read.schema(StructType(schema.fields + [StructField("chunk", IntegerType())]))
-        .option("basePath", staging)
-        .parquet(staging)
-    )
-    pdf = (
-        staged.groupBy(
-            F.col("chunk").cast("long").alias("chunk"),
-            F.spark_partition_id().alias("partition_id"),
-        )
-        .agg(*[agg.alias(name) for name, agg in _counters().items()])
-        .toPandas()
-    )
-    # string dtype: as object, a chunk's empty slice went to parquet as type
-    # null and the metrics table read run_id back as an integer
-    pdf.insert(0, "run_id", pd.Series(run_id, index=pdf.index, dtype="string"))
-    return pdf
-
-
 # ---------------------------------------------------------------------------
 # The runner
 # ---------------------------------------------------------------------------
@@ -319,7 +290,7 @@ def run_quality_filter(
     # num_chunks full scans. The missing list is recomputed from committed
     # state at the top of every attempt, so a retry after a partial
     # promotion never re-runs, re-promotes, or double-counts a chunk that
-    # already committed (its metrics committed with it).
+    # already committed (its counters are a view over its rows).
     attempt = 0
     while True:
         missing = [
@@ -330,7 +301,6 @@ def run_quality_filter(
         attempt += 1
         staging = None
         try:
-            t0 = time.monotonic()
             fresh = len(missing) == config.num_chunks
             in_missing = bucket.isin([int(c) for c in missing])
             if config.chunk_input:
@@ -364,30 +334,16 @@ def run_quality_filter(
             if prior is not None:  # carry the prior rows into the same commit
                 done = load_output(spark, prior)
                 out = out.unionByName(done if fresh else done.filter(in_missing))
-            schema = out.schema
             staging = os.path.join(run_dir, f"all.staging-{uuid.uuid4().hex[:8]}")
             out.withColumn("chunk", bucket).write.mode("overwrite").partitionBy(
                 "chunk"
             ).parquet(staging)
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            metrics = _attempt_metrics(spark, staging, schema, run_id)
             for chunk in missing:
                 src_dir = os.path.join(staging, f"chunk={chunk}")
                 cdir = _chunk_dir(run_dir, chunk)
                 if not os.path.isdir(src_dir):  # empty chunk: commit empty dir
                     # write an empty parquet so readers see the schema
-                    spark.createDataFrame([], schema).write.mode("overwrite").parquet(src_dir)
-                # the chunk's metrics slice goes INSIDE its staging dir
-                # (readers of the rows skip ``_``-prefixed dirs), so the
-                # rename below commits rows and counters together and a
-                # chunk that never commits leaves no counters behind
-                _append_table(
-                    src_dir,
-                    "_metrics",
-                    metrics[metrics["chunk"] == chunk].assign(
-                        wall_ms=wall_ms // len(missing), committed_at=datetime.now(timezone.utc)
-                    ),
-                )
+                    spark.createDataFrame([], out.schema).write.mode("overwrite").parquet(src_dir)
                 open(os.path.join(src_dir, "_SUCCESS"), "a").close()
                 if os.path.exists(cdir):
                     shutil.rmtree(cdir)
@@ -452,15 +408,38 @@ def cancel_run(config: RunConfig, prior: RunResult | None = None) -> str:
 
 
 def metrics_table(spark: SparkSession, output_root: str, run_id: str | None = None) -> DataFrame:
-    """The per-(run, chunk, spark partition) metrics rows of every committed
-    chunk of ``run_id`` (all runs when None). A run with no committed chunk
-    reads as an empty frame of the counter columns."""
-    path = os.path.join(output_root, "runs", run_id or "*", "chunk=*", "_metrics")
+    """The per-(run, chunk, spark partition) counters of every committed
+    chunk of ``run_id`` (all runs when None): a view that aggregates
+    ``_counters()`` over the committed rows, so the counters cannot
+    disagree with them, and a lost or re-committed chunk takes or brings
+    its counters along. ``partition_id`` is the Spark task that wrote the
+    row's part file. The trade: a metrics query scans the counter columns
+    of the committed output once (the read names them, so no footer
+    inference job runs), where a per-attempt aggregate job used to leave a
+    few small files to read. A run with no committed chunk reads as an
+    empty frame of the counter columns."""
+    path = os.path.join(output_root, "runs", run_id or "*", "chunk=*")
+    counters = _counters()
     if not glob.glob(path):
-        cols = ["run_id string", "chunk long", "partition_id int"]
-        cols += [f"{c} long" for c in _counters()] + ["wall_ms long", "committed_at timestamp"]
+        cols = ["run_id string", "chunk long", "partition_id int"] + [f"{c} long" for c in counters]
         return spark.createDataFrame([], ", ".join(cols))
-    return spark.read.parquet(path)
+    read = ["keep boolean", "drop_rules array<string>", "error string"]
+    read += [f"scrub_{s} int" for s in _SCRUB_RULES]
+    file_path = F.col("_metadata.file_path")
+
+    def part(i: int) -> Column:
+        return F.regexp_extract(file_path, r".*/runs/([^/]+)/chunk=(\d+)/part-(\d+)-", i)
+
+    return (
+        spark.read.schema(", ".join(read))
+        .parquet(path)
+        .groupBy(
+            part(1).alias("run_id"),
+            part(2).cast("long").alias("chunk"),
+            part(3).cast("int").alias("partition_id"),
+        )
+        .agg(*[agg.alias(name) for name, agg in counters.items()])
+    )
 
 
 def metrics_summary(spark: SparkSession, output_root: str, run_id: str | None = None) -> DataFrame:

@@ -156,29 +156,33 @@ def test_resume_prunes_input_scan(spark, pages_path, tmp_path, monkeypatch):
 
 def test_retry_commits_metrics_exactly_once(spark, pages_path, tmp_path, monkeypatch):
     """A retry after partial promotion must not re-promote or double-count
-    committed chunks: exactly one metrics row per chunk, exact totals."""
-    calls = {"n": 0}
-    real = R._append_table
+    committed chunks: every chunk commits once, and the counters over the
+    committed rows add up to the input exactly."""
+    real_rename = os.rename
+    attempted, committed = [], []
 
-    def flaky(root, name, pdf):
-        if name == "_metrics":
-            calls["n"] += 1
-            if calls["n"] == 2:  # fail while committing the 2nd chunk
-                raise RuntimeError("injected metrics failure")
-        return real(root, name, pdf)
+    def fail_second_promotion(src, dst):
+        name = os.path.basename(dst)
+        if name.startswith("chunk="):
+            attempted.append(name)
+            if len(attempted) == 2:  # fail while committing the 2nd chunk
+                raise OSError("injected promotion failure")
+        real_rename(src, dst)
+        if name.startswith("chunk="):
+            committed.append(int(name.split("=")[1]))
 
-    monkeypatch.setattr(R, "_append_table", flaky)
+    monkeypatch.setattr(R.os, "rename", fail_second_promotion)
     cfg = _config(pages_path, tmp_path / "outr")
     res = R.run_quality_filter(spark, cfg)
-    assert res.chunks_run == 4
+    assert res.chunks_run == 4 and len(attempted) == 5
+    assert sorted(committed) == [0, 1, 2, 3]
     metrics = R.metrics_table(spark, cfg.output_root, res.run_id).toPandas()
-    assert len(metrics) == 4
-    assert sorted(metrics["chunk"]) == [0, 1, 2, 3]
+    assert sorted(metrics["chunk"].unique()) == [0, 1, 2, 3]
     assert metrics["docs_seen"].sum() == 500
 
 
 def test_failed_run_leaves_no_phantom_metrics(spark, pages_path, tmp_path, monkeypatch):
-    """Metrics commit inside the chunk rename; when a run fails terminally
+    """Metrics are a view over committed chunks; when a run fails terminally
     no chunk committed, so the run has no metrics, a FAILED event, and no
     staging left behind."""
     import pytest as _pytest
@@ -205,8 +209,9 @@ def test_failed_run_leaves_no_phantom_metrics(spark, pages_path, tmp_path, monke
 @pytest.mark.parametrize("with_failed_row", [False, True])
 def test_lost_chunk_takes_its_counters_with_it(spark, pages_pdf, tmp_path, with_failed_row):
     """A committed chunk that is lost (the run's kill-and-resume shape:
-    chunk dir and manifest removed) takes its metrics and its failed rows
-    with it; the resume brings each back exactly once."""
+    chunk dir and manifest removed) takes its counters and its failed rows
+    with it, since both are views over the committed rows; the resume
+    brings each back exactly once."""
     import shutil
 
     import pandas as pd
@@ -328,33 +333,50 @@ def test_metrics_and_catalog(spark, pages_path, tmp_path, golden):
 
 
 def test_chunk_metrics_count_committed_rows(spark, pages_path, tmp_path):
-    """Each chunk's metrics rows count exactly that chunk's committed rows,
-    after a fresh run and after a resume of two chunks, and the table reads
-    back as one table with an int64 chunk."""
+    """Every counter of each chunk equals ``_counters()`` over that chunk's
+    committed rows, after a fresh run and after a resume of two chunks; the
+    table reads back with an int64 chunk, and its ``partition_id`` names
+    the chunk's non-empty part files."""
+    import glob
     import shutil
 
+    import pyarrow.parquet as pq
     from pyspark.sql.types import LongType
 
     cfg = _config(pages_path, tmp_path / "outm", repartition_to=4, chunk_input=True)
     run_dir = os.path.join(cfg.output_root, "runs", R.run_fingerprint(cfg))
 
-    def check():
+    def check(res):
         metrics = R.metrics_table(spark, cfg.output_root)
         assert metrics.schema["chunk"].dataType == LongType()
-        seen = metrics.toPandas().groupby("chunk")["docs_seen"].sum().to_dict()
-        committed = {
-            c: spark.read.parquet(R._chunk_dir(run_dir, c)).count() for c in range(4)
+        got = metrics.toPandas()
+        counters = R._counters()
+        per_chunk = got.groupby("chunk")[list(counters)].sum().sort_index()
+        want = (
+            R.load_output(spark, res)
+            .groupBy(R._chunk_bucket(cfg).cast("long").alias("chunk"))
+            .agg(*[agg.alias(name) for name, agg in counters.items()])
+            .toPandas()
+            .set_index("chunk")
+            .sort_index()[list(counters)]
+        )
+        assert per_chunk.to_dict() == want.to_dict()
+        assert list(want.index) == [0, 1, 2, 3] and want["docs_seen"].sum() == 500
+        parts = {
+            (c, int(os.path.basename(f).split("-")[1]))
+            for c in range(4)
+            for f in glob.glob(os.path.join(R._chunk_dir(run_dir, c), "part-*.parquet"))
+            if pq.ParquetFile(f).metadata.num_rows
         }
-        assert seen == committed and sum(committed.values()) == 500
+        assert set(zip(got["chunk"], got["partition_id"])) == parts
 
-    R.run_quality_filter(spark, cfg)
-    check()
+    check(R.run_quality_filter(spark, cfg))
     os.remove(os.path.join(run_dir, "manifest.json"))
     shutil.rmtree(R._chunk_dir(run_dir, 1))
     shutil.rmtree(R._chunk_dir(run_dir, 3))
     res = R.run_quality_filter(spark, cfg)
     assert res.chunks_run == 2 and res.chunks_skipped == 2
-    check()
+    check(res)
 
 
 @pytest.mark.parametrize("prior_chunks", [3, 5])
@@ -609,9 +631,12 @@ def test_chunk_input_spreads_hot_host_and_keeps_output(spark, host_clustered, tm
 
 
 def test_clean_chunk_commits_with_one_sql_execution(spark, pages_path, tmp_path, monkeypatch):
-    """ONE metrics aggregate per attempt covers every chunk, and a clean
-    chunk's commit runs no Spark action: no schema-inference read, no
-    per-chunk write job."""
+    """An attempt's one write is its only SQL execution besides a fresh
+    run's layout pass: no metrics aggregate, and a clean chunk's commit
+    runs no Spark action (no schema-inference read, no per-chunk write
+    job). A resume of one chunk runs the write alone."""
+    import shutil
+
     jss = spark._jsparkSession
 
     def last_execution() -> int:
@@ -630,16 +655,25 @@ def test_clean_chunk_commits_with_one_sql_execution(spark, pages_path, tmp_path,
     cfg = _config(pages_path, tmp_path / "out1", repartition_to=4, chunk_input=True)
     start = last_execution()
     monkeypatch.setattr(R.os, "rename", mark_promotion)
+    res = R.run_quality_filter(spark, cfg)
+    # layout pass, filter write, then nothing per chunk
+    assert [m - start for m in marks] == [2, 2, 2, 2]
+
+    os.remove(os.path.join(res.run_dir, "manifest.json"))
+    shutil.rmtree(R._chunk_dir(res.run_dir, 2))
+    marks.clear()
+    start = last_execution()
     R.run_quality_filter(spark, cfg)
-    # layout pass, filter write, one metrics aggregate, then nothing per chunk
-    assert [m - start for m in marks] == [3, 3, 3, 3]
+    # the staged input is committed: the filter write alone
+    assert [m - start for m in marks] == [1]
 
 
 def test_empty_chunk_metrics_keep_string_run_id(spark, pages_pdf, tmp_path):
-    """A chunk with no rows still writes its metrics slice with a string
-    ``run_id``: an empty slice's object column once went to parquet as
-    type null, the metrics table then read ``run_id`` as an integer, and
-    ``metrics_summary`` failed to cast the run id."""
+    """A run whose chunks are mostly empty still reads its metrics with a
+    string ``run_id``: when each chunk wrote a metrics slice, an empty
+    slice's object column once went to parquet as type null, the metrics
+    table then read ``run_id`` as an integer, and ``metrics_summary``
+    failed to cast the run id."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
